@@ -1,6 +1,9 @@
-"""Entity canonicalization via distributed connected components (SURVEY.md
-C5; north_rule: "canonicalize entities via iterative connected-components
-over salted hash joins").
+"""Distributed connected components (SURVEY.md C5). Callers: owl:sameAs
+closure (plans/inference.py), near-duplicate clustering
+(operators/dedup.py) and the `connected_components` oracle. Entity
+canonicalization does not need it: its surface -> normal-form graph is a
+star forest, which plans/pipeline.py::canonicalize_stage labels with one
+window.
 
 Algorithm: alternating large-star / small-star (Kiveris et al., "Connected
 Components in MapReduce and Beyond", SoCC'14 — public literature). Each
@@ -22,6 +25,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# upper bound on star-contraction rounds; the loop exits as soon as the
+# edge set stops changing
+_MAX_ROUNDS = 50
 
 
 def _canonical_edges(edges: DataFrame) -> DataFrame:
@@ -103,10 +110,7 @@ def _driver_cc(spark, edge_rows, node_rows, node_type) -> DataFrame:
 
 
 def connected_components(
-    edges: DataFrame,
-    max_iter: int = 50,
-    checkpoint: bool = True,
-    small_graph_threshold: int = 100_000,
+    edges: DataFrame, small_graph_threshold: int = 100_000
 ) -> DataFrame:
     """Returns DataFrame[node, component] where component = min node id of
     the node's connected component. `edges` needs columns (src, dst).
@@ -130,9 +134,7 @@ def connected_components(
         ).collect()[0]
         return (row.n, row.h if row.h is not None else 0)
 
-    cur = _canonical_edges(edges)
-    if checkpoint:
-        cur = cur.localCheckpoint()
+    cur = _canonical_edges(edges).localCheckpoint()
     prev_sig = _checksum(cur)
 
     if small_graph_threshold and prev_sig[0] <= small_graph_threshold:
@@ -147,13 +149,11 @@ def connected_components(
             [(r.node,) for r in node_df.collect()],
             edges.schema["src"].dataType,
         )
-    for _ in range(max_iter):
+    for _ in range(_MAX_ROUNDS):
         nxt = _small_star(_large_star(cur))
         nxt = nxt.select(
             F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
-        ).distinct()
-        if checkpoint:
-            nxt = nxt.localCheckpoint()
+        ).distinct().localCheckpoint()
         sig = _checksum(nxt)
         cur = nxt
         if sig == prev_sig:

@@ -35,6 +35,19 @@ def _ship_package(spark: SparkSession) -> None:
     spark.sparkContext.addPyFile(zip_path)
 
 
+def _default_driver_mem() -> str:
+    """Half the host's RAM, capped at 48g. In local mode the driver JVM is
+    the whole engine, and a heap sized past the host lets it grow until
+    the kernel OOM-kills it mid-run instead of spilling or failing one
+    task. SPARK_DRIVER_MEM overrides this."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "48g"
+    return f"{min(kb // 2048, 48 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "cmem_plugin_pyshacl_spark",
     master: str | None = None,
@@ -67,7 +80,10 @@ def get_spark(
         # worker ramp-up at high parallelism
         .config("spark.python.worker.reuse", "true")
         .config("spark.python.factory.idleWorkerMaxPoolSize", "128")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

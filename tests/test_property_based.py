@@ -1,10 +1,11 @@
 """Property-based tests (hypothesis): path-algebra invariants, term-key
-injectivity, and randomized count-constraint validation against a pure
-python reference evaluator."""
+injectivity, randomized count-constraint validation against a pure
+python reference evaluator, and entity canonicalization against
+connected components."""
 
 from __future__ import annotations
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from cmem_plugin_pyshacl_spark.data_model import (
     EX,
@@ -883,3 +884,53 @@ def test_order_patterns_invariants(pats, outer):
             )
         remaining.remove(chosen)
         bound |= tvars(chosen)
+
+
+# ------------------------------- canonicalization vs connected components
+_STEMS = ["acme", "globex labs", "initech"]
+_SUFFIXES = ["", " Inc.", " inc", " GmbH", " GMBH."]
+
+
+@st.composite
+def _surface_variant(draw):
+    words = draw(st.sampled_from(_STEMS)).split(" ")
+    case = draw(st.sampled_from([str.lower, str.upper, str.title]))
+    words = [case(w) for w in words]
+    punct = draw(st.sampled_from(["", ",", ".", "!", "-"]))
+    sep = draw(st.sampled_from([" ", "  ", "\t"]))
+    core = (punct + sep).join(words) if len(words) > 1 else words[0] + punct
+    pad = draw(st.sampled_from(["", " "]))
+    return pad + core + draw(st.sampled_from(_SUFFIXES)) + pad
+
+
+@given(st.lists(_surface_variant(), min_size=1, max_size=8, unique=True))
+@example(["norm:acme", "Acme Inc.", "acme"])
+@settings(max_examples=6, deadline=None)
+def test_canonicalize_stage_equals_hub_edge_cc(spark, surfaces):
+    """canonicalize_stage (one window over the normal form) equals the
+    connected components of the surface -> normal-form star forest, with
+    node ids namespaced so a hub can never equal a raw surface: every
+    surface is kept, and maps to the min surface of its component."""
+    from pyspark.sql import functions as F
+
+    from cmem_plugin_pyshacl_spark.plans.connected_components import (
+        connected_components,
+    )
+    from cmem_plugin_pyshacl_spark.plans.linking import normalize_surface
+    from cmem_plugin_pyshacl_spark.plans.pipeline import canonicalize_stage
+
+    pairs = list(zip(surfaces, surfaces[1:] + surfaces[:1]))
+    rel = spark.createDataFrame(pairs, "subj_surface string, obj_surface string")
+    got = {r.surface: r.canonical for r in canonicalize_stage(rel).collect()}
+
+    nodes = spark.createDataFrame([(x,) for x in surfaces], "surface string")
+    edges = nodes.select(
+        F.concat(F.lit("s:"), "surface").alias("src"),
+        F.concat(F.lit("n:"), normalize_surface(F.col("surface"))).alias("dst"),
+    )
+    members: dict[str, list[str]] = {}
+    for r in connected_components(edges).collect():
+        if r.node.startswith("s:"):
+            members.setdefault(r.component, []).append(r.node[2:])
+    expected = {x: min(grp) for grp in members.values() for x in grp}
+    assert got == expected
