@@ -18,6 +18,8 @@ Set semantics of rdflib.Graph (duplicate add is a no-op) are restored with
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -125,29 +127,65 @@ def triples_from_rows(spark, rows, graph: str | None = None) -> DataFrame:
     return spark.createDataFrame(full, schema=TRIPLES_SCHEMA)
 
 
-def df_is_small(df: DataFrame, limit: int = 2_000_000) -> bool:
-    """Bounded-count probe for broadcast gating: an explicit F.broadcast()
-    hint is honored by Spark regardless of size (AQE never demotes user
-    hints), so callers must MEASURE before hinting. limit(n+1).count()
-    stops early once n+1 rows exist; the verdict is memoized on the
-    DataFrame object so repeated gates on the same frame cost one job."""
-    cached = getattr(df, "_gb_small", None)
-    if cached is not None:
-        return bool(cached)
+# ------------------------------------------------------- broadcast gating
+_BROADCAST_GATE_BYTES = 256 << 20
+# row bound of the probe: LIMIT n+1 stops after ~1 partition on a big frame
+_BROADCAST_GATE_ROWS = 1_000_000
+# estimates at or above this carry no information (see is_small)
+_EST_SATURATED = 1 << 50  # ~1 PiB
+_PROBED: weakref.WeakKeyDictionary[DataFrame, bool] = weakref.WeakKeyDictionary()
+
+
+def _plan_size_bytes(df: DataFrame) -> int | None:
     try:
-        small = df.limit(limit + 1).count() <= limit
-    except Exception:  # pragma: no cover - probe failure → conservative
-        small = False
-    try:
-        df._gb_small = small  # type: ignore[attr-defined]
-    except Exception:  # pragma: no cover
-        pass
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:  # pragma: no cover - connect mode / stats failure
+        return None
+
+
+def is_small(df: DataFrame) -> bool:
+    """The one broadcast gate: True when `df` may carry a broadcast hint.
+
+    Spark honors an explicit F.broadcast() hint REGARDLESS of size (AQE
+    demotes only its own conversions, never user hints), so a hint on a
+    frame that grows with the data (a billion-node targetClass focus set,
+    an open-pattern surface vocabulary) would hard-fail past the 8 GB
+    broadcast limit. A frame this gate calls large is left unhinted, and
+    AQE picks the join at runtime from real shuffle stats
+    (autoBroadcastJoinThreshold, session.py).
+
+    1. An informative Catalyst estimate (optimized-plan sizeInBytes below
+       _EST_SATURATED) decides alone, with no job: small iff <= 256 MB.
+       Without CBO table stats, size-only propagation never shrinks a
+       Filter below its child and grows joins multiplicatively, so a small
+       estimate is a trustworthy upper bound. Parquet scans read their
+       file sizes, and a persisted frame that has been built reports its
+       cache's real size to every plan made over it (validate() builds
+       its predicate slice before planning focus frames for this reason).
+    2. An uninformative estimate runs ONE bounded probe,
+       limit(ROWS+1).count() <= ROWS, memoized per frame object. Estimates
+       saturate toward Long.MaxValue on derived plans (unions of
+       concat-projections; the sameAs membership frames out of
+       connected_components) and RDD-backed frames report
+       spark.sql.defaultSizeInBytes. An estimate-only gate there silently
+       unhinted every join of derived graphs (~25% slower shacl_full,
+       BENCH.md round 4)."""
+    est = _plan_size_bytes(df)
+    if est is not None and est < _EST_SATURATED:
+        return est <= _BROADCAST_GATE_BYTES
+    small = _PROBED.get(df)
+    if small is None:
+        try:
+            small = df.limit(_BROADCAST_GATE_ROWS + 1).count() <= _BROADCAST_GATE_ROWS
+        except Exception:  # pragma: no cover - probe failure → conservative
+            small = False
+        _PROBED[df] = small
     return small
 
 
 def maybe_broadcast(df: DataFrame, small: bool) -> DataFrame:
-    """Apply the broadcast hint only when the gate measured the frame small;
-    otherwise leave the join unhinted for AQE to pick the strategy."""
+    """Apply the broadcast hint only when is_small() allowed it; otherwise
+    leave the join unhinted for AQE to pick the strategy."""
     return F.broadcast(df) if small else df
 
 

@@ -27,7 +27,7 @@ from ..data_model import (
     ENTITY_COLUMNS,
     KIND_LITERAL,
     XSD_STRING,
-    df_is_small,
+    is_small,
     maybe_broadcast,
 )
 from .labels import labels_table
@@ -53,7 +53,7 @@ def make_entities(
         # full-graph label tables are never force-broadcast (round-2
         # ADVICE): restrict each to the report's distinct nodes first and
         # hint only the restricted table, gated once on the report size
-        small = df_is_small(results)
+        small = is_small(results)
 
         def lab(col: str, labels: DataFrame, out: str) -> None:
             nonlocal df

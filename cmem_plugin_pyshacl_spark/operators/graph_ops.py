@@ -29,7 +29,7 @@ from ..data_model import (
     XSD_BOOLEAN,
     XSD_DATETIME,
     XSD_STRING,
-    df_is_small,
+    is_small,
     maybe_broadcast,
     nt_term,
     to_nquads,
@@ -147,8 +147,8 @@ def add_report_labels(
 
         # label copying broadcasts the small DISTINCT-NODE side into the
         # (potentially full-graph-sized) label table, not the reverse
-        # (round-2 ADVICE); gate measured once on the report rows
-        _small_report = df_is_small(results)
+        # (round-2 ADVICE); gated once on the report rows
+        _small_report = is_small(results)
 
         def _copied(nodes: DataFrame, col: str, labels: DataFrame) -> DataFrame:
             lab = labels.withColumnRenamed("s", col)

@@ -32,7 +32,7 @@ from ..data_model import (
     SKOS_PREFLABEL,
     SKOSXL_LITERALFORM,
     SKOSXL_PREFLABEL,
-    df_is_small,
+    is_small,
     maybe_broadcast,
 )
 
@@ -93,7 +93,7 @@ def with_labels(
     lab = labels_table(triples, language).withColumnRenamed("s", node_col).withColumnRenamed(
         "label", out_col
     )
-    small = df_is_small(df)
+    small = is_small(df)
     nodes = df.select(node_col).distinct()
     lab = lab.join(maybe_broadcast(nodes, small), on=node_col, how="left_semi")
     return df.join(maybe_broadcast(lab, small), on=node_col, how="left")

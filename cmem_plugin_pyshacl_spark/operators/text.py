@@ -167,7 +167,7 @@ def cap_per_domain(
       1. per-domain counts (one partial+final agg — small shuffle of keys),
       2. domains at/under the cap — the vast majority — PASS THROUGH with
          no window at all (anti join against the oversized-domain list,
-         broadcast when measured small),
+         broadcast when the is_small gate allows),
       3. only oversized domains are windowed, and in two salted stages:
          stage 1 keeps the per-(domain, salt) lowest `max_docs` rows, so
          stage 2's per-domain input is bounded by n_salt * max_docs rows
@@ -176,7 +176,7 @@ def cap_per_domain(
     `order_col` is unique per domain (doc_id is)."""
     from pyspark.sql.window import Window
 
-    from ..data_model import df_is_small, maybe_broadcast
+    from ..data_model import is_small, maybe_broadcast
 
     with_dom = documents.withColumn("_domain", url_domain(F.col(url_col)))
     over = (
@@ -186,7 +186,7 @@ def cap_per_domain(
         .select("_domain")
     )
     # |over| <= |corpus| / max_docs by construction — usually tiny
-    over_hinted = maybe_broadcast(over, df_is_small(over))
+    over_hinted = maybe_broadcast(over, is_small(over))
     under = with_dom.join(over_hinted, on="_domain", how="left_anti")
     overflow = with_dom.join(over_hinted, on="_domain", how="left_semi")
 
@@ -260,19 +260,19 @@ def decontaminate(
 
     Scale posture: the benchmark side (eval suites — thousands of
     documents, not billions) reduces to DISTINCT gram hashes and is
-    broadcast only when measured small (df_is_small gate, never a blind
+    broadcast only when the is_small gate allows (never a blind
     hint); the corpus side explodes to (doc, gram) pairs, LEFT SEMI joins
     the benchmark grams, and aggregates hit counts partial+final. The
     corpus is never collected and never self-joined; normalization and
     hashing are pure Column expressions (no UDFs)."""
-    from ..data_model import df_is_small, maybe_broadcast
+    from ..data_model import is_small, maybe_broadcast
 
     bench_grams = (
         benchmark.select(
             F.explode(_word_ngram_hashes(benchmark_text_col, n)).alias("_gh")
         ).distinct()
     )
-    bench_grams = maybe_broadcast(bench_grams, df_is_small(bench_grams))
+    bench_grams = maybe_broadcast(bench_grams, is_small(bench_grams))
     doc_grams = documents.select(
         F.col(id_col),
         F.explode(_word_ngram_hashes(text_col, n)).alias("_gh"),

@@ -291,10 +291,10 @@ def _apply_same_as(base: DataFrame, members: DataFrame) -> DataFrame:
     nodes (at that point `same_as_canonicalize` is the scale path). The
     membership/pair frames derive from the CC output (bounded by the
     sameAs edge count, tiny next to the triple table) and are broadcast
-    only when measured small."""
+    only when the is_small gate allows."""
     import logging
 
-    from ..data_model import df_is_small, maybe_broadcast
+    from ..data_model import is_small, maybe_broadcast
 
     biggest = (
         members.groupBy("component").count().agg(F.max("count")).collect()[0][0]
@@ -316,7 +316,7 @@ def _apply_same_as(base: DataFrame, members: DataFrame) -> DataFrame:
         .filter(F.col("_n1") != F.col("_n2"))
         .select("_c", "_n1", "_n2")
     )
-    small = df_is_small(pairs)
+    small = is_small(pairs)
     pairs_b = maybe_broadcast(pairs, small)
 
     # eq-rep-s: replicate every triple of _n1 onto _n2
@@ -393,12 +393,12 @@ def same_as_canonicalize(data: DataFrame) -> DataFrame:
     equivalent for value-local constraints. Two left joins against the
     (small, size-gated) membership table — the triple table shuffles on
     its own keys only when the membership side is too big to broadcast."""
-    from ..data_model import df_is_small, maybe_broadcast
+    from ..data_model import is_small, maybe_broadcast
 
     members = _same_as_members(data)
     if members is None:
         return data
-    small = df_is_small(members)
+    small = is_small(members)
     ms = maybe_broadcast(
         members.select(F.col("node").alias("_sn"), F.col("component").alias("_sc")),
         small,

@@ -72,6 +72,7 @@ from ..data_model import (
     XSD_DOUBLE,
     XSD_INTEGER,
     XSD_STRING,
+    is_small,
     maybe_broadcast,
 )
 
@@ -100,67 +101,6 @@ def _warn_closure_truncated(where: str, max_iters: int) -> None:
         where,
         max_iters,
     )
-
-
-# ------------------------------------------------------- broadcast gating
-# An explicit F.broadcast() hint is honored by Spark REGARDLESS of size (AQE
-# demotes only its own conversions, never user hints) — so the S5 / batch /
-# closed-shape "focus is the build side" plans, correct for the common
-# small-focus case, would hard-fail past the 8 GB / 512M-row broadcast limit
-# on a billion-node targetClass (round-2 VERDICT finding 1). Every hint on a
-# focus-derived frame is therefore GATED on Catalyst's optimized-plan
-# sizeInBytes — a FREE (no job) estimate. Without CBO table stats Spark's
-# size-only propagation never shrinks a Filter below its child and grows
-# joins multiplicatively, so a small estimate is a trustworthy upper bound:
-# parquet-backed scans read their file sizes (a 100-TB scan reads huge) and
-# only provably-small relations keep the hint. Anything estimated large is
-# left UNHINTED: AQE converts to broadcast at runtime from real shuffle
-# stats when the frame turns out small, and the 100-TB plan is a co-located
-# join on `s`-bucketed storage. One exception, added by the round-4 drift
-# bisect (BENCH.md): estimates SATURATE to Long.MaxValue on derived plans
-# (unions of concat-projections), carrying no information — validate()
-# then rescues the verdict with ONE row-bounded count of its persisted
-# predicate slice (cache-warming work evaluation repeats anyway), because
-# the estimate-only gate had silently unhinted every join and cost ~25%
-# on shacl_full vs the round-2 count-gated plans.
-_BROADCAST_GATE_BYTES = 256 << 20
-# row bound for the persisted-slice count fallback (tier 3 below): a LIMIT
-# this size short-circuits after ~1 partition on a genuinely big relation
-_BROADCAST_GATE_ROWS = 1_000_000
-# size-only propagation saturates toward Long.MaxValue on derived plans
-# (unions of concat-projections multiply unknowns); estimates in this band
-# carry no information, unlike honest file-size-backed large estimates
-_EST_SATURATED = 1 << 50  # ~1 PiB
-
-
-_ASSUME_SMALL_FOCUS: contextvars.ContextVar[bool] = contextvars.ContextVar(
-    "shacl_assume_small_focus", default=False
-)
-
-
-def _plan_size_bytes(df: DataFrame) -> int | None:
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # pragma: no cover - connect mode / stats failure
-        return None
-
-
-def _is_small(df: DataFrame) -> bool:
-    """True when `df` is estimated (or globally assumed) under the broadcast
-    gate. Purely stats-based — never runs a job. Memoized per DataFrame
-    object."""
-    if _ASSUME_SMALL_FOCUS.get():
-        return True
-    cached = getattr(df, "_shacl_small", None)
-    if cached is not None:
-        return bool(cached)
-    est = _plan_size_bytes(df)
-    small = est is not None and est <= _BROADCAST_GATE_BYTES
-    try:
-        df._shacl_small = small  # type: ignore[attr-defined]
-    except Exception:  # pragma: no cover
-        pass
-    return small
 
 
 # lexical-space regexes for the datatypes that appear in fixtures; SHACL
@@ -846,7 +786,7 @@ def _closure_values(
         F.col("part_id").alias("v_part_id"),
     )
     seeds = focus.select("focus")
-    small_focus = _is_small(focus)
+    small_focus = is_small(focus)
     self_rows = seeds.select(
         "focus",
         F.lit(KIND_IRI).alias("v_kind"),
@@ -1345,10 +1285,10 @@ def evaluate_constraint(
         # full-shuffle SortMergeJoin of the triples table. Broadcast-right
         # INNER is a supported shape; zero-valued focus nodes are recovered
         # with a separate anti join only where minCount / hasValue need
-        # them. The hint is size-GATED (_is_small): a billion-node focus
+        # them. The hint is size-GATED (is_small): a billion-node focus
         # set leaves the join unhinted — AQE picks the runtime strategy and
         # the scale plan is a co-located join on `s`-bucketed storage.
-        small_focus = _is_small(focus)
+        small_focus = is_small(focus)
         f = focus.withColumnRenamed("part_id", "f_part_id")
         present = (
             path_triples.join(maybe_broadcast(f, small_focus), on="focus")
@@ -1363,7 +1303,7 @@ def evaluate_constraint(
         ≤|focus|-sized present keys); keeps the focus part_id. The hint
         follows the focus gate — present's keys are bounded by |focus|."""
         return focus.join(
-            maybe_broadcast(present.select("focus"), _is_small(focus)),
+            maybe_broadcast(present.select("focus"), is_small(focus)),
             on="focus", how="left_anti",
         )
 
@@ -1609,7 +1549,7 @@ def evaluate_constraint(
         else:
             matched = present.filter(F.col("v_value") == c.has_value).select("focus")
         results.append(
-            focus.join(maybe_broadcast(matched, _is_small(focus)), on="focus", how="left_anti")
+            focus.join(maybe_broadcast(matched, is_small(focus)), on="focus", how="left_anti")
             .select(
                 *_result_row(
                     F.col("focus"), c.path, F.lit(None).cast("string"),
@@ -2058,7 +1998,7 @@ def _evaluate_simple_batch(
     ct = F.broadcast(spark.createDataFrame(ct_rows, schema=ct_schema))
     paths = sorted({c.path for c in constraints})
 
-    small_focus = _is_small(focus)
+    small_focus = is_small(focus)
     f = focus.withColumnRenamed("part_id", "f_part_id")
     vals = (
         data.filter(F.col("p").isin(paths))
@@ -2479,7 +2419,7 @@ def _evaluate_shape(
                 F.col("o_datatype").alias("v_datatype"),
                 F.col("part_id"),
             )
-            .join(maybe_broadcast(focus.select("focus"), _is_small(focus)), on="focus")
+            .join(maybe_broadcast(focus.select("focus"), is_small(focus)), on="focus")
             .filter(~F.col("p").isin(allowed))
         )
         out.append(
@@ -2623,7 +2563,6 @@ def validate(
     advanced: bool = False,
     js: bool = False,
     max_validation_depth: int = 15,
-    single_scan: bool = True,
     closure_max_iters: int | None = None,
     iterate_rules: bool = False,
     focus_subset: DataFrame | None = None,
@@ -2631,6 +2570,13 @@ def validate(
     """The engine's equivalent of the reference's pyshacl.validate call-site
     (plugin_pyshacl.py:631-641). Returns the validation-results DataFrame
     (RESULT_SCHEMA); derive the global flag with ``conforms(results)``.
+
+    Evaluation is single-scan: the data relation is sliced to the
+    predicates the shape catalog can touch and that slice is persisted, so
+    a 50-property catalog reads the triples table once instead of once per
+    constraint (round-1 VERDICT finding 3). A sh:closed shape or a negated
+    property set needs the full relation; a single constraint or data the
+    caller already cached gains nothing from it. Those skip the slice.
 
     Parameter parity with the reference's plumbing (:218-305):
       * inference: 'none'|'rdfs' — rdfs runs the subclass/propagation subset
@@ -2661,11 +2607,6 @@ def validate(
         (plans/incremental.py): correctness-preserving because SHACL
         results are per-focus-node; narrowing focus never changes the
         verdict of the nodes that remain.
-      * single_scan: pre-slice the data relation to the predicates the
-        shape catalog can touch and persist that slice, so a 50-property
-        catalog evaluates against ONE scan of the triples table instead of
-        one scan per constraint (round-1 VERDICT finding 3). Disabled
-        automatically when a sh:closed shape needs the full relation.
     """
     if js:
         raise ValueError("SHACL-JS is outside the supported core scope")
@@ -2682,7 +2623,7 @@ def validate(
             _CLOSURE_MAX_ITERS.set(closure_max_iters)
             return validate(
                 spark, data_triples, shapes_triples, ont_triples, inference,
-                meta_shacl, advanced, js, max_validation_depth, single_scan,
+                meta_shacl, advanced, js, max_validation_depth,
                 closure_max_iters=None, iterate_rules=iterate_rules,
                 focus_subset=focus_subset,
             )
@@ -2831,7 +2772,7 @@ def validate(
     # feeds every constraint; each per-constraint `p == X` filter then
     # slices the in-memory relation instead of rescanning storage.
     eval_data = data_triples
-    preds = _constraint_predicates(compiled) if single_scan else None
+    preds = _constraint_predicates(compiled)
     if sparql_unsliceable:
         preds = None  # full scan: a !(...) hop can touch any predicate
     elif preds is not None and sparql_preds:
@@ -2847,138 +2788,99 @@ def validate(
     slice_df: DataFrame | None = None
     if preds is not None and n_constraints > 1 and not already_cached:
         eval_data = data_triples.filter(F.col("p").isin(sorted(preds)))
-        eval_data.persist()
+        # build the cache before any focus frame is planned: a plan over a
+        # built cache estimates from its real size, so the broadcast gate
+        # (is_small) decides every focus frame without a job
+        eval_data.persist().count()
         slice_df = eval_data
 
-    # Broadcast gate (round-2 VERDICT finding 1): the free Catalyst size
-    # estimate first — no job, no extra pass over the derive pipeline. The
-    # round-4 drift bisect (BENCH.md) showed the estimate is UNINFORMATIVE
-    # for derived graphs: size-only propagation through unions of
-    # concat-projections saturates to Long.MaxValue, so an estimate-only
-    # gate silently turned every hint off and shacl_full regressed ~25%
-    # vs the round-2 count-gated plans (interleaved A/B: r2 best 4.1-4.7 s,
-    # estimate-only best 5.4-5.8 s, count-gated cdd9f1f best 4.55 s).
-    # Tiers:
-    #   1. finite estimate ≤ gate → small (parquet-backed scans read real
-    #      file sizes, so this is trustworthy);
-    #   2. finite estimate > gate but below the saturation band → big
-    #      (a 100-TB scan honestly reads huge) — NO count, no hint; AQE
-    #      converts at runtime if the frame turns out small;
-    #   3. saturated estimate (≥ _EST_SATURATED: overflow/no information)
-    #      AND the slice is persisted → ONE row-bounded count; it warms
-    #      the cache evaluation reads anyway (the +2-2.5 s measured for
-    #      count fallbacks applied to UN-persisted single-constraint
-    #      validates, where the count re-executed the derive pipeline —
-    #      that path stays estimate-only/unhinted).
-    # The flag is scoped to plan construction (hints are applied at build
-    # time) and reset on exit so it cannot leak into later calls.
-    est = _plan_size_bytes(eval_data)
-    data_under_gate = est is not None and est <= _BROADCAST_GATE_BYTES
-    if (
-        not data_under_gate
-        and slice_df is not None
-        and (est is None or est >= _EST_SATURATED)
-    ):
-        # FULL count, not LIMIT-bounded: CollectLimit iterates partitions
-        # partially, and partially-iterated partitions are NOT cached — a
-        # bounded count would serialize an extra derive execution and warm
-        # nothing (A/B-measured worse). The full count materializes every
-        # partition of the persisted slice exactly once; evaluation reads
-        # the cache. At 100-TB scale this fronts the scan the first
-        # evaluation job would otherwise perform — same total work.
-        n = eval_data.count()
-        data_under_gate = n <= _BROADCAST_GATE_ROWS
-    _assume_token = _ASSUME_SMALL_FOCUS.set(data_under_gate)
-    try:
-        result_dfs: list[DataFrame] = []
-        af_select_dfs: list[DataFrame] = []
-        for shape in compiled.shapes:
-            if shape.deactivated:
-                continue
-            focus = _focus_nodes(spark, eval_data, shape, closure)
-            t_sels = starget_map.get(shape.shape_id, [])
-            if t_sels:
-                from .sparql_af import evaluate_target_select
+    result_dfs: list[DataFrame] = []
+    af_select_dfs: list[DataFrame] = []
+    for shape in compiled.shapes:
+        if shape.deactivated:
+            continue
+        focus = _focus_nodes(spark, eval_data, shape, closure)
+        t_sels = starget_map.get(shape.shape_id, [])
+        if t_sels:
+            from .sparql_af import evaluate_target_select
 
-                tfocus = evaluate_target_select(spark, eval_data, t_sels[0])
-                for sel in t_sels[1:]:
-                    tfocus = tfocus.unionByName(
-                        evaluate_target_select(spark, eval_data, sel)
-                    )
-                # lineage: a target-selected focus node reports into the
-                # min partition of its own subject triples (NULL when it
-                # never appears as a subject — same as sh:targetNode)
-                tfocus = (
-                    tfocus.join(
-                        eval_data.select(F.col("s").alias("focus"), "part_id"),
-                        on="focus",
-                        how="left",
-                    )
-                    .groupBy("focus")
-                    .agg(F.min("part_id").alias("part_id"))
+            tfocus = evaluate_target_select(spark, eval_data, t_sels[0])
+            for sel in t_sels[1:]:
+                tfocus = tfocus.unionByName(
+                    evaluate_target_select(spark, eval_data, sel)
                 )
-                focus = (
-                    tfocus
-                    if focus is None
-                    else focus.unionByName(tfocus)
-                    .groupBy("focus")
-                    .agg(F.min("part_id").alias("part_id"))
-                )
-            if focus is None:
-                continue
-            if focus_subset is not None:
-                focus = focus.join(
-                    focus_subset.select("focus").distinct(),
+            # lineage: a target-selected focus node reports into the
+            # min partition of its own subject triples (NULL when it
+            # never appears as a subject — same as sh:targetNode)
+            tfocus = (
+                tfocus.join(
+                    eval_data.select(F.col("s").alias("focus"), "part_id"),
                     on="focus",
-                    how="left_semi",
+                    how="left",
                 )
-            result_dfs.extend(
-                _evaluate_shape(
-                    spark, eval_data, focus, shape, closure, shape_map,
-                    max_validation_depth, 0,
-                )
+                .groupBy("focus")
+                .agg(F.min("part_id").alias("part_id"))
             )
-            for sc in sparql_map.get(shape.shape_id, []):
-                from .sparql_af import (
-                    evaluate_ask_constraint,
-                    evaluate_property_ask_constraint,
-                    evaluate_sparql_constraint,
+            focus = (
+                tfocus
+                if focus is None
+                else focus.unionByName(tfocus)
+                .groupBy("focus")
+                .agg(F.min("part_id").alias("part_id"))
+            )
+        if focus is None:
+            continue
+        if focus_subset is not None:
+            focus = focus.join(
+                focus_subset.select("focus").distinct(),
+                on="focus",
+                how="left_semi",
+            )
+        result_dfs.extend(
+            _evaluate_shape(
+                spark, eval_data, focus, shape, closure, shape_map,
+                max_validation_depth, 0,
+            )
+        )
+        for sc in sparql_map.get(shape.shape_id, []):
+            from .sparql_af import (
+                evaluate_ask_constraint,
+                evaluate_property_ask_constraint,
+                evaluate_sparql_constraint,
+            )
+
+            if sc.ask is not None and sc.path is not None:
+                result_dfs.append(
+                    evaluate_property_ask_constraint(
+                        spark, eval_data, focus, sc
+                    )
+                )
+            elif sc.ask is not None:
+                result_dfs.append(
+                    evaluate_ask_constraint(spark, eval_data, focus, sc)
+                )
+            else:
+                # dedupe deferred: SELECT-constraint frames are
+                # collected separately and deduplicated ONCE below —
+                # one shuffle for the whole sh:sparql catalog instead
+                # of one per constraint (round-3 verdict finding 3)
+                af_select_dfs.append(
+                    evaluate_sparql_constraint(
+                        spark, eval_data, focus, sc, dedupe=False
+                    )
                 )
 
-                if sc.ask is not None and sc.path is not None:
-                    result_dfs.append(
-                        evaluate_property_ask_constraint(
-                            spark, eval_data, focus, sc
-                        )
-                    )
-                elif sc.ask is not None:
-                    result_dfs.append(
-                        evaluate_ask_constraint(spark, eval_data, focus, sc)
-                    )
-                else:
-                    # dedupe deferred: SELECT-constraint frames are
-                    # collected separately and deduplicated ONCE below —
-                    # one shuffle for the whole sh:sparql catalog instead
-                    # of one per constraint (round-3 verdict finding 3)
-                    af_select_dfs.append(
-                        evaluate_sparql_constraint(
-                            spark, eval_data, focus, sc, dedupe=False
-                        )
-                    )
+    if af_select_dfs:
+        merged = _chunked_union(af_select_dfs)
+        result_dfs.append(merged.dropDuplicates())
 
-        if af_select_dfs:
-            merged = _chunked_union(af_select_dfs)
-            result_dfs.append(merged.dropDuplicates())
-
-        if not result_dfs:
-            results = spark.createDataFrame([], schema=RESULT_SCHEMA)
-        else:
-            results = _chunked_union(result_dfs)
-        if slice_df is not None:
-            _remember_eval_slice(slice_df)
-        return results
-    finally:
-        _ASSUME_SMALL_FOCUS.reset(_assume_token)
+    if not result_dfs:
+        results = spark.createDataFrame([], schema=RESULT_SCHEMA)
+    else:
+        results = _chunked_union(result_dfs)
+    if slice_df is not None:
+        _remember_eval_slice(slice_df)
+    return results
 
 
 # Capacity-ONE registry for the persisted predicate slice. Round 3 tied the

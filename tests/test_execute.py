@@ -164,3 +164,32 @@ def test_execute_plugin_parameter_errors(spark):
     # js delegates to the documented out-of-scope raise inside validate
     with pytest.raises(ValueError, match="SHACL-JS"):
         run(js=True)
+
+
+def test_make_entities_gates_labels_without_a_job(spark, tmp_path):
+    """The label path gates its broadcast hints on the results frame. A
+    parquet-backed results frame has an informative size estimate, so
+    building the labelled entities submits no job."""
+    from pyspark.sql import functions as F
+
+    from cmem_plugin_pyshacl_spark.operators.entities import make_entities
+    from cmem_plugin_pyshacl_spark.plans.shacl import validate
+
+    store = _store(spark)
+    data = store.filter(F.col("graph") == DATA_G)
+    shapes = store.filter(F.col("graph") == SHAPES_G)
+    path = str(tmp_path / "results")
+    validate(spark, data, shapes).write.parquet(path)
+    results = spark.read.parquet(path)
+
+    sc = spark.sparkContext
+    group = "make_entities_call"
+    sc.setJobGroup(group, group)
+    try:
+        entities = make_entities(
+            results, data, shapes, False, DATA_G, SHAPES_G, "2026-01-01T00:00:00Z"
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert entities.count() == results.count() == 1

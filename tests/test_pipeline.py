@@ -111,13 +111,13 @@ def test_triples_stage_mapping_broadcast_is_gated(spark, monkeypatch):
     A large estimate leaves both mapping joins unhinted (AQE decides); a
     small estimate hints both, with no job. Both produce identical
     triples."""
-    import cmem_plugin_pyshacl_spark.plans.shacl as shacl_mod
+    import cmem_plugin_pyshacl_spark.data_model as dm
 
     pages = generate_pages(spark, N)
     rel = relations_fused_stage(pages)
 
     mapping = canonicalize_stage(rel)
-    monkeypatch.setattr(shacl_mod, "_plan_size_bytes", lambda df: 1 << 40)
+    monkeypatch.setattr(dm, "_plan_size_bytes", lambda df: 1 << 40)
     unhinted = triples_stage(rel, mapping)
     plan = unhinted._jdf.queryExecution().analyzed().toString()
     assert "broadcast" not in plan.lower(), plan
@@ -126,7 +126,7 @@ def test_triples_stage_mapping_broadcast_is_gated(spark, monkeypatch):
     # fresh mapping frame — the gate memoizes its verdict on the DataFrame
     # object
     mapping2 = canonicalize_stage(rel)
-    monkeypatch.setattr(shacl_mod, "_plan_size_bytes", lambda df: 1 << 10)
+    monkeypatch.setattr(dm, "_plan_size_bytes", lambda df: 1 << 10)
     hinted = triples_stage(rel, mapping2)
     plan2 = hinted._jdf.queryExecution().analyzed().toString()
     assert plan2.lower().count("broadcast") == 2, plan2
@@ -137,7 +137,7 @@ def test_canonicalize_stage_is_lazy_with_honest_estimate(spark):
     """The mapping broadcast gate in triples_stage trusts the Catalyst
     estimate alone, which is sound only because canonicalize_stage runs no
     job at call time and its plan's estimate is not saturated."""
-    import cmem_plugin_pyshacl_spark.plans.shacl as shacl_mod
+    import cmem_plugin_pyshacl_spark.data_model as dm
 
     rel_u = unique_relations_stage(
         relations_fused_stage(generate_pages(spark, N))
@@ -149,11 +149,11 @@ def test_canonicalize_stage_is_lazy_with_honest_estimate(spark):
     mapping = canonicalize_stage(rel_u).persist()
     sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = list(sc.statusTracker().getJobIdsForGroup(group))
-    est = shacl_mod._plan_size_bytes(mapping)
+    est = dm._plan_size_bytes(mapping)
     mapping.unpersist()
     rel_u.unpersist()
     assert jobs == []
-    assert est is not None and est < shacl_mod._EST_SATURATED, est
+    assert est is not None and est < dm._EST_SATURATED, est
 
 
 def test_pipeline_checkpoint_resume(spark, tmp_path):
@@ -183,6 +183,28 @@ def test_pipeline_reports_cover_all_partitions(spark, tmp_path):
     # every report row is consistent: conforms <=> zero results
     for row in reports.values():
         assert row.conforms == (row.results_count == 0)
+
+
+def test_pipeline_reports_aggregate_written_results(spark, tmp_path, monkeypatch):
+    """With out_dir set, the reports sink aggregates the written
+    validation_results parquet: its plan scans that file and holds no
+    InMemoryRelation of validate's eval slice, so the constraints are
+    evaluated once per run."""
+    import cmem_plugin_pyshacl_spark.plans.pipeline as pipeline_mod
+    from cmem_plugin_pyshacl_spark.plans.shacl import partition_reports
+
+    built = []
+
+    def _spy(*args):
+        built.append(partition_reports(*args))
+        return built[-1]
+
+    monkeypatch.setattr(pipeline_mod, "partition_reports", _spy)
+    run_pipeline(spark, generate_pages(spark, N), _shapes(spark), out_dir=str(tmp_path / "run"))
+    (reports,) = built
+    assert any("validation_results" in f for f in reports.inputFiles())
+    plan = reports._jdf.queryExecution().optimizedPlan().toString()
+    assert "InMemoryRelation" not in plan, plan
 
 
 def test_mention_sentences_drive_relations(spark):

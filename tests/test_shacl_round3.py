@@ -13,6 +13,7 @@ import logging
 import pytest
 from pyspark.sql import functions as F
 
+from cmem_plugin_pyshacl_spark import data_model as dm
 from cmem_plugin_pyshacl_spark.data_model import (
     EX,
     RDF_TYPE,
@@ -233,28 +234,46 @@ def _gate_fixture(spark, n_focus=40):
     return data, shapes
 
 
-def test_is_small_respects_threshold(spark, monkeypatch):
-    """_is_small is purely stats-based (no job): the verdict follows the
-    Catalyst size estimate against _BROADCAST_GATE_BYTES."""
-    big = spark.range(50).select(F.concat(F.lit("urn:x"), F.col("id")).alias("focus"))
-    monkeypatch.setattr(shacl_mod, "_BROADCAST_GATE_BYTES", 0)
-    assert shacl_mod._is_small(big) is False
-    monkeypatch.setattr(shacl_mod, "_BROADCAST_GATE_BYTES", 256 << 20)
+def _jobs_of(spark, group, fn):
+    """Run fn() under a job group with AQE off (AQE submits one job per
+    query stage; without it every action is exactly one job) and return
+    (fn's value, the group's job ids)."""
+    sc = spark.sparkContext
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup(group, group)
+    try:
+        value = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    return value, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_is_small_respects_threshold(spark):
+    """data_model.is_small in its two steps: an informative Catalyst
+    estimate decides alone with no job (small iff <= 256 MB); an
+    uninformative one (an RDD-backed local frame reports
+    defaultSizeInBytes) runs exactly one bounded probe, memoized per
+    frame."""
     small = spark.range(5).select(F.concat(F.lit("urn:y"), F.col("id")).alias("focus"))
-    assert shacl_mod._is_small(small) is True
-    # memoized verdict survives a threshold change (probe ran once)
-    monkeypatch.setattr(shacl_mod, "_BROADCAST_GATE_BYTES", 1 << 60)
-    assert shacl_mod._is_small(big) is False
-    # an estimate failure is conservative: never broadcast
-    unknown = spark.range(5).select(F.col("id").alias("focus"))
-    monkeypatch.setattr(shacl_mod, "_plan_size_bytes", lambda df: None)
-    assert shacl_mod._is_small(unknown) is False
+    assert _jobs_of(spark, "gate_est_small", lambda: dm.is_small(small)) == (True, [])
+    big = spark.range(1 << 40)  # informative 8 TB estimate
+    assert dm._plan_size_bytes(big) < dm._EST_SATURATED
+    assert _jobs_of(spark, "gate_est_big", lambda: dm.is_small(big)) == (False, [])
+
+    local = spark.createDataFrame([(f"urn:z{i}",) for i in range(5)], "focus string")
+    assert dm._plan_size_bytes(local) >= dm._EST_SATURATED
+    verdict, jobs = _jobs_of(spark, "gate_probe", lambda: dm.is_small(local))
+    assert verdict is True and len(jobs) == 1, jobs
+    assert _jobs_of(spark, "gate_probe_memo", lambda: dm.is_small(local)) == (True, [])
 
 
 def test_large_focus_plan_is_unhinted_and_correct(spark, monkeypatch):
-    """With the gate forced below the focus size, validate() must build an
-    UNHINTED plan (no broadcast hint anywhere in the analyzed tree) and
-    still produce identical violations (round-2 VERDICT finding 1)."""
+    """With an informative LARGE estimate (an honest file-size-backed big
+    scan), validate() must build an UNHINTED plan (no broadcast hint
+    anywhere in the analyzed tree) and still produce identical violations
+    (round-2 VERDICT finding 1)."""
     data, shapes = _gate_fixture(spark)
     expected = {
         (r.focusNode, r.sourceConstraintComponent)
@@ -262,7 +281,7 @@ def test_large_focus_plan_is_unhinted_and_correct(spark, monkeypatch):
     }
     assert len(expected) == 20  # every odd focus lacks p
 
-    monkeypatch.setattr(shacl_mod, "_BROADCAST_GATE_BYTES", 0)
+    monkeypatch.setattr(dm, "_plan_size_bytes", lambda df: 1 << 40)
     gated = validate(spark, data, shapes)
     plan = gated._jdf.queryExecution().analyzed().toString()
     assert "broadcast" not in plan.lower(), plan
@@ -274,8 +293,9 @@ def test_large_focus_plan_is_unhinted_and_correct(spark, monkeypatch):
 def test_small_focus_plan_keeps_broadcast_hint(spark, tmp_path):
     """A provably-small relation (parquet-backed: Catalyst reads its file
     size, the realistic shape of production inputs) keeps the broadcast
-    hint. A python-local createDataFrame frame is RDD-backed with UNKNOWN
-    stats, so the gate conservatively leaves it unhinted — assert both."""
+    hint with no probe. A python-local createDataFrame frame is RDD-backed
+    with UNKNOWN stats, so the gate probes its focus frames, finds them
+    small and hints them too — assert both."""
     data_local, shapes = _gate_fixture(spark)
     pq = str(tmp_path / "gate_data.parquet")
     data_local.write.mode("overwrite").parquet(pq)
@@ -284,23 +304,25 @@ def test_small_focus_plan_keeps_broadcast_hint(spark, tmp_path):
     plan = res._jdf.queryExecution().analyzed().toString()
     assert "broadcast" in plan.lower()
 
-    unhinted = validate(spark, data_local, shapes)
-    plan2 = unhinted._jdf.queryExecution().analyzed().toString()
-    assert "broadcast" not in plan2.lower()
+    probed = validate(spark, data_local, shapes)
+    plan2 = probed._jdf.queryExecution().analyzed().toString()
+    assert "broadcast" in plan2.lower()
     assert {(r.focusNode, r.sourceConstraintComponent) for r in res.collect()} == {
-        (r.focusNode, r.sourceConstraintComponent) for r in unhinted.collect()
+        (r.focusNode, r.sourceConstraintComponent) for r in probed.collect()
     }
 
 
 def test_saturated_estimate_count_fallback_restores_hint(spark, monkeypatch):
-    """Round-4 gate tier 3 (drift bisect, BENCH.md): when the Catalyst
-    estimate SATURATES (derived plans propagate to Long.MaxValue) and the
-    predicate slice is persisted, one bounded count rescues the verdict —
-    the plan keeps broadcast hints. Tier 2: a finite LARGE estimate (an
-    honest file-size-backed big scan) must NOT count and stays unhinted."""
+    """validate() builds its persisted predicate slice before planning any
+    focus frame, so data with an UNINFORMATIVE estimate (python-local,
+    RDD-backed) still gets hinted plans, and the slice count is the only
+    data-side job at plan time: exactly one job more than the same call
+    over a cache the caller already built (no slice, informative
+    estimates). A finite LARGE estimate (an honest file-size-backed big
+    scan) must stay unhinted."""
     data, shapes = _gate_fixture(spark)
-    # second property shape so the slice persists (count fallback is only
-    # taken when the cache-warming count is work evaluation repeats anyway)
+    # second property shape so the slice persists (it is only taken when
+    # more than one constraint reads it)
     shapes = shapes.unionByName(
         triples_from_rows(
             spark,
@@ -316,17 +338,26 @@ def test_saturated_estimate_count_fallback_restores_hint(spark, monkeypatch):
         for r in validate(spark, data, shapes).collect()
     }
 
-    # tier 3: saturated estimate + persisted slice -> count -> hinted
-    monkeypatch.setattr(shacl_mod, "_plan_size_bytes", lambda df: 1 << 62)
-    hinted = validate(spark, data, shapes)
+    data_built, _ = _gate_fixture(spark)
+    data_built.persist().count()
+    _, jobs_built = _jobs_of(
+        spark, "validate_built", lambda: validate(spark, data_built, shapes)
+    )
+    data_built.unpersist()
+    fresh, _ = _gate_fixture(spark)
+    assert dm._plan_size_bytes(fresh) >= dm._EST_SATURATED
+    hinted, jobs = _jobs_of(
+        spark, "validate_sliced", lambda: validate(spark, fresh, shapes)
+    )
+    assert len(jobs) == len(jobs_built) + 1, (jobs, jobs_built)
     plan = hinted._jdf.queryExecution().analyzed().toString()
     assert "broadcast" in plan.lower(), plan
     assert {
         (r.focusNode, r.sourceConstraintComponent) for r in hinted.collect()
     } == expected
 
-    # tier 2: finite large (below the saturation band) -> no count, unhinted
-    monkeypatch.setattr(shacl_mod, "_plan_size_bytes", lambda df: 1 << 40)
+    # finite large (below the saturation band) -> no probe, unhinted
+    monkeypatch.setattr(dm, "_plan_size_bytes", lambda df: 1 << 40)
     unhinted = validate(spark, data, shapes)
     plan2 = unhinted._jdf.queryExecution().analyzed().toString()
     assert "broadcast" not in plan2.lower(), plan2
