@@ -8,8 +8,9 @@ two-phase Spark plan:
 
   Phase 1 (S1, driver-side): COMPILE the shapes graph (always tiny — the
   reference's own fixture is pySHACL's shacl-shacl.ttl) from a triples
-  DataFrame into plain-python ``PropertyConstraint`` records, which become
-  broadcast constraint tables.
+  DataFrame into plain-python ``PropertyConstraint`` records; each shape's
+  records become one constraint table, carried into the plan as a single
+  folded literal (``_evaluate_values``).
 
   Phase 2 (S2–S12, executor-side): EVALUATE constraints as 100%-native
   Column expressions over the (huge) data triples table. No Python UDFs
@@ -18,7 +19,8 @@ two-phase Spark plan:
   min/max-count and the anti-join for sh:class.
 
 Scale analysis (100 TB posture):
-  * the shapes side of every join is broadcast() — the big triples table is
+  * the shapes side never joins: constraint parameters are one folded
+    literal each value row expands by key, and the big triples table is
     never shuffled for target selection beyond a single filter+distinct;
   * S5 value extraction is one shuffle join keyed on subject; at cluster
     scale the triples table should be bucketed by `s` so this co-locates;
@@ -49,9 +51,13 @@ fully supported — see _literal_fail_condition.)
 from __future__ import annotations
 
 import contextvars
+import json
 import logging
+import operator
 import re
+from collections.abc import Callable
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -236,7 +242,7 @@ class PropertyConstraint:
 # ---------------------------------------------------------------- SHACL
 # property-path algebra (W3C SHACL §2.3.1 / SPARQL 1.1 property paths).
 # Flat shapes (one predicate, one inverse, one-level sequence/alternative/
-# closure) take the dedicated plans in evaluate_constraint; everything else
+# closure) take the dedicated plans in _path_values; everything else
 # compiles to this tree and evaluates via _eval_path_expr.
 @dataclass(frozen=True)
 class PPred:
@@ -1033,6 +1039,203 @@ def _vterm_key() -> Column:
     )
 
 
+# ------------------------------------------------------ value components
+# The one definition of each value-local SHACL component (W3C SHACL
+# §4.1-4.4, sh:hasValue, sh:in). `fail` reads the value columns (v_kind/
+# v_value/v_datatype/v_lang, or `cnt` for a count) and the constraint's
+# parameters through `p(name) -> Column`: _evaluate_values passes F.col
+# over the expanded constraint table, _self_value_fail_parts passes one
+# constraint's literals. Scope "value": a value node fails on its own;
+# "focus": the focus node fails when no value passes; "count": the focus
+# node's value count fails.
+_Params = Callable[[str], Column]
+
+
+@dataclass(frozen=True)
+class _Component:
+    iri: str
+    param: str  # constraint-table field that switches the component on
+    fail: Callable[[_Params], Column]
+    message: Callable[[_Params], Column]  # default sh:resultMessage
+    scope: str = "value"
+
+
+def _datatype_fail(p: _Params) -> Column:
+    # RDF 1.1 effective datatype: "x"@en is rdf:langString and plain "x"
+    # xsd:string; an ill-formed lexical form violates too (§4.1.2)
+    dt = p("datatype")
+    lexical_ok = F.coalesce(
+        *[F.when(dt == d, F.col("v_value").rlike(rx)) for d, rx in _LEXICAL_RE.items()],
+        F.lit(True),
+    )
+    eff = _effective_datatype(F.col("v_kind"), F.col("v_datatype"), F.col("v_lang"))
+    return (F.col("v_kind") != KIND_LITERAL) | (eff != dt) | ~lexical_ok
+
+
+def _range_fail(
+    param: str, op: Callable[[Column, Column], Column]
+) -> Callable[[_Params], Column]:
+    """sh:min/maxInclusive/Exclusive (§4.3): numeric when both sides parse
+    as numbers, temporal when neither does (Spark would otherwise read a
+    bare '18' as year 18); a value comparable in neither domain violates."""
+
+    def fail(p: _Params) -> Column:
+        v, bound = F.col("v_value"), p(param)
+        v_num, b_num = v.try_cast("double"), bound.try_cast("double")
+        v_ts, b_ts = v.try_cast("timestamp"), bound.try_cast("timestamp")
+        cmp = F.when(v_num.isNotNull() & b_num.isNotNull(), op(v_num, b_num)).when(
+            v_num.isNull() & b_num.isNull() & v_ts.isNotNull() & b_ts.isNotNull(),
+            op(v_ts, b_ts),
+        )
+        return ~((F.col("v_kind") == KIND_LITERAL) & cmp.isNotNull() & cmp)
+
+    return fail
+
+
+def _language_in_fail(p: _Params) -> Column:
+    # §4.4.4 / RFC 4647 basic filtering: each allowed tag is a range — 'en'
+    # accepts 'en-GB'; 'en-GB' rejects 'en-US' and bare 'en'
+    lang = F.lower(F.coalesce(F.col("v_lang"), F.lit("")))
+    tag_ok = F.exists(
+        p("lang_tags"), lambda t: (lang == t) | lang.startswith(F.concat(t, F.lit("-")))
+    )
+    return ~((F.col("v_kind") == KIND_LITERAL) & F.col("v_lang").isNotNull() & tag_ok)
+
+
+def _says(template: str) -> Callable[[_Params], Column]:
+    """Default message from a template whose {fields} are parameters."""
+    parts = re.split(r"\{(\w+)\}", template)  # odd positions: field names
+    return lambda p: F.concat(
+        *[p(x).cast("string") if i % 2 else F.lit(x) for i, x in enumerate(parts)]
+    )
+
+
+_CLASS = _Component(
+    # a literal is never a SHACL instance; IRI values are checked against
+    # their rdf:type triples in _evaluate_values
+    SH + "ClassConstraintComponent", "class_",
+    lambda p: F.col("v_kind") != KIND_IRI,
+    _says("Value is not an instance of {class_}"),
+)
+_COMPONENTS = (
+    _Component(
+        SH + "MinCountConstraintComponent", "min_count",
+        lambda p: F.col("cnt") < p("min_count"),
+        _says("Less than {min_count} values on {path}"), scope="count",
+    ),
+    _Component(
+        SH + "MaxCountConstraintComponent", "max_count",
+        lambda p: F.col("cnt") > p("max_count"),
+        _says("More than {max_count} values on {path}"), scope="count",
+    ),
+    _Component(
+        SH + "DatatypeConstraintComponent", "datatype", _datatype_fail,
+        _says("Value does not have datatype {datatype}"),
+    ),
+    _Component(
+        SH + "NodeKindConstraintComponent", "nk_allowed",
+        lambda p: ~F.array_contains(p("nk_allowed"), F.col("v_kind")),
+        _says("Value does not have node kind {node_kind}"),
+    ),
+    _CLASS,
+    # §4.4.3: IRIs and literals match on their string form; bnodes fail
+    _Component(
+        SH + "PatternConstraintComponent", "java_pattern",
+        lambda p: (F.col("v_kind") == "bnode") | ~F.rlike(F.col("v_value"), p("java_pattern")),
+        _says("Value does not match pattern {pattern}"),
+    ),
+    _Component(
+        SH + "MinLengthConstraintComponent", "min_length",
+        lambda p: (F.col("v_kind") == "bnode") | (F.length("v_value") < p("min_length")),
+        _says("Value has less than {min_length} characters"),
+    ),
+    _Component(
+        SH + "MaxLengthConstraintComponent", "max_length",
+        lambda p: (F.col("v_kind") == "bnode") | (F.length("v_value") > p("max_length")),
+        _says("Value has more than {max_length} characters"),
+    ),
+    _Component(
+        SH + "MinInclusiveConstraintComponent", "min_inclusive",
+        _range_fail("min_inclusive", operator.ge), _says("Value is not >= {min_inclusive}"),
+    ),
+    _Component(
+        SH + "MaxInclusiveConstraintComponent", "max_inclusive",
+        _range_fail("max_inclusive", operator.le), _says("Value is not <= {max_inclusive}"),
+    ),
+    _Component(
+        SH + "MinExclusiveConstraintComponent", "min_exclusive",
+        _range_fail("min_exclusive", operator.gt), _says("Value is not > {min_exclusive}"),
+    ),
+    _Component(
+        SH + "MaxExclusiveConstraintComponent", "max_exclusive",
+        _range_fail("max_exclusive", operator.lt), _says("Value is not < {max_exclusive}"),
+    ),
+    _Component(
+        # RDF term identity: plain literals are xsd:string, lang-tagged
+        # ones rdf:langString (RDF 1.1)
+        SH + "InConstraintComponent", "in_keys",
+        lambda p: ~F.array_contains(p("in_keys"), _vterm_key()),
+        _says("Value is not in the allowed list"),
+    ),
+    _Component(
+        SH + "HasValueConstraintComponent", "hv_key",
+        lambda p: _vterm_key() != p("hv_key"),  # RDF term identity
+        _says("Value {has_value} is required"),
+        scope="focus",
+    ),
+    _Component(
+        SH + "LanguageInConstraintComponent", "lang_tags", _language_in_fail,
+        _says("Value has no language tag from the allowed list"),
+    ),
+)
+
+# one constraint-table row: every parameter a component reads; a shape's
+# table carries the row fields plus those some constraint sets
+_ROW_FIELDS = ("cid", "path", "shape_id", "severity", "message")
+_SPEC_TYPES = {
+    "cid": "int", "path": "string", "shape_id": "string", "severity": "string",
+    "message": "string", "min_count": "int", "max_count": "int",
+    "datatype": "string", "node_kind": "string", "nk_allowed": "array<string>",
+    "class_": "string", "pattern": "string", "java_pattern": "string",
+    "min_length": "int", "max_length": "int",
+    "min_inclusive": "string", "max_inclusive": "string",
+    "min_exclusive": "string", "max_exclusive": "string",
+    "in_keys": "array<string>", "has_value": "string", "hv_key": "string",
+    "lang_tags": "array<string>",
+}
+
+
+def _spec(c: PropertyConstraint, cid: int | None = None) -> dict:
+    """`c` as one constraint-table row (see _SPEC_TYPES)."""
+    return {
+        "cid": cid, "path": c.path, "shape_id": c.shape_id,
+        "severity": c.severity, "message": c.message,
+        "min_count": c.min_count, "max_count": c.max_count,
+        "datatype": c.datatype, "node_kind": c.node_kind,
+        "nk_allowed": (
+            None if c.node_kind is None else _NODEKIND_ALLOWED.get(c.node_kind, [KIND_IRI])
+        ),
+        "class_": c.class_, "pattern": c.pattern,
+        "java_pattern": None if c.pattern is None else _java_pattern(c),
+        "min_length": c.min_length, "max_length": c.max_length,
+        "min_inclusive": c.min_inclusive, "max_inclusive": c.max_inclusive,
+        "min_exclusive": c.min_exclusive, "max_exclusive": c.max_exclusive,
+        "in_keys": (
+            None if c.in_values is None else [_term_key_py(*t) for t in c.in_terms or []]
+        ),
+        "has_value": c.has_value,
+        "hv_key": None if c.has_value_term is None else _term_key_py(*c.has_value_term),
+        "lang_tags": None if c.language_in is None else [t.lower() for t in c.language_in],
+    }
+
+
+def _json_lit(value: object, ddl: str) -> Column:
+    """A driver-side value as ONE Spark literal: from_json over a string
+    literal constant-folds to a typed literal, so a catalog of any size
+    costs one py4j call and no table to join."""
+    return F.from_json(F.lit(json.dumps(value)), ddl, {"mode": "FAILFAST"})
+
+
 def _self_value_fail_parts(
     c: PropertyConstraint,
     shape_map: dict[str, "NodeShape"] | None,
@@ -1045,67 +1248,13 @@ def _self_value_fail_parts(
     LITERAL values (round-1 ADVICE: 'sh:or over datatype sub-shapes never
     reported violations'). Constraints not expressible value-locally
     (property pairs, counts) contribute nothing here."""
-    out: list[Column] = []
-    v = F.col("v_value")
-    if c.datatype is not None:
-        cond = (
-            _effective_datatype(F.col("v_kind"), F.col("v_datatype"), F.col("v_lang"))
-            != c.datatype
-        )
-        lex = _LEXICAL_RE.get(c.datatype)
-        if lex is not None:
-            cond = cond | ~v.rlike(lex)
-        out.append(cond)
-    if c.node_kind is not None:
-        out.append(~F.col("v_kind").isin(_NODEKIND_ALLOWED.get(c.node_kind, [KIND_IRI])))
-    if c.class_ is not None:
-        # a literal is never a SHACL instance of a class (pySHACL parity) —
-        # a referenced shape carrying sh:class always fails a literal value
-        out.append(F.col("v_kind") == KIND_LITERAL)
-    if c.pattern is not None:
-        out.append((F.col("v_kind") == "bnode") | ~v.rlike(_java_pattern(c)))
-    if c.min_length is not None:
-        out.append((F.col("v_kind") == "bnode") | (F.length(v) < c.min_length))
-    if c.max_length is not None:
-        out.append((F.col("v_kind") == "bnode") | (F.length(v) > c.max_length))
-    if c.in_values is not None:
-        keys = [_term_key_py(*t) for t in (c.in_terms or [])]
-        out.append(~_vterm_key().isin(keys))
-    if c.has_value is not None and c.has_value_term is not None:
-        out.append(_vterm_key() != _term_key_py(*c.has_value_term))
-    for bound, cmp_ok in (
-        (c.min_inclusive, ">="), (c.max_inclusive, "<="),
-        (c.min_exclusive, ">"), (c.max_exclusive, "<"),
-    ):
-        if bound is None:
-            continue
-        v_num = F.expr("try_cast(v_value as double)")
-        b_num = F.expr(f"try_cast({bound!r} as double)")
-        v_ts = F.expr("try_cast(v_value as timestamp)")
-        b_ts = F.expr(f"try_cast({bound!r} as timestamp)")
-        num_ops = {">=": v_num >= b_num, "<=": v_num <= b_num,
-                   ">": v_num > b_num, "<": v_num < b_num}
-        ts_ops = {">=": v_ts >= b_ts, "<=": v_ts <= b_ts,
-                  ">": v_ts > b_ts, "<": v_ts < b_ts}
-        cmp_col = F.when(
-            v_num.isNotNull() & b_num.isNotNull(), num_ops[cmp_ok]
-        ).otherwise(
-            F.when(
-                v_num.isNull() & b_num.isNull()
-                & v_ts.isNotNull() & b_ts.isNotNull(),
-                ts_ops[cmp_ok],
-            )
-        )
-        ok = (F.col("v_kind") == KIND_LITERAL) & cmp_col.isNotNull() & cmp_col
-        out.append(~ok)
-    if c.language_in is not None:
-        lang = F.lower(F.coalesce(F.col("v_lang"), F.lit("")))
-        tag_ok = F.lit(False)
-        for t in [t.lower() for t in c.language_in]:
-            tag_ok = tag_ok | (lang == t) | lang.startswith(t + "-")
-        out.append(
-            ~((F.col("v_kind") == KIND_LITERAL) & F.col("v_lang").isNotNull() & tag_ok)
-        )
+    spec = _spec(c)
+    out: list[Column] = [
+        comp.fail(lambda name: F.lit(spec[name]).cast(_SPEC_TYPES[name]))
+        for comp in _COMPONENTS
+        if comp.scope != "count" and spec[comp.param] is not None
+    ]
+
     if shape_map is not None and depth < 8:
         def sub_fail(ref: str) -> Column | None:
             s = shape_map.get(ref)
@@ -1168,30 +1317,55 @@ def _literal_fail_condition(
     return fail
 
 
-def evaluate_constraint(
-    spark: SparkSession,
-    data: DataFrame,
-    focus: DataFrame,
-    c: PropertyConstraint,
-    closure: dict[str, set[str]],
-    shape_map: dict[str, "NodeShape"] | None = None,
-    max_depth: int = 15,
-    depth: int = 0,
-) -> list[DataFrame]:
-    """S5–S11 — evaluate one compiled constraint.
+def _edges(triples: DataFrame, *extra: Column) -> DataFrame:
+    """Triples as path values: the subject is the focus, the object the
+    value node."""
+    return triples.select(
+        F.col("s").alias("focus"),
+        *extra,
+        F.col("o_kind").alias("v_kind"),
+        F.col("o_value").alias("v_value"),
+        F.col("o_datatype").alias("v_datatype"),
+        F.col("o_lang").alias("v_lang"),
+        F.col("part_id").alias("v_part_id"),
+    )
 
-    `focus` is DataFrame[focus, part_id]; `data` is the triples table.
-    When `c.path` is None this is a NODE-shape constraint: the focus node
-    itself is the (single, IRI-kind) value. `shape_map`/`max_depth`/`depth`
-    drive sh:node shape-to-shape recursion. Returns a list of result
-    DataFrames with RESULT_SCHEMA columns.
-    """
-    results: list[DataFrame] = []
-    _TERM_COLS = ["focus", "v_kind", "v_value", "v_datatype", "v_lang"]
+
+def _with_focus(path_triples: DataFrame, focus: DataFrame) -> DataFrame:
+    """S5 (round-1 VERDICT finding 1): INNER join with the focus set as the
+    BROADCAST BUILD SIDE. Spark cannot build-broadcast the preserved side
+    of an outer join — the old broadcast(focus) left-join hint was silently
+    dropped and the plan degenerated to a full-shuffle SortMergeJoin of the
+    triples table. Broadcast-right INNER is a supported shape; zero-valued
+    focus nodes are recovered with a separate anti join only where
+    minCount / hasValue need them. The hint is size-GATED (is_small): a
+    billion-node focus set leaves the join unhinted — AQE picks the
+    runtime strategy and the scale plan is a co-located join on
+    `s`-bucketed storage."""
+    f = focus.withColumnRenamed("part_id", "f_part_id")
+    return (
+        path_triples.join(maybe_broadcast(f, is_small(focus)), on="focus")
+        .withColumn("part_id", F.coalesce(F.col("f_part_id"), F.col("v_part_id")))
+        .drop("f_part_id", "v_part_id")
+    )
+
+
+def _is_simple_path(c: PropertyConstraint) -> bool:
+    return (
+        c.path is not None
+        and not (c.inverse or c.seq_path or c.alt_path or c.closure_kind)
+        and c.path_expr is None
+    )
+
+
+def _path_values(data: DataFrame, focus: DataFrame, c: PropertyConstraint) -> DataFrame:
+    """S5 — the value nodes of `c` per focus node: DataFrame[focus, v_kind,
+    v_value, v_datatype, v_lang, part_id]. When `c.path` is None this is a
+    NODE-shape constraint: the focus node itself is the (single, IRI-kind)
+    value."""
     if c.path is None:
-        # self-values: the focus node is the value (focus nodes selected by
-        # our targets are IRIs post-skolemization)
-        present = focus.select(
+        # focus nodes selected by our targets are IRIs post-skolemization
+        return focus.select(
             "focus",
             F.lit(KIND_IRI).alias("v_kind"),
             F.col("focus").alias("v_value"),
@@ -1199,416 +1373,102 @@ def evaluate_constraint(
             F.lit(None).cast("string").alias("v_lang"),
             F.col("part_id"),
         )
-    else:
-        if c.alt_path:
-            # alternative path (p1 | p2 | ...): union of each predicate's
-            # values — a single isin filter on the predicate column. A value
-            # node reachable via SEVERAL alternatives is ONE value node
-            # (W3C SHACL property paths are set-semantics) — dedupe by term
-            # so min/maxCount don't double-count (round-1 ADVICE finding).
-            path_triples = (
-                data.filter(F.col("p").isin(c.alt_path))
-                .select(
-                    F.col("s").alias("focus"),
-                    F.col("o_kind").alias("v_kind"),
-                    F.col("o_value").alias("v_value"),
-                    F.col("o_datatype").alias("v_datatype"),
-                    F.col("o_lang").alias("v_lang"),
-                    F.col("part_id").alias("v_part_id"),
-                )
-                .groupBy(_TERM_COLS)
-                .agg(F.min("v_part_id").alias("v_part_id"))
-            )
-        elif c.seq_path:
-            # sequence path ( p1 p2 ... ): chain of joins hop-to-hop; the
-            # intermediate node of hop i is the subject of hop i+1; distinct
-            # value nodes (two routes to one node count once).
-            hops = c.seq_path
-            cur = data.filter(F.col("p") == hops[0]).select(
-                F.col("s").alias("focus"),
-                F.col("o_kind").alias("v_kind"),
-                F.col("o_value").alias("v_value"),
-                F.col("o_datatype").alias("v_datatype"),
-                F.col("o_lang").alias("v_lang"),
-                F.col("part_id").alias("v_part_id"),
-            )
-            for hop in hops[1:]:
-                nxt = data.filter(F.col("p") == hop).select(
-                    F.col("s").alias("v_value"),
-                    F.col("o_kind").alias("_k2"),
-                    F.col("o_value").alias("_v2"),
-                    F.col("o_datatype").alias("_d2"),
-                    F.col("o_lang").alias("_l2"),
-                )
-                cur = cur.join(nxt, on="v_value").select(
-                    "focus",
-                    F.col("_k2").alias("v_kind"),
-                    F.col("_v2").alias("v_value"),
-                    F.col("_d2").alias("v_datatype"),
-                    F.col("_l2").alias("v_lang"),
-                    "v_part_id",
-                )
-            path_triples = cur.groupBy(_TERM_COLS).agg(
-                F.min("v_part_id").alias("v_part_id")
-            )
-        elif c.path_expr is not None:
-            # arbitrarily nested path — generic path-algebra evaluation
-            path_triples = _eval_path_expr(data, focus, c.path_expr)
-        elif c.closure_kind is not None:
-            # sh:zeroOrMorePath / sh:oneOrMorePath / sh:zeroOrOnePath —
-            # bounded reachability fixpoint (see _closure_values)
-            path_triples = _closure_values(data, focus, c)
-        elif c.inverse:
-            # inverse path: values of focus f are SUBJECTS of triples whose
-            # object is f — subjects are IRIs (post-skolemization)
-            path_triples = data.filter(F.col("p") == c.path).select(
-                F.col("o_value").alias("focus"),
-                F.lit(KIND_IRI).alias("v_kind"),
+    if c.alt_path:
+        # alternative path (p1 | p2 | ...): union of each predicate's
+        # values — a single isin filter on the predicate column. A value
+        # node reachable via SEVERAL alternatives is ONE value node
+        # (W3C SHACL property paths are set-semantics) — dedupe by term
+        # so min/maxCount don't double-count (round-1 ADVICE finding).
+        path_triples = (
+            _edges(data.filter(F.col("p").isin(c.alt_path)))
+            .groupBy("focus", *_PATH_TERM)
+            .agg(F.min("v_part_id").alias("v_part_id"))
+        )
+    elif c.seq_path:
+        # sequence path ( p1 p2 ... ): chain of joins hop-to-hop; the
+        # intermediate node of hop i is the subject of hop i+1; distinct
+        # value nodes (two routes to one node count once).
+        hops = c.seq_path
+        cur = _edges(data.filter(F.col("p") == hops[0]))
+        for hop in hops[1:]:
+            nxt = data.filter(F.col("p") == hop).select(
                 F.col("s").alias("v_value"),
-                F.lit(None).cast("string").alias("v_datatype"),
-                F.lit(None).cast("string").alias("v_lang"),
-                F.col("part_id").alias("v_part_id"),
+                F.col("o_kind").alias("_k2"),
+                F.col("o_value").alias("_v2"),
+                F.col("o_datatype").alias("_d2"),
+                F.col("o_lang").alias("_l2"),
             )
-        else:
-            path_triples = data.filter(F.col("p") == c.path).select(
-                F.col("s").alias("focus"),
-                F.col("o_kind").alias("v_kind"),
-                F.col("o_value").alias("v_value"),
-                F.col("o_datatype").alias("v_datatype"),
-                F.col("o_lang").alias("v_lang"),
-                F.col("part_id").alias("v_part_id"),
+            cur = cur.join(nxt, on="v_value").select(
+                "focus",
+                F.col("_k2").alias("v_kind"),
+                F.col("_v2").alias("v_value"),
+                F.col("_d2").alias("v_datatype"),
+                F.col("_l2").alias("v_lang"),
+                "v_part_id",
             )
-        # S5 (round-1 VERDICT finding 1): INNER join with the focus set as
-        # the BROADCAST BUILD SIDE. Spark cannot build-broadcast the
-        # preserved side of an outer join — the old broadcast(focus)
-        # left-join hint was silently dropped and the plan degenerated to a
-        # full-shuffle SortMergeJoin of the triples table. Broadcast-right
-        # INNER is a supported shape; zero-valued focus nodes are recovered
-        # with a separate anti join only where minCount / hasValue need
-        # them. The hint is size-GATED (is_small): a billion-node focus
-        # set leaves the join unhinted — AQE picks the runtime strategy and
-        # the scale plan is a co-located join on `s`-bucketed storage.
-        small_focus = is_small(focus)
-        f = focus.withColumnRenamed("part_id", "f_part_id")
-        present = (
-            path_triples.join(maybe_broadcast(f, small_focus), on="focus")
-            .withColumn(
-                "part_id", F.coalesce(F.col("f_part_id"), F.col("v_part_id"))
-            )
-            .drop("f_part_id", "v_part_id")
+        path_triples = cur.groupBy("focus", *_PATH_TERM).agg(
+            F.min("v_part_id").alias("v_part_id")
         )
+    elif c.path_expr is not None:
+        # arbitrarily nested path — generic path-algebra evaluation
+        path_triples = _eval_path_expr(data, focus, c.path_expr)
+    elif c.closure_kind is not None:
+        # sh:zeroOrMorePath / sh:oneOrMorePath / sh:zeroOrOnePath —
+        # bounded reachability fixpoint (see _closure_values)
+        path_triples = _closure_values(data, focus, c)
+    elif c.inverse:
+        # inverse path: values of focus f are SUBJECTS of triples whose
+        # object is f — subjects are IRIs (post-skolemization)
+        path_triples = data.filter(F.col("p") == c.path).select(
+            F.col("o_value").alias("focus"),
+            F.lit(KIND_IRI).alias("v_kind"),
+            F.col("s").alias("v_value"),
+            F.lit(None).cast("string").alias("v_datatype"),
+            F.lit(None).cast("string").alias("v_lang"),
+            F.col("part_id").alias("v_part_id"),
+        )
+    else:
+        path_triples = _edges(data.filter(F.col("p") == c.path))
+    return _with_focus(path_triples, focus)
 
-    def _zero_focus() -> DataFrame:
-        """Focus nodes with NO value on the path (anti join against the
-        ≤|focus|-sized present keys); keeps the focus part_id. The hint
-        follows the focus gate — present's keys are bounded by |focus|."""
-        return focus.join(
-            maybe_broadcast(present.select("focus"), is_small(focus)),
-            on="focus", how="left_anti",
-        )
 
-    if c.min_count is not None or c.max_count is not None:
-        counts = present.groupBy("focus").agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.min("part_id").alias("part_id"),
+def _needs_own_plan(c: PropertyConstraint) -> bool:
+    """`c` carries a component outside the value table."""
+    return bool(
+        c.unique_lang
+        or c.or_refs or c.and_refs or c.xone_refs
+        or any(
+            x is not None
+            for x in (
+                c.equals_, c.disjoint, c.less_than, c.less_than_eq,
+                c.node_ref, c.not_ref, c.qualified_ref,
+            )
         )
-        if c.min_count is not None and c.min_count > 0:
-            comp = SH + "MinCountConstraintComponent"
-            low = counts.filter(F.col("cnt") < c.min_count).select(
-                "focus", "part_id"
-            )
-            if c.path is not None:
-                low = low.unionByName(_zero_focus())
-            results.append(
-                low.select(
-                    *_result_row(
-                        F.col("focus"),
-                        c.path,
-                        F.lit(None).cast("string"),
-                        c.shape_id,
-                        comp,
-                        _message(c, comp, f"Less than {c.min_count} values on {c.path}"),
-                        c.severity,
-                        F.col("part_id"),
-                    )
-                )
-            )
-        if c.max_count is not None:
-            comp = SH + "MaxCountConstraintComponent"
-            results.append(
-                counts.filter(F.col("cnt") > c.max_count).select(
-                    *_result_row(
-                        F.col("focus"),
-                        c.path,
-                        F.lit(None).cast("string"),
-                        c.shape_id,
-                        comp,
-                        _message(c, comp, f"More than {c.max_count} values on {c.path}"),
-                        c.severity,
-                        F.col("part_id"),
-                    )
-                )
-            )
+    )
 
-    if c.datatype is not None:
-        comp = SH + "DatatypeConstraintComponent"
-        lex_re = _LEXICAL_RE.get(c.datatype)
-        # effective datatype: lang-tagged literals are rdf:langString, plain
-        # literals xsd:string (RDF 1.1) — so sh:datatype xsd:string rejects
-        # "x"@en and sh:datatype rdf:langString requires a language tag
-        bad = (F.col("v_kind") != KIND_LITERAL) | (
-            _effective_datatype(
-                F.col("v_kind"), F.col("v_datatype"), F.col("v_lang")
-            )
-            != c.datatype
-        )
-        if lex_re is not None:
-            bad = bad | ~F.col("v_value").rlike(lex_re)
-        results.append(
-            present.filter(bad).select(
-                *_result_row(
-                    F.col("focus"),
-                    c.path,
-                    F.col("v_value"),
-                    c.shape_id,
-                    comp,
-                    _message(c, comp, f"Value does not have datatype {c.datatype}"),
-                    c.severity,
-                    F.col("part_id"), *_vk(),
-                )
-            )
-        )
 
-    if c.class_ is not None:
-        comp = SH + "ClassConstraintComponent"
-        cls_set = sorted(closure.get(c.class_, {c.class_}))
-        instances = (
-            data.filter((F.col("p") == RDF_TYPE) & F.col("o_value").isin(cls_set))
-            .select(F.col("s").alias("v_value"))
-            .distinct()
-        )
-        # literals always violate sh:class; IRIs violate when not typed.
-        lit_bad = present.filter(F.col("v_kind") != KIND_IRI)
-        iri_bad = present.filter(F.col("v_kind") == KIND_IRI).join(
-            instances, on="v_value", how="left_anti"
-        )
-        for bad_df in (lit_bad, iri_bad):
-            results.append(
-                bad_df.select(
-                    *_result_row(
-                        F.col("focus"),
-                        c.path,
-                        F.col("v_value"),
-                        c.shape_id,
-                        comp,
-                        _message(c, comp, f"Value is not an instance of {c.class_}"),
-                        c.severity,
-                        F.col("part_id"), *_vk(),
-                )
-                )
-            )
+def evaluate_constraint(
+    spark: SparkSession,
+    data: DataFrame,
+    focus: DataFrame,
+    c: PropertyConstraint,
+    present: DataFrame,
+    closure: dict[str, set[str]],
+    shape_map: dict[str, "NodeShape"] | None = None,
+    max_depth: int = 15,
+    depth: int = 0,
+) -> list[DataFrame]:
+    """The components of one constraint that are not value-local:
+    sh:uniqueLang, the property pairs, the shape refs and the qualified
+    counts (_evaluate_values runs the value-local ones).
 
-    if c.node_kind is not None:
-        comp = SH + "NodeKindConstraintComponent"
-        nk = c.node_kind
-        allowed = {
-            SH + "IRI": [KIND_IRI],
-            SH + "Literal": [KIND_LITERAL],
-            SH + "BlankNode": ["bnode"],
-            SH + "BlankNodeOrIRI": ["bnode", KIND_IRI],
-            SH + "BlankNodeOrLiteral": ["bnode", KIND_LITERAL],
-            SH + "IRIOrLiteral": [KIND_IRI, KIND_LITERAL],
-        }.get(nk, [KIND_IRI])
-        results.append(
-            present.filter(~F.col("v_kind").isin(allowed)).select(
-                *_result_row(
-                    F.col("focus"),
-                    c.path,
-                    F.col("v_value"),
-                    c.shape_id,
-                    comp,
-                    _message(c, comp, f"Value does not have node kind {nk}"),
-                    c.severity,
-                    F.col("part_id"), *_vk(),
-                )
-            )
-        )
-
-    # value-range components (sh:min/maxInclusive/Exclusive, W3C §4.3):
-    # numeric comparison when both sides parse as numbers; a value that is
-    # not comparable with the bound violates
-    for bound, comp_name, cmp_ok in (
-        (c.min_inclusive, "MinInclusiveConstraintComponent", ">="),
-        (c.max_inclusive, "MaxInclusiveConstraintComponent", "<="),
-        (c.min_exclusive, "MinExclusiveConstraintComponent", ">"),
-        (c.max_exclusive, "MaxExclusiveConstraintComponent", "<"),
-    ):
-        if bound is None:
-            continue
-        comp = SH + comp_name
-        # SHACL §4.3: numeric bounds compare numerically; xsd:date /
-        # xsd:dateTime / xsd:time bounds compare temporally (round-1 ADVICE:
-        # the numeric-only version made every date a violation). A value
-        # comparable in NEITHER domain violates.
-        v_num = F.expr("try_cast(v_value as double)")
-        b_num = F.expr(f"try_cast({bound!r} as double)")
-        v_ts = F.expr("try_cast(v_value as timestamp)")
-        b_ts = F.expr(f"try_cast({bound!r} as timestamp)")
-        num_ops = {
-            ">=": v_num >= b_num, "<=": v_num <= b_num,
-            ">": v_num > b_num, "<": v_num < b_num,
-        }
-        ts_ops = {
-            ">=": v_ts >= b_ts, "<=": v_ts <= b_ts,
-            ">": v_ts > b_ts, "<": v_ts < b_ts,
-        }
-        # the temporal branch requires BOTH sides non-numeric (Spark would
-        # otherwise parse a bare '18' as year-18), mixing domains violates
-        cmp_col = F.when(
-            v_num.isNotNull() & b_num.isNotNull(), num_ops[cmp_ok]
-        ).otherwise(
-            F.when(
-                v_num.isNull() & b_num.isNull()
-                & v_ts.isNotNull() & b_ts.isNotNull(),
-                ts_ops[cmp_ok],
-            )
-        )
-        ok = (
-            (F.col("v_kind") == KIND_LITERAL)
-            & cmp_col.isNotNull() & cmp_col
-        )
-        results.append(
-            present.filter(~ok).select(
-                *_result_row(
-                    F.col("focus"), c.path, F.col("v_value"), c.shape_id, comp,
-                    _message(c, comp, f"Value is not {cmp_ok} {bound}"),
-                    c.severity, F.col("part_id"), *_vk(),
-                )
-            )
-        )
-
-    if c.min_length is not None:
-        comp = SH + "MinLengthConstraintComponent"
-        # W3C SHACL §4.4.1: string form of the value node; bnodes always fail
-        results.append(
-            present.filter(
-                (F.col("v_kind") == "bnode")
-                | (F.length(F.col("v_value")) < c.min_length)
-            ).select(
-                *_result_row(
-                    F.col("focus"), c.path, F.col("v_value"), c.shape_id, comp,
-                    _message(c, comp, f"Value has less than {c.min_length} characters"),
-                    c.severity, F.col("part_id"), *_vk(),
-                )
-            )
-        )
-
-    if c.max_length is not None:
-        comp = SH + "MaxLengthConstraintComponent"
-        results.append(
-            present.filter(
-                (F.col("v_kind") == "bnode")
-                | (F.length(F.col("v_value")) > c.max_length)
-            ).select(
-                *_result_row(
-                    F.col("focus"), c.path, F.col("v_value"), c.shape_id, comp,
-                    _message(c, comp, f"Value has more than {c.max_length} characters"),
-                    c.severity, F.col("part_id"), *_vk(),
-                )
-            )
-        )
-
-    if c.in_values is not None:
-        comp = SH + "InConstraintComponent"
-        # RDF term identity (kind + lexical + effective datatype + lang):
-        # plain literals ≡ xsd:string, lang-tagged ≡ rdf:langString (RDF 1.1)
-        allowed_keys = [_term_key_py(*t) for t in (c.in_terms or [])]
-        vkey = _term_key_col(
-            F.col("v_kind"), F.col("v_value"), F.col("v_datatype"), F.col("v_lang")
-        )
-        results.append(
-            present.filter(~vkey.isin(allowed_keys)).select(
-                *_result_row(
-                    F.col("focus"), c.path, F.col("v_value"), c.shape_id, comp,
-                    _message(c, comp, "Value is not in the allowed list"),
-                    c.severity, F.col("part_id"), *_vk(),
-                )
-            )
-        )
-
-    if c.has_value is not None:
-        comp = SH + "HasValueConstraintComponent"
-        # one result per FOCUS node whose value set lacks the required
-        # value (RDF term identity) — anti join against the matching values
-        if c.has_value_term is not None:
-            hv_key = _term_key_py(*c.has_value_term)
-            vkey = _term_key_col(
-                F.col("v_kind"), F.col("v_value"), F.col("v_datatype"), F.col("v_lang")
-            )
-            matched = present.filter(vkey == hv_key).select("focus")
-        else:
-            matched = present.filter(F.col("v_value") == c.has_value).select("focus")
-        results.append(
-            focus.join(maybe_broadcast(matched, is_small(focus)), on="focus", how="left_anti")
-            .select(
-                *_result_row(
-                    F.col("focus"), c.path, F.lit(None).cast("string"),
-                    c.shape_id, comp,
-                    _message(c, comp, f"Value {c.has_value} is required"),
-                    c.severity, F.col("part_id"),
-                )
-            )
-        )
-
-    if c.pattern is not None:
-        comp = SH + "PatternConstraintComponent"
-        # XPath flags -> Java embedded flags (SURVEY.md §7 hard part (c)).
-        pattern = c.pattern
-        if c.flags:
-            java_flags = "".join(ch for ch in c.flags if ch in "imsxuU")
-            if java_flags:
-                pattern = f"(?{java_flags}){pattern}"
-        # W3C SHACL §4.4.3: IRIs/literals are matched on their string form;
-        # blank nodes always fail sh:pattern.
-        results.append(
-            present.filter(
-                (F.col("v_kind") == "bnode") | ~F.col("v_value").rlike(pattern)
-            ).select(
-                *_result_row(
-                    F.col("focus"),
-                    c.path,
-                    F.col("v_value"),
-                    c.shape_id,
-                    comp,
-                    _message(c, comp, f"Value does not match pattern {c.pattern}"),
-                    c.severity,
-                    F.col("part_id"), *_vk(),
-                )
-            )
-        )
-
-    if c.language_in is not None:
-        comp = SH + "LanguageInConstraintComponent"
-        tags = [t.lower() for t in c.language_in]
-        lang = F.lower(F.coalesce(F.col("v_lang"), F.lit("")))
-        # W3C SHACL §4.5.3 / RFC 4647 basic filtering: each allowed tag is
-        # a RANGE — the value's tag must equal it or extend it with more
-        # subtags ('en' accepts 'en-GB'; 'en-GB' does NOT accept 'en-US'
-        # or bare 'en').
-        tag_ok = F.lit(False)
-        for t in tags:
-            tag_ok = tag_ok | (lang == t) | lang.startswith(t + "-")
-        ok = (F.col("v_kind") == KIND_LITERAL) & (F.col("v_lang").isNotNull()) & tag_ok
-        results.append(
-            present.filter(~ok).select(
-                *_result_row(
-                    F.col("focus"), c.path, F.col("v_value"), c.shape_id, comp,
-                    _message(c, comp, "Value has no language tag from the allowed list"),
-                    c.severity, F.col("part_id"), *_vk(),
-                )
-            )
-        )
-
+    `focus` is DataFrame[focus, part_id]; `data` is the triples table;
+    `present` is the constraint's values (_path_values).
+    `shape_map`/`max_depth`/`depth` drive sh:node shape-to-shape
+    recursion. Returns a list of result DataFrames with RESULT_SCHEMA
+    columns.
+    """
+    results: list[DataFrame] = []
     if c.unique_lang:
         comp = SH + "UniqueLangConstraintComponent"
         dup = (
@@ -1697,8 +1557,8 @@ def evaluate_constraint(
         paired = present.join(_other_vals(pred), on="focus")
         # numeric-aware comparison: numbers compare numerically, otherwise
         # lexical string order (try_cast stays ANSI-safe)
-        a_num = F.expr("try_cast(v_value as double)")
-        b_num = F.expr("try_cast(v2 as double)")
+        a_num = F.col("v_value").try_cast("double")
+        b_num = F.col("v2").try_cast("double")
         if op == "<":
             ok = F.when(
                 a_num.isNotNull() & b_num.isNotNull(), a_num < b_num
@@ -1930,435 +1790,166 @@ def evaluate_constraint(
     return results
 
 
-# ---------------------------------------------------------- batched path
-# Catalogs with MANY property shapes (50-200 constraints is a normal
-# enterprise shapes graph) pay ~0.4 s of Catalyst analysis per constraint
-# when each gets its own plan — a 200-constraint catalog spent >2 min just
-# BUILDING plans. Above this threshold, simple-path count/value constraints
-# are evaluated through ONE constraint-table-driven plan per constraint
-# TYPE: the (tiny) compiled constraint table broadcasts, the data joins it
-# once, and per-constraint parameters become columns. Per-constraint plans
-# remain for complex paths / shape refs / pair constraints.
-_BATCH_THRESHOLD = 16
-
-
-def _is_batchable(c: PropertyConstraint) -> bool:
-    return (
-        c.path is not None
-        and not (c.inverse or c.seq_path or c.alt_path or c.closure_kind)
-        and c.path_expr is None
-        and c.node_ref is None and c.not_ref is None
-        and not c.or_refs and not c.and_refs and not c.xone_refs
-        and c.qualified_ref is None
-        and c.equals_ is None and c.disjoint is None
-        and c.less_than is None and c.less_than_eq is None
-        and not c.unique_lang
+def _table_rows(
+    src: DataFrame, component: Column, default_message: Column, with_value: bool
+) -> DataFrame:
+    """RESULT_SCHEMA rows from constraint-table columns; `with_value`
+    reports the offending value node, else the focus node fails as a
+    whole."""
+    none = F.lit(None).cast("string")
+    return src.select(
+        F.col("focus").alias("focusNode"),
+        F.col("path").alias("resultPath"),
+        (F.col("v_value") if with_value else none).alias("value"),
+        F.col("shape_id").alias("sourceShape"),
+        component.alias("sourceConstraintComponent"),
+        F.coalesce(F.col("message"), default_message).alias("resultMessage"),
+        F.col("severity").alias("resultSeverity"),
+        F.col("part_id"),
+        (F.col("v_kind") if with_value else none).alias("value_kind"),
+        (F.col("v_datatype") if with_value else none).alias("value_datatype"),
     )
 
 
-def _evaluate_simple_batch(
-    spark: SparkSession,
+def _failing(src: DataFrame, comps: list[_Component], with_value: bool) -> DataFrame:
+    """One result per (row of `src`, component it fails): every component
+    is checked in the same pass over `src`."""
+    fails = [F.col(comp.param).isNotNull() & comp.fail(F.col) for comp in comps]
+    if len(comps) == 1:  # the common single-component shape needs no array
+        return _table_rows(
+            src.filter(fails[0]), F.lit(comps[0].iri), comps[0].message(F.col), with_value
+        )
+    checks = F.array(*[
+        F.when(fail, F.struct(F.lit(comp.iri).alias("iri"), comp.message(F.col).alias("msg")))
+        for comp, fail in zip(comps, fails)
+    ])
+    failed = src.select("*", F.explode(checks).alias("_f")).filter(F.col("_f").isNotNull())
+    return _table_rows(failed, F.col("_f.iri"), F.col("_f.msg"), with_value)
+
+
+def _evaluate_values(
     data: DataFrame,
     focus: DataFrame,
     constraints: list[PropertyConstraint],
-    closure: dict[str, set[str]] | None = None,
+    present_of: Callable[[int], DataFrame],
+    closure: dict[str, set[str]],
 ) -> list[DataFrame]:
-    """Evaluate simple-path count/value constraints via a broadcast
-    constraint table — a FIXED number of plans regardless of how many
-    constraints the catalog declares."""
-    ct_rows = []
-    for c in constraints:
-        ct_rows.append(
-            (
-                c.path, c.shape_id, c.severity, c.message,
-                c.min_count, c.max_count,
-                c.datatype, _LEXICAL_RE.get(c.datatype) if c.datatype else None,
-                _NODEKIND_ALLOWED.get(c.node_kind, [KIND_IRI]) if c.node_kind else None,
-                c.node_kind,
-                _java_pattern(c) if c.pattern is not None else None,
-                c.pattern,
-                c.min_length, c.max_length,
-                c.min_inclusive, c.max_inclusive, c.min_exclusive, c.max_exclusive,
-                c.class_,
-                [_term_key_py(*t) for t in c.in_terms] if c.in_terms is not None else None,
-                _term_key_py(*c.has_value_term) if c.has_value_term is not None else None,
-                c.has_value,
-                [t.lower() for t in c.language_in] if c.language_in is not None else None,
+    """S5–S11 — every value-local component (_COMPONENTS) of a shape's
+    constraints through ONE constraint-table plan: at most one result
+    frame per component scope in use plus one for sh:class instances,
+    whatever the number of constraints, so Catalyst analyses a few plans
+    per shape rather than one per constraint.
+
+    The value rows: simple paths share one `p IN (...)` slice keyed by
+    predicate; every other path kind, and a node-shape self constraint,
+    adds its own values (`present_of(i)` for constraint i) under its own
+    key. The constraint parameters are ONE folded map literal from key to
+    constraint-table rows; `inline(element_at(map, key))` pairs each value
+    with its constraints, so no table is joined."""
+    by_key: dict[str, list[dict]] = {}
+    parts: list[DataFrame] = []
+    simple: list[str] = []
+    for i, c in enumerate(constraints):
+        spec = _spec(c, cid=i)
+        if all(spec[comp.param] is None for comp in _COMPONENTS):
+            continue
+        if _is_simple_path(c):
+            key = c.path
+            if key not in by_key:
+                simple.append(key)
+        else:
+            key = f"<{i}>"  # '<' never occurs in an IRI, so no predicate is this key
+            parts.append(
+                present_of(i).select("focus", F.lit(key).alias("key"), *_PATH_TERM, "part_id")
             )
-        )
-    ct_schema = (
-        "p string, shape_id string, severity string, message string, "
-        "min_count int, max_count int, datatype string, lex_re string, "
-        "nk_allowed array<string>, node_kind string, pattern_java string, "
-        "pattern_raw string, min_len int, max_len int, "
-        "min_inc string, max_inc string, min_exc string, max_exc string, "
-        "class string, in_keys array<string>, hv_key string, hv_display string, "
-        "lang_tags array<string>"
+        by_key.setdefault(key, []).append(spec)
+    if not by_key:
+        return []
+    if simple:
+        sliced = data.filter(F.col("p").isin(simple))
+        parts.append(_with_focus(_edges(sliced, F.col("p").alias("key")), focus))
+    values = parts[0]
+    for df in parts[1:]:
+        values = values.unionByName(df)
+    specs = [s for rows in by_key.values() for s in rows]
+    row = "struct<" + ", ".join(
+        f"{k}: {t}" for k, t in _SPEC_TYPES.items()
+        if k in _ROW_FIELDS or any(s[k] is not None for s in specs)
+    ) + ">"
+    table = _json_lit(by_key, f"map<string, array<{row}>>")
+    vals = values.select(
+        "focus", "part_id", *_PATH_TERM, F.inline(F.element_at(table, F.col("key")))
     )
-    ct = F.broadcast(spark.createDataFrame(ct_rows, schema=ct_schema))
-    paths = sorted({c.path for c in constraints})
+
+    def used(scope: str) -> list[_Component]:
+        return [
+            comp for comp in _COMPONENTS
+            if comp.scope == scope and any(s[comp.param] is not None for s in specs)
+        ]
 
     small_focus = is_small(focus)
-    f = focus.withColumnRenamed("part_id", "f_part_id")
-    vals = (
-        data.filter(F.col("p").isin(paths))
-        .select(
-            F.col("s").alias("focus"), "p",
-            F.col("o_kind").alias("v_kind"),
-            F.col("o_value").alias("v_value"),
-            F.col("o_datatype").alias("v_datatype"),
-            F.col("o_lang").alias("v_lang"),
-            F.col("part_id").alias("v_part_id"),
-        )
-        .join(maybe_broadcast(f, small_focus), on="focus")
-        .withColumn("part_id", F.coalesce(F.col("f_part_id"), F.col("v_part_id")))
-        .drop("f_part_id", "v_part_id")
-        .join(ct, on="p")
-    )
 
-    def row(component: Column | str, message: Column, value: Column,
-            vk: Column, vd: Column, src: DataFrame, path_col: Column) -> DataFrame:
-        comp = F.lit(component) if isinstance(component, str) else component
-        return src.select(
-            F.col("focus").alias("focusNode"),
-            path_col.alias("resultPath"),
-            value.alias("value"),
-            F.col("shape_id").alias("sourceShape"),
-            comp.alias("sourceConstraintComponent"),
-            F.coalesce(F.col("message"), message).alias("resultMessage"),
-            F.col("severity").alias("resultSeverity"),
-            F.col("part_id").alias("part_id"),
-            vk.alias("value_kind"),
-            vd.alias("value_datatype"),
+    def lacking(rows: list[dict], qualifying: DataFrame) -> DataFrame:
+        """(focus node, constraint of `rows`) pairs with no row in
+        `qualifying` — the focus-level failures no value row can show. The
+        hint follows the focus gate: `qualifying` is bounded by the values
+        of the focus set."""
+        pairs = focus.select(
+            "focus", "part_id", F.inline(_json_lit(rows, f"array<{row}>"))
+        )
+        return pairs.join(
+            maybe_broadcast(qualifying.select("focus", "cid"), small_focus),
+            on=["focus", "cid"], how="left_anti",
         )
 
     out: list[DataFrame] = []
-    vnull = F.lit(None).cast("string")
-
-    # ---- counts: ONE aggregation for every min/max constraint
-    if any(c.min_count is not None or c.max_count is not None for c in constraints):
-        counts = vals.groupBy(
-            "focus", "p", "shape_id", "severity", "message",
-            "min_count", "max_count",
-        ).agg(F.count(F.lit(1)).alias("cnt"), F.min("part_id").alias("part_id"))
-        out.append(
-            row(
-                SH + "MinCountConstraintComponent",
-                F.concat(F.lit("Less than "), F.col("min_count").cast("string"),
-                         F.lit(" values on "), F.col("p")),
-                vnull, vnull, vnull,
-                counts.filter(
-                    F.col("min_count").isNotNull()
-                    & (F.col("cnt") < F.col("min_count"))
-                ),
-                F.col("p"),
-            )
+    value_comps = used("value")
+    if value_comps:
+        out.append(_failing(vals, value_comps, with_value=True))
+    count_comps = used("count")
+    if count_comps:
+        params = [comp.param for comp in count_comps]
+        keys = ["focus", *_ROW_FIELDS, *params]
+        counts = (
+            vals.filter(reduce(operator.or_, [F.col(x).isNotNull() for x in params]))
+            .groupBy(*keys)
+            .agg(F.count(F.lit(1)).alias("cnt"), F.min("part_id").alias("part_id"))
         )
-        out.append(
-            row(
-                SH + "MaxCountConstraintComponent",
-                F.concat(F.lit("More than "), F.col("max_count").cast("string"),
-                         F.lit(" values on "), F.col("p")),
-                vnull, vnull, vnull,
-                counts.filter(
-                    F.col("max_count").isNotNull()
-                    & (F.col("cnt") > F.col("max_count"))
-                ),
-                F.col("p"),
-            )
+        needs_one = [s for s in specs if (s["min_count"] or 0) > 0]
+        if needs_one:
+            # a focus node with no value has no row to count
+            zero = lacking(needs_one, vals.filter(F.col("min_count") > 0))
+            counts = counts.unionByName(zero.select(*keys, F.lit(0).alias("cnt"), "part_id"))
+        out.append(_failing(counts, count_comps, with_value=False))
+    for comp in used("focus"):
+        switched = F.col(comp.param).isNotNull()
+        missing = lacking(
+            [s for s in specs if s[comp.param] is not None],
+            vals.filter(switched & ~comp.fail(F.col)),
         )
-        # zero-value recovery for minCount: focus × (tiny) constraint rows
-        # via explode of a literal array — no join, no cartesian node
-        min_specs = [
-            (c.path, c.shape_id, c.severity, c.message, c.min_count)
-            for c in constraints
-            if c.min_count is not None and c.min_count > 0
-        ]
-        if min_specs:
-            spec_arr = F.array(*[
-                F.struct(
-                    F.lit(p0).alias("p"), F.lit(sid).alias("shape_id"),
-                    F.lit(sev).alias("severity"),
-                    F.lit(msg).cast("string").alias("message"),
-                    F.lit(mc).alias("min_count"),
+        out.append(_table_rows(missing, F.lit(comp.iri), comp.message(F.col), with_value=False))
+    if any(s["class_"] is not None for s in specs):
+        # IRI values need an rdf:type triple naming a member of the class's
+        # subclass closure: ONE anti join against (class, instance) pairs
+        member_of: dict[str, list[str]] = {}
+        for cls in sorted({s["class_"] for s in specs if s["class_"] is not None}):
+            for member in sorted(closure.get(cls, {cls})):
+                member_of.setdefault(member, []).append(cls)
+        instances = data.filter(
+            (F.col("p") == RDF_TYPE) & F.col("o_value").isin(sorted(member_of))
+        ).select(
+            F.col("s").alias("v_value"),
+            F.explode(
+                F.element_at(
+                    _json_lit(member_of, "map<string, array<string>>"), F.col("o_value")
                 )
-                for p0, sid, sev, msg, mc in min_specs
-            ])
-            zero = (
-                focus.withColumn("_c", F.explode(spec_arr))
-                .select(
-                    "focus", "part_id",
-                    F.col("_c.p").alias("p"),
-                    F.col("_c.shape_id").alias("shape_id"),
-                    F.col("_c.severity").alias("severity"),
-                    F.col("_c.message").alias("message"),
-                    F.col("_c.min_count").alias("min_count"),
-                )
-                .join(
-                    maybe_broadcast(
-                        vals.select("focus", "p", "shape_id").distinct(),
-                        small_focus,
-                    ),
-                    on=["focus", "p", "shape_id"],
-                    how="left_anti",
-                )
-            )
-            out.append(
-                row(
-                    SH + "MinCountConstraintComponent",
-                    F.concat(F.lit("Less than "), F.col("min_count").cast("string"),
-                             F.lit(" values on "), F.col("p")),
-                    vnull, vnull, vnull, zero, F.col("p"),
-                )
-            )
-
-    vk = (F.col("v_kind"), F.col("v_datatype"))
-    vv = F.col("v_value")
-
-    # ---- datatype
-    if any(c.datatype is not None for c in constraints):
-        eff = _effective_datatype(F.col("v_kind"), F.col("v_datatype"), F.col("v_lang"))
-        bad = (F.col("v_kind") != KIND_LITERAL) | (eff != F.col("datatype")) | (
-            F.col("lex_re").isNotNull() & ~F.expr("rlike(v_value, lex_re)")
+            ).alias("class_"),
         )
+        untyped = vals.filter(
+            F.col("class_").isNotNull() & (F.col("v_kind") == KIND_IRI)
+        ).join(instances, on=["class_", "v_value"], how="left_anti")
         out.append(
-            row(
-                SH + "DatatypeConstraintComponent",
-                F.concat(F.lit("Value does not have datatype "), F.col("datatype")),
-                vv, *vk,
-                vals.filter(F.col("datatype").isNotNull() & bad),
-                F.col("p"),
-            )
-        )
-
-    # ---- nodeKind
-    if any(c.node_kind is not None for c in constraints):
-        out.append(
-            row(
-                SH + "NodeKindConstraintComponent",
-                F.concat(F.lit("Value does not have node kind "), F.col("node_kind")),
-                vv, *vk,
-                vals.filter(
-                    F.col("nk_allowed").isNotNull()
-                    & ~F.array_contains(F.col("nk_allowed"), F.col("v_kind"))
-                ),
-                F.col("p"),
-            )
-        )
-
-    # ---- pattern (column-valued regex: rlike(left, right))
-    if any(c.pattern is not None for c in constraints):
-        out.append(
-            row(
-                SH + "PatternConstraintComponent",
-                F.concat(F.lit("Value does not match pattern "), F.col("pattern_raw")),
-                vv, *vk,
-                vals.filter(
-                    F.col("pattern_java").isNotNull()
-                    & ((F.col("v_kind") == "bnode")
-                       | ~F.expr("rlike(v_value, pattern_java)"))
-                ),
-                F.col("p"),
-            )
-        )
-
-    # ---- lengths
-    if any(c.min_length is not None for c in constraints):
-        out.append(
-            row(
-                SH + "MinLengthConstraintComponent",
-                F.concat(F.lit("Value has less than "),
-                         F.col("min_len").cast("string"), F.lit(" characters")),
-                vv, *vk,
-                vals.filter(
-                    F.col("min_len").isNotNull()
-                    & ((F.col("v_kind") == "bnode")
-                       | (F.length(vv) < F.col("min_len")))
-                ),
-                F.col("p"),
-            )
-        )
-    if any(c.max_length is not None for c in constraints):
-        out.append(
-            row(
-                SH + "MaxLengthConstraintComponent",
-                F.concat(F.lit("Value has more than "),
-                         F.col("max_len").cast("string"), F.lit(" characters")),
-                vv, *vk,
-                vals.filter(
-                    F.col("max_len").isNotNull()
-                    & ((F.col("v_kind") == "bnode")
-                       | (F.length(vv) > F.col("max_len")))
-                ),
-                F.col("p"),
-            )
-        )
-
-    # ---- value ranges (numeric, then temporal; incomparable violates)
-    for bound_col, comp_name, cmp_ok in (
-        ("min_inc", "MinInclusiveConstraintComponent", ">="),
-        ("max_inc", "MaxInclusiveConstraintComponent", "<="),
-        ("min_exc", "MinExclusiveConstraintComponent", ">"),
-        ("max_exc", "MaxExclusiveConstraintComponent", "<"),
-    ):
-        if not any(getattr(c, {
-            "min_inc": "min_inclusive", "max_inc": "max_inclusive",
-            "min_exc": "min_exclusive", "max_exc": "max_exclusive",
-        }[bound_col]) is not None for c in constraints):
-            continue
-        v_num = F.expr("try_cast(v_value as double)")
-        b_num = F.expr(f"try_cast({bound_col} as double)")
-        v_ts = F.expr("try_cast(v_value as timestamp)")
-        b_ts = F.expr(f"try_cast({bound_col} as timestamp)")
-        num_ops = {">=": v_num >= b_num, "<=": v_num <= b_num,
-                   ">": v_num > b_num, "<": v_num < b_num}
-        ts_ops = {">=": v_ts >= b_ts, "<=": v_ts <= b_ts,
-                  ">": v_ts > b_ts, "<": v_ts < b_ts}
-        cmp_col = F.when(
-            v_num.isNotNull() & b_num.isNotNull(), num_ops[cmp_ok]
-        ).otherwise(
-            F.when(
-                v_num.isNull() & b_num.isNull()
-                & v_ts.isNotNull() & b_ts.isNotNull(),
-                ts_ops[cmp_ok],
-            )
-        )
-        ok = (F.col("v_kind") == KIND_LITERAL) & cmp_col.isNotNull() & cmp_col
-        out.append(
-            row(
-                SH + comp_name,
-                F.concat(F.lit(f"Value is not {cmp_ok} "), F.col(bound_col)),
-                vv, *vk,
-                vals.filter(F.col(bound_col).isNotNull() & ~ok),
-                F.col("p"),
-            )
-        )
-
-    # ---- sh:in (term identity via precomputed key arrays)
-    if any(c.in_values is not None for c in constraints):
-        vkey = _vterm_key()
-        out.append(
-            row(
-                SH + "InConstraintComponent",
-                F.lit("Value is not in the allowed list"),
-                vv, *vk,
-                vals.filter(
-                    F.col("in_keys").isNotNull()
-                    & ~F.array_contains(F.col("in_keys"), vkey)
-                ),
-                F.col("p"),
-            )
-        )
-
-    # ---- sh:hasValue: per-FOCUS anti join (explode the tiny spec list)
-    hv_specs = [
-        (c.path, c.shape_id, c.severity, c.message,
-         _term_key_py(*c.has_value_term) if c.has_value_term is not None else None,
-         c.has_value)
-        for c in constraints
-        if c.has_value is not None
-    ]
-    if hv_specs:
-        vkey = _vterm_key()
-        matched = (
-            vals.filter(F.col("hv_key").isNotNull() & (vkey == F.col("hv_key")))
-            .select("focus", "p", "shape_id")
-            .distinct()
-        )
-        hv_arr = F.array(*[
-            F.struct(
-                F.lit(p0).alias("p"), F.lit(sid).alias("shape_id"),
-                F.lit(sev).alias("severity"),
-                F.lit(msg).cast("string").alias("message"),
-                F.lit(disp).alias("hv_display"),
-            )
-            for p0, sid, sev, msg, _k, disp in hv_specs
-        ])
-        missing = (
-            focus.withColumn("_c", F.explode(hv_arr))
-            .select(
-                "focus", "part_id",
-                F.col("_c.p").alias("p"),
-                F.col("_c.shape_id").alias("shape_id"),
-                F.col("_c.severity").alias("severity"),
-                F.col("_c.message").alias("message"),
-                F.col("_c.hv_display").alias("hv_display"),
-            )
-            .join(
-                maybe_broadcast(matched, small_focus),
-                on=["focus", "p", "shape_id"], how="left_anti",
-            )
-        )
-        out.append(
-            row(
-                SH + "HasValueConstraintComponent",
-                F.concat(F.lit("Value "), F.col("hv_display"),
-                         F.lit(" is required")),
-                vnull, vnull, vnull, missing, F.col("p"),
-            )
-        )
-
-    # ---- sh:languageIn (RFC 4647 ranges over a tag array column)
-    if any(c.language_in is not None for c in constraints):
-        lang = F.lower(F.coalesce(F.col("v_lang"), F.lit("")))
-        tag_ok = F.exists(
-            F.col("lang_tags"),
-            lambda t: (lang == t) | lang.startswith(F.concat(t, F.lit("-"))),
-        )
-        ok = (
-            (F.col("v_kind") == KIND_LITERAL)
-            & F.col("v_lang").isNotNull() & tag_ok
-        )
-        out.append(
-            row(
-                SH + "LanguageInConstraintComponent",
-                F.lit("Value has no language tag from the allowed list"),
-                vv, *vk,
-                vals.filter(F.col("lang_tags").isNotNull() & ~ok),
-                F.col("p"),
-            )
-        )
-
-    # ---- sh:class: ONE anti join against the (class, instance) relation.
-    # The (constraint-class -> closure-member) map is tiny and broadcast;
-    # instances of any closure member become (constraint_class, instance)
-    # pairs; IRI values missing their pair violate, literals always do.
-    if any(c.class_ is not None for c in constraints):
-        cls_pairs = sorted({
-            (c.class_, member)
-            for c in constraints
-            if c.class_ is not None
-            for member in (closure or {}).get(c.class_, {c.class_})
-        })
-        cls_map = F.broadcast(
-            spark.createDataFrame(cls_pairs, schema="class string, member string")
-        )
-        instances = (
-            data.filter(F.col("p") == RDF_TYPE)
-            .select(F.col("s").alias("v_value"), F.col("o_value").alias("member"))
-            .join(cls_map, on="member")
-            .select("class", "v_value")
-            .distinct()
-        )
-        cls_vals = vals.filter(F.col("class").isNotNull())
-        cls_msg = F.concat(
-            F.lit("Value is not an instance of "), F.col("class")
-        )
-        out.append(
-            row(
-                SH + "ClassConstraintComponent", cls_msg, vv, *vk,
-                cls_vals.filter(F.col("v_kind") != KIND_IRI),
-                F.col("p"),
-            )
-        )
-        out.append(
-            row(
-                SH + "ClassConstraintComponent", cls_msg, vv, *vk,
-                cls_vals.filter(F.col("v_kind") == KIND_IRI).join(
-                    instances, on=["class", "v_value"], how="left_anti"
-                ),
-                F.col("p"),
-            )
+            _table_rows(untyped, F.lit(_CLASS.iri), _CLASS.message(F.col), with_value=True)
         )
     return out
 
@@ -2381,24 +1972,24 @@ def _evaluate_shape(
         # W3C SHACL §2.1.3.2: a deactivated shape has NO effect — every
         # focus node conforms, including when reached via shape refs
         return out
-    for sc in shape.self_constraints:
-        out.extend(
-            evaluate_constraint(
-                spark, data, focus, sc, closure, shape_map, max_depth, depth
+    constraints = shape.self_constraints + shape.properties
+    presents: dict[int, DataFrame] = {}
+
+    def present_of(i: int) -> DataFrame:
+        # one values plan per constraint, shared by both evaluators
+        if i not in presents:
+            presents[i] = _path_values(data, focus, constraints[i])
+        return presents[i]
+
+    out.extend(_evaluate_values(data, focus, constraints, present_of, closure))
+    for i, c in enumerate(constraints):
+        if _needs_own_plan(c):
+            out.extend(
+                evaluate_constraint(
+                    spark, data, focus, c, present_of(i), closure, shape_map,
+                    max_depth, depth,
+                )
             )
-        )
-    batchable = [pc for pc in shape.properties if _is_batchable(pc)]
-    per_constraint = shape.properties
-    if len(batchable) >= _BATCH_THRESHOLD:
-        out.extend(_evaluate_simple_batch(spark, data, focus, batchable, closure))
-        batch_ids = {id(pc) for pc in batchable}
-        per_constraint = [pc for pc in shape.properties if id(pc) not in batch_ids]
-    for pc in per_constraint:
-        out.extend(
-            evaluate_constraint(
-                spark, data, focus, pc, closure, shape_map, max_depth, depth
-            )
-        )
     if shape.closed:
         # sh:closed — one result per (focus, value) whose predicate is
         # neither a declared simple property path nor ignored
@@ -2409,8 +2000,7 @@ def _evaluate_shape(
         )
         # sh:closed needs EVERY predicate, so it joins the big table with
         # the focus set as the broadcast build side of an INNER join (the
-        # supported broadcast shape; see the S5 note in
-        # evaluate_constraint). Gated like S5.
+        # supported broadcast shape; see _with_focus). Gated like S5.
         extra = (
             data.select(
                 F.col("s").alias("focus"), "p",

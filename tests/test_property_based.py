@@ -152,34 +152,63 @@ def test_count_constraints_match_python_reference(spark, case):
     assert got == expected
 
 
-# ----------------------------------- batched vs per-constraint (randomized)
+# ------------------------- value components vs a Python oracle (randomized)
+_SAMPLE_VALUES = ["7", "42", "abc", "de", "2020-01-01", ""]
+_AS_DOUBLE = {"7": 7.0, "42": 42.0}  # the samples Spark's try_cast reads as numbers
+
+
 @st.composite
 def _random_catalog(draw):
-    """Random data values + a random 18-constraint catalog (above the batch
-    threshold) mixing count/length/datatype/range constraints."""
+    """Random xsd:string values on ex:p + a random catalog of 1-18
+    constraints mixing count/length/datatype/range components."""
     n_subj = draw(st.integers(min_value=1, max_value=5))
-    data = {}
-    for i in range(n_subj):
-        vals = draw(
-            st.lists(
-                st.sampled_from(["7", "42", "abc", "de", "2020-01-01", ""]),
-                min_size=0, max_size=3,
-            )
+    data = {
+        f"urn:s{i}": draw(st.lists(st.sampled_from(_SAMPLE_VALUES), max_size=3, unique=True))
+        for i in range(n_subj)
+    }
+    n_constraints = draw(st.integers(min_value=1, max_value=18))
+    constraints = [
+        (
+            j,
+            draw(st.sampled_from(["min", "max", "minlen", "maxlen", "dt", "rng"])),
+            draw(st.integers(min_value=0, max_value=3)),
         )
-        data[f"urn:s{i}"] = vals
-    constraints = []
-    for j in range(18):
-        kind = draw(st.sampled_from(["min", "max", "minlen", "maxlen", "dt", "rng"]))
-        n = draw(st.integers(min_value=0, max_value=3))
-        constraints.append((j, kind, n))
+        for j in range(n_constraints)
+    ]
     return data, constraints
+
+
+def _oracle(data_map, constraints):
+    """W3C SHACL §4.1.2, §4.2, §4.3.2 and §4.4.1-2 over the generated
+    catalog, in plain Python: (focus, shape, component, value, message)."""
+    out = set()
+    for s, vals in data_map.items():
+        for j, kind, n in constraints:
+            sid = f"{EX}S-p{j}"
+
+            def hit(comp, value, msg):
+                out.add((s, sid, SH + comp + "ConstraintComponent", value, msg))
+
+            if kind == "min" and len(vals) < n:
+                hit("MinCount", "", f"Less than {n} values on {EX}p")
+            if kind == "max" and len(vals) > n:
+                hit("MaxCount", "", f"More than {n} values on {EX}p")
+            for v in vals:
+                if kind == "minlen" and len(v) < n:
+                    hit("MinLength", v, f"Value has less than {n} characters")
+                if kind == "maxlen" and len(v) > n:
+                    hit("MaxLength", v, f"Value has more than {n} characters")
+                if kind == "dt":  # every value is an xsd:string
+                    hit("Datatype", v, f"Value does not have datatype {XSD_INTEGER}")
+                # a non-numeric value is not comparable with a numeric bound
+                if kind == "rng" and not _AS_DOUBLE.get(v, float("-inf")) >= 10 * n:
+                    hit("MinInclusive", v, f"Value is not >= {10 * n}")
+    return out
 
 
 @given(_random_catalog())
 @settings(max_examples=5, deadline=None)
-def test_batched_equals_per_constraint_randomized(spark, case):
-    import cmem_plugin_pyshacl_spark.plans.shacl as shacl_mod
-
+def test_value_components_match_python_oracle_randomized(spark, case):
     data_map, constraints = case
     rows = []
     for s, vals in data_map.items():
@@ -191,44 +220,29 @@ def test_batched_equals_per_constraint_randomized(spark, case):
         (EX + "S", RDF_TYPE, iri(SH + "NodeShape")),
         (EX + "S", SH + "targetClass", iri(EX + "T")),
     ]
+    params = {
+        "min": "minCount", "max": "maxCount", "minlen": "minLength",
+        "maxlen": "maxLength", "rng": "minInclusive",
+    }
     for j, kind, n in constraints:
         pid = f"{EX}S-p{j}"
         shape_rows += [
             (EX + "S", SH + "property", iri(pid)),
             (pid, SH + "path", iri(EX + "p")),
         ]
-        if kind == "min":
-            shape_rows.append((pid, SH + "minCount", lit_typed(str(n), XSD_INTEGER)))
-        elif kind == "max":
-            shape_rows.append((pid, SH + "maxCount", lit_typed(str(n), XSD_INTEGER)))
-        elif kind == "minlen":
-            shape_rows.append((pid, SH + "minLength", lit_typed(str(n), XSD_INTEGER)))
-        elif kind == "maxlen":
-            shape_rows.append((pid, SH + "maxLength", lit_typed(str(n), XSD_INTEGER)))
-        elif kind == "dt":
+        if kind == "dt":
             shape_rows.append((pid, SH + "datatype", iri(XSD_INTEGER)))
         else:
-            shape_rows.append((pid, SH + "minInclusive", lit_typed(str(10 * n), XSD_INTEGER)))
+            bound = str(10 * n if kind == "rng" else n)
+            shape_rows.append((pid, SH + params[kind], lit_typed(bound, XSD_INTEGER)))
     shapes = triples_from_rows(spark, shape_rows)
-
-    def run():
-        res = validate(spark, data, shapes)
-        return sorted(
-            tuple("" if v is None else v for v in (
-                r.focusNode, r.sourceShape, r.sourceConstraintComponent,
-                r.value, r.resultMessage,
-            ))
-            for r in res.collect()
-        )
-
-    batched = run()
-    saved = shacl_mod._BATCH_THRESHOLD
-    shacl_mod._BATCH_THRESHOLD = 10_000
-    try:
-        per_constraint = run()
-    finally:
-        shacl_mod._BATCH_THRESHOLD = saved
-    assert batched == per_constraint
+    got = [
+        (r.focusNode, r.sourceShape, r.sourceConstraintComponent,
+         "" if r.value is None else r.value, r.resultMessage)
+        for r in validate(spark, data, shapes).collect()
+    ]
+    assert len(got) == len(set(got))  # one result per violation
+    assert set(got) == _oracle(data_map, constraints)
 
 
 # ------------------------------------------------- N-Quads round-trip (r4)

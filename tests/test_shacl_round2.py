@@ -348,6 +348,81 @@ def test_large_catalog_bounded_plan(spark):
     assert res.count() == 190
 
 
+def test_value_plans_do_not_grow_with_the_catalog(spark):
+    """One constraint-table plan evaluates every value-local component:
+    a shape yields as many result frames for 200 constraints as for one
+    (per component mix), not one plan per constraint."""
+    from cmem_plugin_pyshacl_spark.plans.shacl import _evaluate_shape, compile_shapes
+
+    data = triples_from_rows(
+        spark,
+        [("urn:a", RDF_TYPE, iri(EX + "T")),
+         ("urn:a", EX + "p0", ("v", "literal", XSD_STRING, None))],
+    )
+    focus = spark.createDataFrame([("urn:a", 0)], "focus string, part_id int")
+
+    def frames(n, mix):
+        rows = [(EX + "S", RDF_TYPE, iri(SH + "NodeShape"))]
+        for i in range(n):
+            pid = f"{EX}S-c{i}"
+            rows += [(EX + "S", SH + "property", iri(pid)),
+                     (pid, SH + "path", iri(EX + f"p{i % 10}")),
+                     (pid, SH + mix[i % len(mix)], lit_typed("1", XSD_INTEGER))]
+        (shape,) = compile_shapes(triples_from_rows(spark, rows)).shapes
+        return len(_evaluate_shape(spark, data, focus, shape, {}, {EX + "S": shape}, 15, 0))
+
+    counts_only = ["minCount"]
+    assert frames(1, counts_only) == frames(15, counts_only) == frames(200, counts_only)
+    mixed = ["minCount", "maxLength", "minLength"]
+    assert frames(3, mixed) == frames(15, mixed) == frames(200, mixed)
+
+
+def test_one_shape_mixes_path_kinds(spark):
+    """sh:minCount + sh:datatype on ex:p AND on [sh:inversePath ex:p], plus
+    a node-shape sh:in, in one shape: each result keeps its own
+    resultPath and sourceShape — the inverse values never mix with the
+    forward ones even though both paths name ex:p."""
+    data = triples_from_rows(
+        spark,
+        [
+            ("urn:a", RDF_TYPE, iri(EX + "T")),
+            ("urn:b", RDF_TYPE, iri(EX + "T")),
+            ("urn:c", RDF_TYPE, iri(EX + "T")),
+            ("urn:a", EX + "p", lit_typed("5", XSD_INTEGER)),
+            ("urn:x", EX + "p", iri("urn:a")),  # urn:a's one inverse value
+            ("urn:b", EX + "p", ("x", "literal", XSD_STRING, None)),
+        ],
+    )
+    rows = [
+        (EX + "S", RDF_TYPE, iri(SH + "NodeShape")),
+        (EX + "S", SH + "targetClass", iri(EX + "T")),
+        (EX + "S", SH + "in", iri("urn:l:0")),
+        (EX + "S", SH + "property", iri(EX + "S-fwd")),
+        (EX + "S-fwd", SH + "path", iri(EX + "p")),
+        (EX + "S", SH + "property", iri(EX + "S-inv")),
+        (EX + "S-inv", SH + "path", iri("urn:inv")),
+        ("urn:inv", SH + "inversePath", iri(EX + "p")),
+    ] + _rdf_list("l", [iri("urn:a")])
+    for pid in ("S-fwd", "S-inv"):
+        rows += [(EX + pid, SH + "minCount", lit_typed("1", XSD_INTEGER)),
+                 (EX + pid, SH + "datatype", iri(XSD_INTEGER))]
+    got = sorted(
+        (r.focusNode, r.resultPath or "", r.value or "", r.sourceShape,
+         r.sourceConstraintComponent.split("#")[1])
+        for r in validate(spark, data, triples_from_rows(spark, rows)).collect()
+    )
+    p = EX + "p"
+    assert got == sorted([
+        ("urn:a", p, "urn:x", EX + "S-inv", "DatatypeConstraintComponent"),
+        ("urn:b", p, "x", EX + "S-fwd", "DatatypeConstraintComponent"),
+        ("urn:b", p, "", EX + "S-inv", "MinCountConstraintComponent"),
+        ("urn:b", "", "urn:b", EX + "S", "InConstraintComponent"),
+        ("urn:c", p, "", EX + "S-fwd", "MinCountConstraintComponent"),
+        ("urn:c", p, "", EX + "S-inv", "MinCountConstraintComponent"),
+        ("urn:c", "", "urn:c", EX + "S", "InConstraintComponent"),
+    ])
+
+
 # ------------------------------------------------- nested path expressions
 def _nested_shape(spark, path_rows, extra):
     rows = [
@@ -547,12 +622,10 @@ def test_deactivated_shape_conforms_as_node_ref(spark):
     assert validate(spark, data, shapes(True)).count() == 0  # deactivated
 
 
-def test_batched_evaluator_matches_per_constraint(spark, monkeypatch):
-    """The constraint-table batched path must produce EXACTLY the same
-    result set as the per-constraint plans, across every batchable
-    component incl. custom messages and severities."""
-    import cmem_plugin_pyshacl_spark.plans.shacl as shacl_mod
-
+def test_value_components_expected_results(spark):
+    """Every value-local component through the constraint-table evaluator,
+    incl. custom messages and severities, yields EXACTLY the result set
+    the W3C SHACL spec prescribes for this fixture (each row annotated)."""
     data = triples_from_rows(
         spark,
         [
@@ -597,7 +670,7 @@ def test_batched_evaluator_matches_per_constraint(spark, monkeypatch):
         ("p8", EX + "seg", [(SH + "hasValue", ("GOLD", "literal", None, None))]),
         ("p9", EX + "label", [(SH + "languageIn", iri("urn:dll:0"))]),
     ]
-    # pad with extra absent-path constraints so the batch threshold triggers
+    # absent-path constraints: every focus node has zero values
     for i in range(14):
         specs.append((f"pad{i}", EX + f"absent{i}",
                       [(SH + "minCount", ("1", "literal", None, None))]))
@@ -610,19 +683,59 @@ def test_batched_evaluator_matches_per_constraint(spark, monkeypatch):
         rows += [(pid, pred, obj) for pred, obj in extras]
     shapes = triples_from_rows(spark, rows)
 
-    def run():
-        res = validate(spark, data, shapes)
-        return sorted(
-            tuple("" if v is None else v for v in (
-                r.focusNode, r.resultPath, r.value, r.sourceShape,
-                r.sourceConstraintComponent, r.resultMessage, r.resultSeverity,
-                r.value_kind, r.value_datatype,
-            ))
-            for r in res.collect()
-        )
+    got = sorted(
+        tuple("" if v is None else v for v in (
+            r.focusNode, r.resultPath, r.value, r.sourceShape,
+            r.sourceConstraintComponent, r.resultMessage, r.resultSeverity,
+            r.value_kind, r.value_datatype,
+        ))
+        for r in validate(spark, data, shapes).collect()
+    )
+    V, W = SH + "Violation", SH + "Warning"
+    lit = ("literal", XSD_STRING)
 
-    batched = run()
-    monkeypatch.setattr(shacl_mod, "_BATCH_THRESHOLD", 10_000)
-    per_constraint = run()
-    assert batched == per_constraint
-    assert len(batched) > 10  # the fixture actually violates plenty
+    def row(focus, path, value, sid, comp, msg, sev=V, term=("", "")):
+        return (focus, EX + path, value, f"{EX}S-{sid}",
+                SH + comp + "ConstraintComponent", msg, sev, *term)
+
+    age_msg = "age must be adult int"
+    expected = [
+        # sh:minCount 1 on a path no focus node has (§4.2.1)
+        row(f, f"absent{i}", "", f"pad{i}", "MinCount",
+            f"Less than 1 values on {EX}absent{i}")
+        for f in ("urn:a", "urn:b") for i in range(14)
+    ] + [
+        # minCount 2, zero values (§4.2.1)
+        row(f, "missing", "", "p5", "MinCount", f"Less than 2 values on {EX}missing")
+        for f in ("urn:a", "urn:b")
+    ] + [
+        # "n/a" is not in the lexical space of xsd:integer (§4.1.2) and
+        # is comparable with 18 in neither domain (§4.3.2); custom
+        # severity and message
+        row("urn:a", "age", "n/a", "p1", "Datatype", age_msg, W, ("literal", XSD_INTEGER)),
+        row("urn:a", "age", "n/a", "p1", "MinInclusive", age_msg, W, ("literal", XSD_INTEGER)),
+        row("urn:b", "age", "15", "p1", "MinInclusive", age_msg, W, ("literal", XSD_INTEGER)),
+        # a literal is not sh:IRI (§4.1.3)
+        row("urn:a", "home", "not-a-url", "p2", "NodeKind",
+            f"Value does not have node kind {SH}IRI", term=lit),
+        # urn:stranger has no rdf:type; a literal is never an instance (§4.1.1)
+        row("urn:a", "knows", "urn:stranger", "p6", "Class",
+            f"Value is not an instance of {EX}T", term=("iri", "")),
+        row("urn:b", "knows", "lit", "p6", "Class",
+            f"Value is not an instance of {EX}T", term=lit),
+        # "Jo" has 2 < 3 characters (§4.4.1); "x"*40 has 40 > 10 (§4.4.2)
+        row("urn:a", "name", "Jo", "p3", "MinLength", "Value has less than 3 characters",
+            term=lit),
+        row("urn:b", "tag", "x" * 40, "p4", "MaxLength",
+            "Value has more than 10 characters", term=lit),
+        # urn:b has two names, maxCount 1 (§4.2.2)
+        row("urn:b", "name", "", "p0", "MaxCount", f"More than 1 values on {EX}name"),
+        # COPPER is not in (GOLD SILVER) (§4.8.3); urn:b lacks GOLD (§4.8.2)
+        row("urn:b", "seg", "COPPER", "p7", "In", "Value is not in the allowed list",
+            term=lit),
+        row("urn:b", "seg", "", "p8", "HasValue", "Value GOLD is required"),
+        # "salut"@fr does not match the range "en"; "hi"@en-GB does (§4.4.4)
+        row("urn:b", "label", "salut", "p9", "LanguageIn",
+            "Value has no language tag from the allowed list", term=("literal", "")),
+    ]
+    assert got == sorted(expected)
