@@ -24,6 +24,17 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+class ParseError(ValueError):
+    """Malformed input text (Turtle, SPARQL); the message ends with the
+    error's position: ``at line L, col C (offset P)``."""
+
+    def __init__(self, message: str, pos: int, text: str):
+        line = text.count("\n", 0, pos) + 1
+        col = pos - (text.rfind("\n", 0, pos) + 1) + 1
+        super().__init__(f"{message} at line {line}, col {col} (offset {pos})")
+        self.pos = pos
+
+
 # ---------------------------------------------------------------- namespaces
 RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 RDFS = "http://www.w3.org/2000/01/rdf-schema#"

@@ -9,6 +9,10 @@ the same graphs ad hoc). This module exposes the SHACL-AF evaluator
 CONSTRUCT / DESCRIBE over any triples-schema DataFrame, no shapes graph
 required.
 
+Every request is lexed and parsed once by the plans/sparql_af.py front
+end (``parse_query`` / ``parse_update``); the dataset clauses (FROM /
+FROM NAMED, USING, WITH) come out of that parse, not out of the text.
+
 Everything is the same set-based machinery the constraint engine uses —
 a progressive whole-frame join per triple pattern, OPTIONAL as a left
 outer join, [NOT] EXISTS as semi/anti joins over distinct keys,
@@ -29,8 +33,6 @@ exits after the first hop.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,123 +46,40 @@ from ..data_model import (
 )
 from .sparql_af import (
     _Block,
+    _Lexed,
+    _Query,
+    _SelectQuery,
     _STRICT_DEFAULT,
     _Term,
+    _UpdateOp,
     _apply_aggregation,
     _apply_block,
     _apply_order_limit,
-    _delim_end,
-    _iri_end,
     _join_inline_data,
-    _parse_group,
-    _parse_patterns,
-    expand_prefixes,
-    parse_ask,
-    parse_construct,
-    parse_select_query,
+    lex,
+    parse_query,
+    parse_update,
     strict_default_graph,
 )
 
 _TERM_SUFFIXES = ("value", "kind", "datatype", "lang")
 
 
-def _skip_string(text: str, i: int) -> int:
-    """Return the index just past the string literal starting at ``i``
-    (single- or double-quoted, backslash escapes honored)."""
-    q = text[i]
-    j = i + 1
-    while j < len(text):
-        if text[j] == "\\":
-            j += 2
-            continue
-        if text[j] == q:
-            return j + 1
-        j += 1
-    return len(text)
-
-
-def _extract_dataset(text: str) -> tuple[str, list[str], list[str]]:
-    """Strip ``FROM <g>`` / ``FROM NAMED <g>`` dataset clauses (brace
-    depth 0 only — never inside a template/pattern block or a string
-    literal) and return (text without them, FROM IRIs, FROM NAMED IRIs).
-    Handles all four query forms' clause positions (SELECT/ASK/DESCRIBE:
-    before WHERE; CONSTRUCT: after the template block)."""
-    out: list[str] = []
-    default_graphs: list[str] = []
-    named_graphs: list[str] = []
-    i, n = 0, len(text)
-    depth = 0
-    while i < n:
-        c = text[i]
-        if c == "{":
-            depth += 1
-            out.append(c)
-            i += 1
-        elif c == "}":
-            depth -= 1
-            out.append(c)
-            i += 1
-        elif c in "\"'":
-            j = _skip_string(text, i)
-            out.append(text[i:j])
-            i = j
-        elif c == "<":
-            # _iri_end distinguishes an IRI token from the bare '<'
-            # comparison operator (FILTER(?x < 18)) — the latter must
-            # not swallow text up to some later '>'
-            j = _iri_end(text, i)
-            if j > i:
-                out.append(text[i : j + 1])
-                i = j + 1
-            else:
-                out.append(c)
-                i += 1
-        else:
-            m = None
-            if depth == 0 and (i == 0 or not (text[i - 1].isalnum() or text[i - 1] == "_")):
-                m = re.match(r"FROM\s+(NAMED\s+)?<([^>]*)>\s*", text[i:], re.I)
-            if m:
-                (named_graphs if m.group(1) else default_graphs).append(
-                    m.group(2)
-                )
-                i += m.end()
-            else:
-                out.append(c)
-                i += 1
-    return "".join(out), default_graphs, named_graphs
-
-
-def _mentions_graph(text: str) -> bool:
-    """True when the GRAPH keyword appears outside string literals and
-    IRIs. A plain ``\\bGRAPH\\b`` search false-positives on IRIs like
-    ``<http://ex/GRAPH/p>`` and on literals containing the word, which
-    would wrongly keep FROM-NAMED rows visible to plain patterns."""
-    stripped: list[str] = []
-    i, n = 0, len(text)
-    while i < n:
-        c = text[i]
-        if c in "\"'":
-            stripped.append(" ")
-            i = _skip_string(text, i)
-        elif c == "<":
-            j = _iri_end(text, i)
-            if j > i:
-                stripped.append(" ")
-                i = j + 1
-            else:
-                stripped.append(c)
-                i += 1
-        else:
-            stripped.append(c)
-            i += 1
-    return re.search(r"\bGRAPH\b", "".join(stripped), re.I) is not None
+def _uses_graph(block: _Block) -> bool:
+    """True when a GRAPH pattern occurs anywhere in the block tree."""
+    subs = (
+        *block.optionals, *(b for _neg, b in block.exists),
+        *block.alternatives, *block.minuses, *block.groups,
+        *(q.block for q in block.subselects),
+    )
+    return bool(block.graphs) or any(_uses_graph(b) for b in subs)
 
 
 def _dataset(
     data: DataFrame,
-    text: str,
-    default_graphs: list[str],
-    named_graphs: list[str],
+    block: _Block | None,
+    default_graphs: tuple | list,
+    named_graphs: tuple | list,
 ) -> DataFrame:
     """Construct the query's RDF dataset (SPARQL §13.2) from the store:
 
@@ -191,12 +110,12 @@ def _dataset(
     parts: list[DataFrame] = []
     if default_graphs:
         parts.append(
-            data.filter(F.col("graph").isin(default_graphs)).withColumn(
+            data.filter(F.col("graph").isin(*default_graphs)).withColumn(
                 "graph", F.lit(None).cast("string")
             )
         )
-    if named_graphs and _mentions_graph(text):
-        parts.append(data.filter(F.col("graph").isin(named_graphs)))
+    if named_graphs and block is not None and _uses_graph(block):
+        parts.append(data.filter(F.col("graph").isin(*named_graphs)))
     if not parts:
         # FROM NAMED only, and the query never says GRAPH: the default
         # graph of the dataset is empty
@@ -207,16 +126,30 @@ def _dataset(
     return out
 
 
-def _prepare(query: str) -> str:
-    """Expand the PREFIX prologue and reject $this — the focus-node
-    pre-binding exists only inside a SHACL constraint context."""
-    text = expand_prefixes(query, {})
-    if re.search(r"\$this\b", text):
+def _prepare(query: str) -> _Lexed:
+    """Lex the request (its PREFIX prologue resolves prefixed names) and
+    reject $this — the focus-node pre-binding exists only inside a SHACL
+    constraint context."""
+    src = lex(query)
+    if any(t.kind == "var" and t.text == "$this" for t in src.toks):
         raise ValueError(
             "$this is only bound inside a SHACL constraint/rule context — "
             "standalone queries must use ordinary variables"
         )
-    return text
+    return src
+
+
+def _parse(query: str, form: str) -> _Query:
+    q = parse_query(_prepare(query))
+    if q.form != form:
+        raise ValueError(f"expected a {form} query, got {q.form}")
+    return q
+
+
+def _strict(q: _Query) -> bool:
+    """A FROM / FROM NAMED dataset matches plain patterns against its
+    default graph only (see ``_dataset``)."""
+    return bool(q.from_graphs or q.from_named) or _STRICT_DEFAULT.get()
 
 
 def _seed(spark: SparkSession) -> DataFrame:
@@ -250,11 +183,21 @@ def sparql_select(
     ``FROM <g>`` / ``FROM NAMED <g>`` dataset clauses construct the
     queried dataset first (see ``_dataset``).
     """
-    text, dg, ng = _extract_dataset(_prepare(query))
-    data = _dataset(data, text, dg, ng)
-    q = parse_select_query(text)
+    parsed = _parse(query, "SELECT")
+    data = _dataset(data, parsed.block, parsed.from_graphs, parsed.from_named)
+    return _select(spark, data, parsed.select, _strict(parsed), include_term_columns)
+
+
+def _select(
+    spark: SparkSession,
+    data: DataFrame,
+    q: _SelectQuery,
+    strict: bool,
+    include_term_columns: bool,
+) -> DataFrame:
+    """Evaluate a parsed SELECT over the query's dataset."""
     bound_vars: set[str] = set()
-    with strict_default_graph(bool(dg or ng) or _STRICT_DEFAULT.get()):
+    with strict_default_graph(strict):
         bound = _apply_block(
             data, _seed(spark), bound_vars, q.block, "uq", has_this=False
         )
@@ -318,13 +261,12 @@ def sparql_ask(spark: SparkSession, data: DataFrame, query: str) -> bool:
     The one-row probe (`LIMIT 1` under the hood) is the only driver-side
     action; the result is a scalar by definition. FROM / FROM NAMED
     dataset clauses are honored (see ``_dataset``)."""
-    text, dg, ng = _extract_dataset(_prepare(query))
-    data = _dataset(data, text, dg, ng)
-    block = parse_ask(text)
+    q = _parse(query, "ASK")
+    data = _dataset(data, q.block, q.from_graphs, q.from_named)
     bound_vars: set[str] = set()
-    with strict_default_graph(bool(dg or ng) or _STRICT_DEFAULT.get()):
+    with strict_default_graph(_strict(q)):
         bound = _apply_block(
-            data, _seed(spark), bound_vars, block, "ua", has_this=False
+            data, _seed(spark), bound_vars, q.block, "ua", has_this=False
         )
     return bound.limit(1).count() > 0
 
@@ -422,12 +364,12 @@ def sparql_construct(
     the pattern doubles as the template) takes a plain triple-pattern
     block, same restriction as DELETE WHERE. FROM / FROM NAMED dataset
     clauses are honored (see ``_dataset``)."""
-    text, dg, ng = _extract_dataset(_prepare(query))
-    data = _dataset(data, text, dg, ng)
-    m = re.match(r"\s*CONSTRUCT\s+WHERE\s*\{(?P<body>.*)\}\s*$", text, re.S | re.I)
-    if m:
-        patterns, filters, binds, groups = _parse_patterns(m.group("body"))
-        if filters or binds or groups or not patterns:
+    q = _parse(query, "CONSTRUCT")
+    data = _dataset(data, q.block, q.from_graphs, q.from_named)
+    block, template = q.block, q.template
+    if template is None:
+        patterns = block.patterns
+        if not patterns or block != _Block(patterns, (), (), ()):
             raise ValueError(
                 "CONSTRUCT WHERE takes a plain non-empty triple-pattern "
                 "block (use CONSTRUCT { … } WHERE { … } otherwise)"
@@ -443,11 +385,8 @@ def sparql_construct(
                     "the pattern doubles as the template"
                 )
         template = patterns
-        block = _Block(tuple(patterns), (), (), ())
-    else:
-        template, block = parse_construct(text)
     bound_vars: set[str] = set()
-    with strict_default_graph(bool(dg or ng) or _STRICT_DEFAULT.get()):
+    with strict_default_graph(_strict(q)):
         bound = _apply_block(
             data, _seed(spark), bound_vars, block, "uc", has_this=False
         )
@@ -536,19 +475,12 @@ def _check_template_patterns(patterns: list, what: str, ground: bool) -> None:
             raise ValueError(f"{what} requires ground triples")
 
 
-def _parse_quads(
-    body: str, what: str, ground: bool, blk: "_Block | None" = None
-) -> list[tuple]:
-    """Parse a template/DATA block into quad groups:
+def _parse_quads(blk: _Block, what: str, ground: bool) -> list[tuple]:
+    """Split a parsed template/DATA block into quad groups:
     ``[(graph-IRI-or-None, [patterns])]``. Triples outside any GRAPH
     block land in the None group; ``GRAPH <g> { … }`` groups carry their
     IRI. Anything beyond plain triple patterns (FILTER/OPTIONAL/…,
-    variable graph names, nested GRAPH) is rejected. Pass ``blk`` when
-    the caller already parsed the body (DELETE WHERE, where pattern and
-    template are the same block) — re-parsing would mint DIFFERENT fresh
-    ``_bp``/``_cl`` desugar variables on each pass."""
-    if blk is None:
-        blk = _parse_group(body)
+    variable graph names, nested GRAPH) is rejected."""
     if (
         blk.filters or blk.binds or blk.optionals or blk.exists
         or blk.minuses or blk.alternatives or blk.subselects
@@ -581,40 +513,6 @@ def _parse_quads(
     return out
 
 
-def _split_ops(text: str) -> list[str]:
-    """Split an update request into its ``;``-separated operations —
-    top level only (never inside braces, IRIs, or string literals)."""
-    ops: list[str] = []
-    depth = 0
-    start = 0
-    i, n = 0, len(text)
-    while i < n:
-        c = text[i]
-        if c == "{":
-            depth += 1
-            i += 1
-        elif c == "}":
-            depth -= 1
-            i += 1
-        elif c in "\"'":
-            i = _skip_string(text, i)
-        elif c == "<":
-            # see _extract_dataset: a bare '<' is a FILTER comparison
-            j = _iri_end(text, i)
-            i = j + 1 if j > i else i + 1
-        elif c == ";" and depth == 0:
-            ops.append(text[start:i])
-            i += 1
-            start = i
-        else:
-            i += 1
-    ops.append(text[start:])
-    return [op for op in (o.strip() for o in ops) if op]
-
-
-_GM_TARGET = r"(?:GRAPH\s*<(?P<{0}>[^>]*)>|(?P<{0}def>DEFAULT))"
-
-
 def _graph_cond(g: str | None):
     return F.col("graph").eqNullSafe(F.lit(g).cast("string"))
 
@@ -630,7 +528,9 @@ def sparql_update(
     persists/writes the result; `sources/sinks.py` handles storage).
 
     A request is one or more ``;``-separated operations, applied in
-    order, each seeing its predecessors' result (§3). Supported:
+    order, each seeing its predecessors' result (§3). The whole request
+    is parsed first (plans/sparql_af.py ``parse_update``), so a syntax
+    error anywhere applies nothing. Supported:
 
       * ``INSERT DATA`` / ``DELETE DATA`` — ground triples and
         ``GRAPH <g> { … }`` quad groups
@@ -663,10 +563,7 @@ def sparql_update(
     Scale posture: per operation, one pattern evaluation (the same
     progressive join the query surface uses), one anti join per deletion
     target, one union per insertion — no collects, no per-row Python."""
-    ops = _split_ops(_prepare(update).strip())
-    if not ops:
-        raise ValueError("empty update request")
-    for op in ops:
+    for op in parse_update(_prepare(update)):
         data = _apply_update_op(spark, data, op, graph)
     return data
 
@@ -674,79 +571,44 @@ def sparql_update(
 def _apply_update_op(
     spark: SparkSession,
     data: DataFrame,
-    text: str,
+    op: _UpdateOp,
     graph: str | None,
 ) -> DataFrame:
     """Apply ONE update operation (see ``sparql_update``)."""
-
-    def take_block(s: str, kw_end: int) -> tuple[str, int]:
-        j = kw_end
-        while j < len(s) and s[j].isspace():
-            j += 1
-        if j >= len(s) or s[j] != "{":
-            raise ValueError(f"expected '{{' after {s[:kw_end].strip()!r}")
-        k = _delim_end(s, j, "{", "}")
-        return s[j + 1 : k], k + 1
-
     # ---------------------------------------------- graph management
-    m = re.match(r"CREATE\s+(?:SILENT\s+)?GRAPH\s*<[^>]*>\s*$", text, re.I)
-    if m:
+    if op.verb == "CREATE":
         # the frame store holds no registry of (possibly empty) graphs —
         # a graph exists iff it has rows, so CREATE has nothing to do
         return data
 
-    m = re.match(
-        r"(?:CLEAR|DROP)\s+(?:SILENT\s+)?"
-        r"(?:GRAPH\s*<(?P<g>[^>]*)>|(?P<kw>DEFAULT|NAMED|ALL))\s*$",
-        text,
-        re.I,
-    )
-    if m:
-        if m.group("g") is not None:
-            return data.filter(~_graph_cond(m.group("g")))
-        kw = m.group("kw").upper()
-        if kw == "DEFAULT":
+    if op.verb == "CLEAR":  # CLEAR and DROP
+        if op.scope == "GRAPH":
+            return data.filter(~_graph_cond(op.src))
+        if op.scope == "DEFAULT":
             return data.filter(F.col("graph").isNotNull())
-        if kw == "NAMED":
+        if op.scope == "NAMED":
             return data.filter(F.col("graph").isNull())
         return data.filter(F.lit(False))  # ALL
 
-    m = re.match(
-        r"(?P<verb>ADD|COPY|MOVE)\s+(?:SILENT\s+)?"
-        + _GM_TARGET.format("src")
-        + r"\s+TO\s+"
-        + _GM_TARGET.format("dst")
-        + r"\s*$",
-        text,
-        re.I,
-    )
-    if m:
-        verb = m.group("verb").upper()
-        src = m.group("src")  # None for DEFAULT
-        dst = m.group("dst")
+    if op.verb in ("ADD", "COPY", "MOVE"):
+        src, dst = op.src, op.dst  # None for DEFAULT
         if src == dst:
             return data  # §3.2.3-5: same-graph COPY/MOVE/ADD is a no-op
         moved = data.filter(_graph_cond(src)).withColumn(
             "graph", F.lit(dst).cast("string")
         )
-        if verb == "ADD":
+        if op.verb == "ADD":
             return _with_new(data, moved)
         keep = ~_graph_cond(dst)
-        if verb == "MOVE":
+        if op.verb == "MOVE":
             keep = keep & ~_graph_cond(src)
         return data.filter(keep).unionByName(moved)
 
-    m = re.match(
-        r"LOAD\s+(?P<silent>SILENT\s+)?<(?P<path>[^>]*)>"
-        r"(?:\s+INTO\s+GRAPH\s*<(?P<into>[^>]*)>)?\s*$",
-        text,
-        re.I,
-    )
-    if m:
+    if op.verb == "LOAD":
         from ..sources.io import read_rdf
 
-        path = re.sub(r"^file://", "", m.group("path"))
-        into = m.group("into")
+        path = op.src.removeprefix("file://")
+        into = op.dst
         new = None
         try:
             new = read_rdf(spark, path, graph=into)
@@ -754,7 +616,7 @@ def _apply_update_op(
                 # INTO GRAPH overrides any per-statement graph the
                 # format carried (N-Quads/TriG)
                 new = new.withColumn("graph", F.lit(into))
-            if m.group("silent"):
+            if op.silent:
                 # the distributed text readers (nt/nq/ndjson) surface
                 # content errors lazily at the caller's first action —
                 # after this try/except has returned. SILENT promises to
@@ -773,7 +635,7 @@ def _apply_update_op(
                 new.count()
             return _with_new(data, new)
         except Exception:
-            if m.group("silent"):
+            if op.silent:
                 # don't leak the half-materialized cache entry of a frame
                 # nobody will ever reference again (round-5 review)
                 if new is not None:
@@ -785,13 +647,9 @@ def _apply_update_op(
             raise
 
     # ------------------------------------------------- the data forms
-    m = re.match(r"(INSERT|DELETE)\s+DATA\b", text, re.I)
-    if m:
-        body, end = take_block(text, m.end())
-        if text[end:].strip():
-            raise ValueError("unexpected trailing text after the DATA block")
-        what = m.group(1).upper()
-        quads = _parse_quads(body, f"{what} DATA", ground=True)
+    if op.verb in ("INSERT DATA", "DELETE DATA"):
+        what = op.verb.split()[0]
+        quads = _parse_quads(op.insert or op.delete, op.verb, ground=True)
         if what == "INSERT":
             frames = [
                 _instantiate(
@@ -813,12 +671,8 @@ def _apply_update_op(
             data = _without(data, rows, g if g is not None else graph)
         return data
 
-    m = re.match(r"DELETE\s+WHERE\b", text, re.I)
-    if m:
-        body, end = take_block(text, m.end())
-        if text[end:].strip():
-            raise ValueError("unexpected trailing text after DELETE WHERE")
-        blk = _parse_group(body)
+    if op.verb == "DELETE WHERE":
+        blk = op.delete
         if (
             blk.filters or blk.binds or blk.optionals or blk.exists
             or blk.minuses or blk.alternatives or blk.subselects
@@ -832,7 +686,7 @@ def _apply_update_op(
         # desugars into chained `_seqN` patterns whose deletion would
         # destructively remove intermediate-hop triples the user never
         # templated (SPARQL 1.1 forbids paths here entirely)
-        quads = _parse_quads(body, "DELETE WHERE", ground=False, blk=blk)
+        quads = _parse_quads(blk, "DELETE WHERE", ground=False)
         bound_vars: set[str] = set()
         bound = _apply_block(
             data, _seed(spark), bound_vars, blk, "ud", has_this=False
@@ -843,53 +697,22 @@ def _apply_update_op(
         return data
 
     # -------------------- [WITH] [DELETE] [INSERT] [USING]* WHERE form
-    rest = text
-    with_graph: str | None = None
-    m = re.match(r"WITH\s*<([^>]*)>\s*", rest, re.I)
-    if m:
-        with_graph = m.group(1)
-        if graph is not None:
-            raise ValueError(
-                "both WITH and the graph= argument name a default graph — "
-                "drop one (ambiguous)"
-            )
-        rest = rest[m.end():]
-    delete_quads: list | None = None
-    insert_quads: list | None = None
-    m = re.match(r"DELETE\b", rest, re.I)
-    if m:
-        body, end = take_block(rest, m.end())
-        delete_quads = _parse_quads(body, "DELETE", ground=False)
-        rest = rest[end:].lstrip()
-    m = re.match(r"INSERT\b", rest, re.I)
-    if m:
-        body, end = take_block(rest, m.end())
-        insert_quads = _parse_quads(body, "INSERT", ground=False)
-        rest = rest[end:].lstrip()
-    if delete_quads is None and insert_quads is None:
+    with_graph = op.with_graph
+    if with_graph is not None and graph is not None:
         raise ValueError(
-            "unsupported update (expected INSERT DATA / DELETE DATA / "
-            "DELETE WHERE / [WITH <g>] [DELETE {…}] [INSERT {…}] "
-            "[USING …] WHERE {…} / CLEAR / DROP / CREATE / ADD / COPY / "
-            "MOVE / LOAD)"
+            "both WITH and the graph= argument name a default graph — "
+            "drop one (ambiguous)"
         )
-    using: list[str] = []
-    using_named: list[str] = []
-    while True:
-        m = re.match(r"USING\s+(NAMED\s+)?<([^>]*)>\s*", rest, re.I)
-        if not m:
-            break
-        (using_named if m.group(1) else using).append(m.group(2))
-        rest = rest[m.end():]
-    m = re.match(r"WHERE\b", rest, re.I)
-    if not m:
-        raise ValueError("DELETE/INSERT templates require a WHERE clause")
-    body, end = take_block(rest, m.end())
-    if rest[end:].strip():
-        raise ValueError("unexpected trailing text after the WHERE block")
+    delete_quads = (
+        _parse_quads(op.delete, "DELETE", ground=False) if op.delete else None
+    )
+    insert_quads = (
+        _parse_quads(op.insert, "INSERT", ground=False) if op.insert else None
+    )
+    using, using_named = op.using, op.using_named
     strict = False
     if using or using_named:
-        wdata = _dataset(data, body, using, using_named)
+        wdata = _dataset(data, op.where, using, using_named)
         strict = True
     elif with_graph is not None:
         # §3.1.3: WITH sets the DEFAULT graph for matching (USING
@@ -903,18 +726,17 @@ def _apply_update_op(
         wdata = data.filter(F.col("graph") == with_graph).withColumn(
             "graph", F.lit(None).cast("string")
         )
-        if _mentions_graph(body):
+        if _uses_graph(op.where):
             wdata = wdata.unionByName(
                 data.filter(F.col("graph").isNotNull())
             )
         strict = True
     else:
         wdata = data
-    block = _parse_group(body)
     bound_vars = set()
     with strict_default_graph(strict):
         bound = _apply_block(
-            wdata, _seed(spark), bound_vars, block, "uu", has_this=False
+            wdata, _seed(spark), bound_vars, op.where, "uu", has_this=False
         )
     default_graph = with_graph if with_graph is not None else graph
     out = data
@@ -938,14 +760,6 @@ def _apply_update_op(
     return out
 
 
-_DESCRIBE_RE = re.compile(
-    r"\s*DESCRIBE\s+(?P<terms>(?:<[^>]*>|\?[A-Za-z_]\w*)"
-    r"(?:\s+(?:<[^>]*>|\?[A-Za-z_]\w*))*)"
-    r"(?:\s+WHERE\s*\{(?P<body>.*)\})?\s*$",
-    re.S | re.I,
-)
-
-
 def sparql_describe(
     spark: SparkSession,
     data: DataFrame,
@@ -964,19 +778,12 @@ def sparql_describe(
     """
     if max_hops < 1:
         raise ValueError("max_hops must be >= 1")
-    text, dg, ng = _extract_dataset(_prepare(query))
-    data = _dataset(data, text, dg, ng)
-    m = _DESCRIBE_RE.match(text)
-    if not m:
-        raise ValueError(
-            "unsupported DESCRIBE (expected DESCRIBE <iri>… or "
-            "DESCRIBE ?var… WHERE { … })"
-        )
-    terms = m.group("terms").split()
-    body = m.group("body")
-    iris = [t[1:-1] for t in terms if t.startswith("<")]
-    tvars = [t[1:] for t in terms if t.startswith("?")]
-    if body is None:
+    q = _parse(query, "DESCRIBE")
+    dg, ng = q.from_graphs, q.from_named
+    data = _dataset(data, q.block, dg, ng)
+    iris = [t.value for t in q.describe if t.kind == "iri"]
+    tvars = [t.value for t in q.describe if t.kind == "var"]
+    if q.block is None:
         if tvars:
             raise ValueError("DESCRIBE ?var requires a WHERE clause")
         nodes = spark.createDataFrame(
@@ -987,15 +794,9 @@ def sparql_describe(
             raise ValueError(
                 "DESCRIBE with a WHERE clause must list at least one ?var"
             )
-        sel = "SELECT {} WHERE {{{}}}".format(
-            " ".join(f"?{v}" for v in tvars), body
+        bound = _select(
+            spark, data, _SelectQuery(tuple(tvars), q.block), _strict(q), True
         )
-        # the dataset was constructed HERE (the inner select sees no
-        # FROM clauses), so carry the strict flag through the call
-        with strict_default_graph(bool(dg or ng)):
-            bound = sparql_select(
-                spark, data, sel, include_term_columns=True
-            )
         parts = [
             bound.filter(F.col(f"{v}_kind") != KIND_LITERAL).select(
                 F.col(v).alias("node")

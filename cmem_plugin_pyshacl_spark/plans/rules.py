@@ -68,9 +68,10 @@ from .shacl import (
 )
 from .sparql_af import (
     declared_prefixes,
+    _Lexed,
     eval_bgp,
-    expand_prefixes,
     index_rows,
+    lex,
     parse_construct,
 )
 
@@ -101,7 +102,7 @@ class Rule:
     subject: _NodeExpr | None = None
     predicate: _NodeExpr | None = None
     object: _NodeExpr | None = None
-    construct: str | None = None
+    construct: _Lexed | None = None  # the lexed sh:construct
 
 
 def _parse_path_node(by_subject: dict, node: str) -> PathExpr:
@@ -182,7 +183,7 @@ def compile_rules(shapes_rows: list) -> dict[str, list[Rule]]:
     (sh:JSRule stays out of scope, like SHACL-JS in validate())."""
     by_subject = index_rows(shapes_rows)
     # SHACL-AF §7 functions are callable from rule bodies too — expand
-    # textually before parsing, same as sh:sparql validators
+    # them into the tokens before parsing, same as sh:sparql validators
     from .sparql_af import compile_sparql_functions, expand_function_calls
 
     functions = compile_sparql_functions(shapes_rows)
@@ -226,10 +227,9 @@ def compile_rules(shapes_rows: list) -> dict[str, list[Rule]]:
                 construct = obj(SH + "construct")
                 if construct is None:
                     raise ValueError(f"sh:SPARQLRule {node} has no sh:construct")
-                construct = expand_prefixes(
-                    construct, declared_prefixes(by_subject, node)
+                construct = expand_function_calls(
+                    lex(construct, declared_prefixes(by_subject, node)), functions
                 )
-                construct = expand_function_calls(construct, functions)
                 parse_construct(construct)  # surface syntax errors at compile time
                 rules.append(
                     Rule(

@@ -2290,9 +2290,9 @@ def validate(
             af_rows, shapes_triples, all_rows=shapes_rows
         ).items():
             sparql_map.setdefault(k, []).extend(v)
-        # SHACL-AF §7 SPARQL functions: expand calls textually into every
-        # validator/target body BEFORE parsing — the evaluator never sees
-        # the function (same pre-binding strategy as component parameters)
+        # SHACL-AF §7 SPARQL functions: expand calls into every
+        # validator/target body's tokens BEFORE parsing — the evaluator
+        # never sees the function (same pre-binding as component parameters)
         from .sparql_af import compile_sparql_functions, expand_function_calls
 
         af_functions = compile_sparql_functions(af_rows)
@@ -2322,15 +2322,9 @@ def validate(
 
         for scs in sparql_map.values():
             for sc in scs:
-                # property ASK validators may pre-bind $value in triple
-                # patterns; the evaluator substitutes $value->?value before
-                # parsing, so this collection-time parse must match or a
-                # supported body would raise here
+                # property ASK validators have ?value ($value) pre-bound
                 blk = (
-                    parse_ask(
-                        re.sub(r"\$value\b", "?value", sc.ask),
-                        allow_pattern_free=sc.path is not None,
-                    )
+                    parse_ask(sc.ask, allow_pattern_free=sc.path is not None)
                     if sc.ask is not None
                     else parse_select(sc.select)[1]
                 )

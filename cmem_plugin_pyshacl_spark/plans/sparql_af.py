@@ -13,6 +13,20 @@ basic graph pattern plus optional FILTERs:
         FILTER (?other < 10)
     }
 
+Front end: one lexer and one recursive-descent parser over the SPARQL
+1.1 grammar (§19) read every query text once — sh:select / sh:ask /
+sh:construct bodies, SPARQL targets, the standalone query forms and
+update requests of plans/query.py — into the ``_Block`` /
+``_SelectQuery`` values the evaluator below consumes. The lexer follows
+the §19.8 terminals (IRIREF, prefixed names, ?/$ variables, the four
+string forms with SPARQL escapes, numbers, case-insensitive keywords,
+``#`` comments) and reuses sources/turtle.py's IRI, prefixed-name and
+number readers. Malformed or unsupported syntax raises
+``SparqlParseError`` (a ValueError) whose message ends ``at line L, col C
+(offset P)``. Term forms outside the subset raise there too:
+language-tagged or typed literals in patterns, ``_:`` labels, booleans
+and signed numbers.
+
 Supported grammar (documented contract — anything outside raises
 ValueError, matching validate()'s strictness for the unsupported rest):
 
@@ -101,9 +115,13 @@ ValueError, matching validate()'s strictness for the unsupported rest):
     mentions it); a group sharing no variables removes nothing — the
     SPARQL disjoint-domain rule that distinguishes MINUS from
     FILTER NOT EXISTS.
-  * PREFIX: inline ``PREFIX pfx: <ns>`` declarations before the query
-    form, plus shapes-graph ``sh:prefixes``/``sh:declare`` ontologies
-    (SHACL-AF §5.2) — prefixed names expand to full IRIs at compile time.
+  * PREFIX: inline ``PREFIX pfx: <ns>`` declarations, plus shapes-graph
+    ``sh:prefixes``/``sh:declare`` ontologies (SHACL-AF §5.2) — the lexer
+    resolves prefixed names to IRI tokens; an undeclared prefix raises.
+  * pre-binding: custom-component parameters, ``$PATH`` and SPARQL
+    function calls (SHACL-AF §6-7) substitute tokens (``_bind_var``,
+    ``expand_function_calls``), so a ``$name`` inside a string literal
+    or IRI is never rewritten; ``$value`` and ``?value`` are one variable.
   * CONSTRUCT (``parse_construct``, used by plans/rules.py for
     sh:SPARQLRule): same body grammar plus a template block of patterns
     over ``$this`` / bound vars / constants.
@@ -123,7 +141,8 @@ import contextvars
 import itertools
 import re
 import dataclasses
-from dataclasses import dataclass
+from dataclasses import dataclass, field
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -138,7 +157,18 @@ from ..data_model import (
     SH,
     XSD,
     XSD_STRING,
+    ParseError,
+    is_small,
+    maybe_broadcast,
 )
+from ..sources.turtle import (
+    _NUMBER_RE,
+    _PN_PREFIX_RE,
+    RDF_FIRST,
+    RDF_NIL,
+    RDF_REST,
+)
+from ..sources.turtle import _Parser as _TurtleReader
 
 SH_SPARQL_COMPONENT = SH + "SPARQLConstraintComponent"
 
@@ -147,7 +177,7 @@ SH_SPARQL_COMPONENT = SH + "SPARQLConstraintComponent"
 class SparqlConstraint:
     node_shape: str  # owning node shape (focus targets come from it)
     constraint_id: str  # the sh:sparql node (sourceShape in reports)
-    select: str
+    select: _Lexed | str  # the lexed SELECT ("" for an ASK validator)
     message: str | None
     severity: str
     # custom constraint components (SHACL-AF §6) report their own IRI
@@ -155,12 +185,12 @@ class SparqlConstraint:
     # SPARQLAskValidator body (SHACL-AF §6.2.2): when set, `select` is
     # empty and conformance means the ASK pattern has >=1 solution for
     # the focus node ($this pre-bound); no solution -> one violation.
-    ask: str | None = None
+    ask: _Lexed | None = None
     # property-shape application (SHACL-AF §6.2: sh:propertyValidator /
     # $PATH / $value): the property shape's simple sh:path IRI. When set,
-    # results carry it as resultPath, SELECT validators had $PATH
-    # substituted textually, and ASK validators evaluate per (focus,
-    # value-of-path) pair with ?value pre-bound.
+    # results carry it as resultPath, SELECT validators have $PATH bound
+    # to it, and ASK validators evaluate per (focus, value-of-path) pair
+    # with ?value pre-bound.
     path: str | None = None
 
 
@@ -185,7 +215,7 @@ class _Pattern:
 
 @dataclass(frozen=True)
 class _Filter:
-    raw: str
+    toks: tuple  # the tokens inside FILTER ( … )
 
 
 @dataclass(frozen=True)
@@ -247,11 +277,6 @@ class _Block:
             yield from q.block.all_subselects()
 
 
-_GROUP_KW_RE = re.compile(
-    r"(FILTER\s+NOT\s+EXISTS|FILTER\s+EXISTS|OPTIONAL|MINUS|UNION)\b", re.I
-)
-
-
 @dataclass(frozen=True)
 class _ValuesClause:
     """An inline-data block: VALUES ?v { t1 t2 } or
@@ -260,358 +285,6 @@ class _ValuesClause:
 
     vars: tuple  # tuple[str, ...]
     rows: tuple  # tuple[tuple[_Term | None, ...], ...]
-
-
-def _parse_values(vars_text: str, data_text: str) -> _ValuesClause:
-    names = re.findall(r"\?([A-Za-z_]\w*)", vars_text)
-    if not names or re.sub(r"[?$\w\s]", "", vars_text):
-        raise ValueError(f"unsupported VALUES variable list {vars_text!r}")
-    if "this" in names:
-        raise ValueError("VALUES may not constrain the focus variable ?this")
-
-    def _row_terms(text: str) -> tuple:
-        toks = re.findall(_TERM_RE.pattern + r"|\bUNDEF\b", text, re.X)
-        leftover = re.sub(
-            _TERM_RE.pattern + r"|\bUNDEF\b", " ", text, flags=re.X
-        ).strip()
-        if leftover:
-            raise ValueError(f"unsupported VALUES data near {leftover[:40]!r}")
-        terms = tuple(
-            None if t.upper() == "UNDEF" else _parse_term(t) for t in toks
-        )
-        for t in terms:
-            if t is not None and t.kind in ("var", "this"):
-                raise ValueError("VALUES data must be constant terms or UNDEF")
-        return terms
-
-    rows: list[tuple] = []
-    if len(names) == 1 and "(" not in data_text:
-        rows = [(t,) for t in _row_terms(data_text)]
-    else:
-        i, n = 0, len(data_text)
-        while i < n:
-            ch = data_text[i]
-            if ch.isspace():
-                i += 1
-                continue
-            if ch != "(":
-                raise ValueError(
-                    f"expected '(' row in VALUES data near {data_text[i:i+20]!r}"
-                )
-            k = _delim_end(data_text, i, "(", ")")
-            row = _row_terms(data_text[i + 1 : k])
-            if len(row) != len(names):
-                raise ValueError(
-                    f"VALUES row arity {len(row)} != {len(names)} variables"
-                )
-            rows.append(row)
-            i = k + 1
-    return _ValuesClause(tuple(names), tuple(rows))
-
-
-def _iri_end(body: str, k: int) -> int:
-    """body[k] == '<'. Return the index of the closing '>' when this is an
-    IRI token, else k — a bare '<' is the comparison operator inside a
-    FILTER (e.g. ``?v < 18``) and must not swallow text up to some later
-    '>'. IRIs cannot contain whitespace or braces."""
-    nxt = body.find(">", k)
-    if nxt > 0 and not any(
-        c in " \t\r\n{}" for c in body[k + 1 : nxt]
-    ):
-        return nxt
-    return k
-
-
-def _skip_str(body: str, i: int) -> int:
-    """body[i] is a quote. Return the index just PAST the closing quote,
-    honoring backslash escapes by consuming them pairwise — the naive
-    ``body[k-1] == '\\\\'`` check misreads the real closing quote after
-    an escaped backslash (``"x\\\\"``) as escaped and overshoots."""
-    q = body[i]
-    j = i + 1
-    n = len(body)
-    while j < n:
-        c = body[j]
-        if c == "\\":
-            j += 2
-            continue
-        if c == q:
-            return j + 1
-        j += 1
-    return n
-
-
-def _delim_end(body: str, j: int, open_c: str, close_c: str) -> int:
-    """body[j] == open_c. Return the index of the matching close_c
-    (string- and IRI-aware), raising on imbalance."""
-    depth, k, n = 0, j, len(body)
-    while k < n:
-        ch = body[k]
-        if ch == '"':
-            k = _skip_str(body, k) - 1
-        elif ch == "<":
-            k = _iri_end(body, k)
-        elif ch == open_c:
-            depth += 1
-        elif ch == close_c:
-            depth -= 1
-            if depth == 0:
-                return k
-        k += 1
-    raise ValueError(f"unbalanced {open_c}{close_c} in group graph pattern")
-
-
-def _brace_end(body: str, j: int) -> int:
-    return _delim_end(body, j, "{", "}")
-
-
-def _extract_groups(body: str) -> tuple[str, list[tuple[str, str]]]:
-    """Split out top-level ``OPTIONAL { … }`` / ``FILTER [NOT] EXISTS
-    { … }`` / ``MINUS { … }`` segments and bare ``{ … } [UNION { … }]*``
-    sub-group chains (string- and IRI-aware brace matching); returns the
-    remaining body and the (keyword, inner-body) segments. A stray UNION
-    not preceded by a braced group raises — outside SPARQL grammar."""
-    out: list[tuple[str, str]] = []
-    kept: list[str] = []
-    i, n = 0, len(body)
-    while i < n:
-        c = body[i]
-        if c == '"':
-            j = _skip_str(body, i)
-            kept.append(body[i:j])
-            i = j
-            continue
-        if c == "<":
-            j = _iri_end(body, i)
-            kept.append(body[i : j + 1])
-            i = j + 1
-            continue
-        vm = re.match(r"VALUES\b", body[i:], re.I)
-        if vm and (i == 0 or not re.match(r"[\w?$]", body[i - 1])):
-            j = i + vm.end()
-            while j < n and body[j].isspace():
-                j += 1
-            if j < n and body[j] == "(":
-                k = _delim_end(body, j, "(", ")")
-                vars_text = body[j + 1 : k]
-                j = k + 1
-            else:
-                mv = re.match(r"\?[A-Za-z_]\w*", body[j:])
-                if not mv:
-                    raise ValueError("expected variable list after VALUES")
-                vars_text = mv.group(0)
-                j += mv.end()
-            while j < n and body[j].isspace():
-                j += 1
-            if j >= n or body[j] != "{":
-                raise ValueError("expected '{' after VALUES variable list")
-            k = _brace_end(body, j)
-            out.append(("VALUES", _parse_values(vars_text, body[j + 1 : k])))
-            i = k + 1
-            continue
-        gm = re.match(r"GRAPH\b\s*", body[i:], re.I)
-        if gm and (i == 0 or not re.match(r"[\w?$]", body[i - 1])):
-            # GRAPH <iri> { … } / GRAPH ?g { … } — the named-graph
-            # selector over the triples frame's `graph` column (§1.1 data
-            # model; the reference's named-graph store maps to it)
-            j = i + gm.end()
-            tm = re.match(r"(<[^>\s]*>|[?$][A-Za-z_]\w*)\s*", body[j:])
-            if not tm:
-                raise ValueError(
-                    f"expected IRI or variable after GRAPH near {body[j:j+30]!r}"
-                )
-            gterm_text = tm.group(1)
-            j += tm.end()
-            if j >= n or body[j] != "{":
-                raise ValueError("expected '{' after GRAPH name")
-            k = _brace_end(body, j)
-            out.append(("GRAPH", (gterm_text, body[j + 1 : k])))
-            i = k + 1
-            continue
-        if c == "{":
-            k = _brace_end(body, i)
-            inner0 = body[i + 1 : k]
-            if re.match(r"\s*SELECT\b", inner0, re.I):
-                k2 = k + 1
-                while k2 < n and body[k2].isspace():
-                    k2 += 1
-                if not re.match(r"UNION\b", body[k2:], re.I):
-                    # nested { SELECT ... } subquery
-                    out.append(("SUBSELECT", inner0))
-                    i = k + 1
-                    continue
-                # { SELECT … } UNION { … }: fall through to the
-                # alternation-chain collector — each branch (subquery or
-                # plain group) re-renders braced and _parse_group turns a
-                # SELECT-headed branch into a subselect-only block
-            # bare sub-group, possibly the head of a {…} UNION {…} chain
-            parts: list[str] = [inner0]
-            i = k + 1
-            while True:
-                um = re.match(r"\s*UNION\b\s*", body[i:], re.I)
-                if not um:
-                    break
-                j = i + um.end()
-                if j >= n or body[j] != "{":
-                    raise ValueError("expected '{' after UNION")
-                k = _brace_end(body, j)
-                parts.append(body[j + 1 : k])
-                i = k + 1
-            if len(parts) == 1:
-                out.append(("GROUP", parts[0]))
-            else:
-                # re-render so _parse_group sees a pure alternation body
-                out.append(
-                    ("GROUP", " UNION ".join("{" + p + "}" for p in parts))
-                )
-            continue
-        m = _GROUP_KW_RE.match(body, i)
-        # keyword must start at a token boundary (not inside ?var / pname)
-        if m and (i == 0 or not re.match(r"[\w?$]", body[i - 1])):
-            kw = re.sub(r"\s+", " ", m.group(1).upper())
-            if kw == "UNION":
-                raise ValueError(f"unsupported sh:sparql syntax {kw}")
-            j = m.end()
-            while j < n and body[j].isspace():
-                j += 1
-            if j >= n or body[j] != "{":
-                raise ValueError(f"expected '{{' after {kw}")
-            depth, k = 0, j
-            while k < n:
-                ch = body[k]
-                if ch == '"':
-                    k = _skip_str(body, k) - 1
-                elif ch == "<":
-                    k = _iri_end(body, k)
-                elif ch == "{":
-                    depth += 1
-                elif ch == "}":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                k += 1
-            if depth != 0:
-                raise ValueError(f"unbalanced braces in {kw} group")
-            out.append((kw, body[j + 1 : k]))
-            i = k + 1
-            continue
-        kept.append(c)
-        i += 1
-    return "".join(kept), out
-
-
-def _split_alternation(body: str) -> list[str] | None:
-    """When the body is exactly ``{…} UNION {…} [UNION {…}]*`` (string-
-    and IRI-aware), return the inner group bodies; else None. UNION mixed
-    with other content keeps raising in _extract_groups — SPARQL's
-    group-or-union-of-whole-groups is the supported shape."""
-    parts: list[str] = []
-    i, n = 0, len(body)
-    expect_group = True
-    while i < n:
-        if body[i].isspace():
-            i += 1
-            continue
-        if expect_group:
-            if body[i] != "{":
-                return None
-            depth, k = 0, i
-            while k < n:
-                ch = body[k]
-                if ch == '"':
-                    k = _skip_str(body, k) - 1
-                elif ch == "<":
-                    k = _iri_end(body, k)
-                elif ch == "{":
-                    depth += 1
-                elif ch == "}":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                k += 1
-            if depth != 0:
-                return None
-            parts.append(body[i + 1 : k])
-            i = k + 1
-            expect_group = False
-        else:
-            m = re.match(r"\s*UNION\b", body[i:], re.I)
-            if not m:
-                return None
-            i += m.end()
-            expect_group = True
-    if expect_group or len(parts) < 2:
-        return None
-    return parts
-
-
-def _parse_group(body: str) -> _Block:
-    """Parse a group graph pattern into a _Block (recursive over nested
-    OPTIONAL / FILTER [NOT] EXISTS groups and whole-group UNIONs)."""
-    if re.match(r"\s*SELECT\b", body, re.I):
-        # a UNION branch that is itself a subquery: { SELECT … } UNION …
-        return _Block(
-            (), (), (), (),
-            subselects=(_no_values(parse_select_query(body), "a subquery"),),
-        )
-    alts = _split_alternation(body)
-    if alts is not None:
-        return _Block((), (), (), (), tuple(_parse_group(a) for a in alts))
-    rest, groups = _extract_groups(body)
-    patterns, filters, binds, path_groups = _parse_patterns(rest)
-    subgroups: list[_Block] = list(path_groups)
-    optionals: list[_Block] = []
-    exists: list[tuple[bool, _Block]] = []
-    minuses: list[_Block] = []
-    values_clauses: list[_ValuesClause] = []
-    subselects: list[_SelectQuery] = []
-    graphs: list[tuple] = []
-    for kw, inner in groups:
-        if kw == "VALUES":
-            values_clauses.append(inner)
-            continue
-        if kw == "SUBSELECT":
-            subselects.append(
-                _no_values(parse_select_query(inner), "a subquery")
-            )
-            continue
-        if kw == "GRAPH":
-            gterm_text, gbody = inner
-            gterm = _parse_term(gterm_text)
-            if gterm.kind not in ("iri", "var"):
-                raise ValueError(
-                    f"GRAPH name must be an IRI or variable, got {gterm_text!r}"
-                )
-            graphs.append((gterm, _parse_group(gbody)))
-            continue
-        sub = _parse_group(inner)
-        if kw == "OPTIONAL":
-            optionals.append(sub)
-        elif kw == "MINUS":
-            minuses.append(sub)
-        elif kw == "GROUP":
-            subgroups.append(sub)
-        else:
-            exists.append((kw == "FILTER NOT EXISTS", sub))
-    return _Block(
-        tuple(patterns),
-        tuple(filters),
-        tuple(optionals),
-        tuple(exists),
-        (),
-        tuple(minuses),
-        tuple(subgroups),
-        tuple(binds),
-        tuple(values_clauses),
-        tuple(subselects),
-        tuple(graphs),
-    )
-
-
-_PREFIX_DECL_RE = re.compile(
-    r"^\s*PREFIX\s+([A-Za-z_][\w-]*):\s*<([^>]*)>", re.I
-)
-_PNAME_RE = re.compile(r"(?<![\w?$:<])([A-Za-z_][\w-]*):([A-Za-z_][\w.-]*)")
 
 
 def declared_prefixes(by_subject: dict, node: str) -> dict[str, str]:
@@ -630,46 +303,6 @@ def declared_prefixes(by_subject: dict, node: str) -> dict[str, str]:
     return prefixes
 
 
-def expand_prefixes(text: str, prefixes: dict[str, str]) -> str:
-    """Strip leading PREFIX declarations and expand ``pfx:local`` tokens to
-    ``<iri>`` outside <...> / "..." regions. Unknown prefixes raise — a
-    silently-unexpanded pname would parse as a syntax error downstream with
-    a worse message."""
-    pfx = dict(prefixes)
-    while True:
-        m = _PREFIX_DECL_RE.match(text)
-        if not m:
-            break
-        pfx[m.group(1)] = m.group(2)
-        text = text[m.end():]
-
-    def _sub(m: re.Match) -> str:
-        if m.group(1) not in pfx:
-            raise ValueError(f"undeclared prefix {m.group(1)!r} in sh:sparql query")
-        return f"<{pfx[m.group(1)]}{m.group(2)}>"
-
-    out: list[str] = []
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch == "<":
-            j = text.find(">", i)
-            j = n if j < 0 else j + 1
-            out.append(text[i:j])
-        elif ch == '"':
-            j = i + 1
-            while j < n and text[j] != '"':
-                j += 2 if text[j] == "\\" else 1
-            j = min(j + 1, n)
-            out.append(text[i:j])
-        else:
-            nxt = [k for k in (text.find("<", i), text.find('"', i)) if k >= 0]
-            j = min(nxt) if nxt else n
-            out.append(_PNAME_RE.sub(_sub, text[i:j]))
-        i = j
-    return "".join(out)
-
-
 def index_rows(shapes_rows: list) -> dict[str, dict[str, list]]:
     """Index collected shapes-graph rows as s -> p -> [rows]."""
     by_subject: dict[str, dict[str, list]] = {}
@@ -681,8 +314,8 @@ def index_rows(shapes_rows: list) -> dict[str, dict[str, list]]:
 def compile_sparql_constraints(shapes_rows: list) -> dict[str, list[SparqlConstraint]]:
     """From collected shapes-graph rows (s, p, o_value ... tuples as Row
     objects), gather sh:sparql constraint nodes grouped by owning shape.
-    Prefixed names are expanded at compile time (sh:prefixes + inline
-    PREFIX), so the stored select is fully-IRI'd."""
+    The select is lexed here: prefixed names resolve against its PREFIX
+    prologue plus the node's sh:prefixes."""
     by_subject = index_rows(shapes_rows)
     out: dict[str, list[SparqlConstraint]] = {}
     for subj, preds in by_subject.items():
@@ -694,9 +327,7 @@ def compile_sparql_constraints(shapes_rows: list) -> dict[str, list[SparqlConstr
                 raise ValueError(f"sh:sparql node {node} has no sh:select")
             msgs = props.get(SH + "message", [])
             sevs = props.get(SH + "severity", [])
-            select = expand_prefixes(
-                selects[0].o_value, declared_prefixes(by_subject, node)
-            )
+            select = lex(selects[0].o_value, declared_prefixes(by_subject, node))
             out.setdefault(subj, []).append(
                 SparqlConstraint(
                     node_shape=subj,
@@ -722,24 +353,36 @@ def _local_name(iri_str: str) -> str:
 
 
 def _render_param(row) -> str:
-    """Render a parameter value row as a SPARQL constant for textual
-    pre-binding. IRIs render as ``<iri>``; literals render as plain quoted
-    strings of their lexical form (the pattern/filter grammar of this
-    subset has no typed-literal tokens — regex/comparison parameters are
-    exactly lexical)."""
+    """A parameter value row as a SPARQL constant. IRIs render as
+    ``<iri>``; literals render as plain quoted strings of their lexical
+    form (the pattern/filter grammar of this subset has no typed-literal
+    tokens — regex/comparison parameters are exactly lexical)."""
     if row.o_kind == KIND_IRI:
         return f"<{row.o_value}>"
     esc = row.o_value.replace("\\", "\\\\").replace('"', '\\"')
     return f'"{esc}"'
 
 
-def _substitute_param(text: str, var: str, rendered: str, lexical: str) -> str:
-    """Pre-bind ``$var`` / ``?var`` in a validator select (whole-token
-    match) and ``{$var}`` / ``{?var}`` in messages (SHACL-AF §6.4)."""
-    text = re.sub(
-        r"\{[?$]" + re.escape(var) + r"\}", lexical.replace("\\", "\\\\"), text
+def _bind_var(src: _Lexed, name: str, const: _Tok) -> _Lexed:
+    """Pre-bind ``$name`` / ``?name`` to the constant token ``const``."""
+    return src._replace(
+        toks=tuple(
+            dataclasses.replace(const, pos=t.pos)
+            if t.kind == "var" and t.value == name
+            else t
+            for t in src.toks
+        )
     )
-    return re.sub(r"[?$]" + re.escape(var) + r"\b", rendered, text)
+
+
+def _fill_message(message: str, var: str, rendered: str, lexical: str) -> str:
+    """Pre-bind a parameter in a message template (SHACL-AF §6.4; not
+    SPARQL): ``{$var}`` / ``{?var}`` take the lexical form, a bare
+    ``$var`` / ``?var`` the rendered constant."""
+    message = re.sub(
+        r"\{[?$]" + re.escape(var) + r"\}", lexical.replace("\\", "\\\\"), message
+    )
+    return re.sub(r"[?$]" + re.escape(var) + r"\b", rendered, message)
 
 
 def compile_custom_components(
@@ -755,18 +398,19 @@ def compile_custom_components(
 
     A NODE SHAPE carrying values for every mandatory parameter gets one
     constraint instance per combination of parameter values; parameters
-    pre-bind TEXTUALLY into the validator's select ($var / ?var whole-token
-    substitution, IRIs as <…>, literals as plain quoted lexical forms) and
-    into the message ({$var} templates). Results report the component IRI
-    as sourceConstraintComponent and the shape as sourceShape. Validators
-    are SELECT-based (sh:validator / sh:nodeValidator with sh:select —
-    each solution is a violation) or ASK-based (sh:ask — the focus node
-    conforms iff the pre-bound pattern has a solution, SHACL-AF §6.2.2).
+    pre-bind into the validator's tokens ($var / ?var variable tokens
+    become IRI or plain string constants — never inside a literal) and
+    into the message ({$var} templates, textual). Results report the
+    component IRI as sourceConstraintComponent and the shape as
+    sourceShape. Validators are SELECT-based (sh:validator /
+    sh:nodeValidator with sh:select — each solution is a violation) or
+    ASK-based (sh:ask — the focus node conforms iff the pre-bound pattern
+    has a solution, SHACL-AF §6.2.2).
 
     A PROPERTY SHAPE (subject carrying sh:path) applies the component
     per value of its path under the OWNING node shape:
     sh:propertyValidator is preferred (sh:validator the fallback),
-    ``$PATH`` substitutes textually with the path IRI in SELECT bodies,
+    ``$PATH`` binds to the path IRI in SELECT bodies,
     and ASK validators evaluate per (focus, value) pair with
     ``?value``/``$value`` pre-bound; complex sh:path stays outside the
     subset. Parameter values live on shape subjects under arbitrary
@@ -805,8 +449,9 @@ def compile_custom_components(
                     "sh:select nor sh:ask"
                 )
             msgs = vprops.get(SH + "message", [])
-            body = (selects or asks)[0].o_value
-            body = expand_prefixes(body, declared_prefixes(by_subject, vnode))
+            body = lex(
+                (selects or asks)[0].o_value, declared_prefixes(by_subject, vnode)
+            )
             return (
                 body,
                 bool(asks) and not selects,
@@ -888,7 +533,9 @@ def compile_custom_components(
                 )
             select, is_ask, message = v
             if prop_path:
-                select = re.sub(r"[?$]PATH\b", f"<{prop_path}>", select)
+                select = _bind_var(
+                    select, "PATH", _Tok("iri", prop_path, f"<{prop_path}>")
+                )
             per_param: list[list] = []
             complete = True
             for path, optional in params:
@@ -910,9 +557,10 @@ def compile_custom_components(
                         continue
                     var = _local_name(path)
                     rendered = _render_param(row)
-                    sel = _substitute_param(sel, var, rendered, row.o_value)
+                    kind = "iri" if row.o_kind == KIND_IRI else "str"
+                    sel = _bind_var(sel, var, _Tok(kind, row.o_value, rendered))
                     if msg:
-                        msg = _substitute_param(msg, var, rendered, row.o_value)
+                        msg = _fill_message(msg, var, rendered, row.o_value)
                 out.setdefault(owner, []).append(
                     SparqlConstraint(
                         node_shape=owner,
@@ -936,22 +584,15 @@ class SparqlFunction:
     """SHACL-AF §7 SPARQL function, pure-expression subset: the sh:select
     body must be ``SELECT (expr AS ?out) WHERE {}`` — a computation over
     the pre-bound parameters with no graph patterns (how SHACL functions
-    are overwhelmingly written: expression wrappers). Calls are expanded
-    TEXTUALLY into the calling validator's expression before parsing, so
-    the evaluator never sees the function — the same pre-binding strategy
-    custom-component parameters use. Bodies with graph patterns would be
+    are overwhelmingly written: expression wrappers). Calls expand into
+    the calling validator's tokens before parsing, so the evaluator never
+    sees the function — the same pre-binding strategy custom-component
+    parameters use. Bodies with graph patterns would be
     correlated subqueries per call site; they raise (out of subset)."""
 
     iri: str
     params: list[str]  # ordered parameter variable names
-    expr: str  # the expression template over ?param names
-
-
-_FN_BODY_RE = re.compile(
-    r"^\s*SELECT\s*\(\s*(.*?)\s+AS\s+[?$][A-Za-z_]\w*\s*\)\s*"
-    r"WHERE\s*\{\s*\}\s*$",
-    re.I | re.S,
-)
+    expr: tuple  # the expression's tokens over ?param names
 
 
 def compile_sparql_functions(shapes_rows: list) -> dict[str, SparqlFunction]:
@@ -988,110 +629,88 @@ def compile_sparql_functions(shapes_rows: list) -> dict[str, SparqlFunction]:
                 f"sh:SPARQLFunction {subj} has no sh:select (only "
                 "SELECT-expression functions are in the subset)"
             )
-        body = expand_prefixes(
-            selects[0].o_value, declared_prefixes(by_subject, subj)
-        )
-        m = _FN_BODY_RE.match(body.strip())
-        if not m:
+        p = _Parser(lex(selects[0].o_value, declared_prefixes(by_subject, subj)))
+        try:
+            p.expect_kw("SELECT")
+            _out, expr = p.named_expr("expected (expr AS ?out)")
+            p.accept_kw("WHERE")
+            p.expect("{")
+            p.expect("}")
+            p.end("the function body")
+        except SparqlParseError as e:
             raise ValueError(
                 f"sh:SPARQLFunction {subj}: only pure-expression bodies "
                 "'SELECT (expr AS ?out) WHERE {}' are in the subset"
-            )
-        out[subj] = SparqlFunction(
-            subj, [name for _o, name in sorted(plist)], m.group(1).strip()
-        )
+            ) from e
+        out[subj] = SparqlFunction(subj, [name for _o, name in sorted(plist)], expr)
     return out
 
 
-def _split_call_args(text: str, start: int) -> tuple[list[str], int]:
-    """Split the balanced ``(...)`` argument list starting at `start` (the
-    opening paren) into top-level comma-separated argument texts; returns
-    (args, index past the closing paren). Respects nested parens, quoted
-    strings and <iri> regions."""
+def _call_args(toks: tuple, i: int) -> tuple[list[list[_Tok]], int]:
+    """toks[i] is a call's '('. Its top-level comma-separated arguments
+    and the index past the closing ')'."""
+    args: list[list[_Tok]] = []
+    cur: list[_Tok] = []
     depth = 0
-    args: list[str] = []
-    buf: list[str] = []
-    i, n = start, len(text)
-    while i < n:
-        c = text[i]
-        if c == '"':
-            j = i + 1
-            while j < n and text[j] != '"':
-                j += 2 if text[j] == "\\" else 1
-            j = min(j + 1, n)
-            buf.append(text[i:j])
-            i = j
-            continue
-        if c == "<":
-            j = text.find(">", i)
-            j = n if j < 0 else j + 1
-            buf.append(text[i:j])
-            i = j
-            continue
-        if c == "(":
-            depth += 1
-            if depth > 1:
-                buf.append(c)
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                arg = "".join(buf).strip()
-                if arg or args:
-                    args.append(arg)
-                return args, i + 1
-            buf.append(c)
-        elif c == "," and depth == 1:
-            args.append("".join(buf).strip())
-            buf = []
-        else:
-            buf.append(c)
+    while toks[i].kind != "eof":
+        t = toks[i]
         i += 1
-    raise ValueError(f"unbalanced function argument list near {text[start:start+40]!r}")
+        if t.kind == "op" and t.text in ("(", ")", ","):
+            depth += (t.text == "(") - (t.text == ")")
+            if depth == 0:
+                if cur or args:
+                    args.append(cur)
+                return args, i
+            if depth == 1 and t.text in "(,":
+                if t.text == ",":
+                    args.append(cur)
+                    cur = []
+                continue
+        cur.append(t)
+    raise ValueError("unbalanced function argument list")
 
 
 def expand_function_calls(
-    text: str, functions: dict[str, SparqlFunction], max_depth: int = 25
-) -> str:
+    src: str | _Lexed, functions: dict[str, SparqlFunction], max_depth: int = 25
+) -> _Lexed:
     """Expand every ``<fn-iri>(args…)`` call of a declared SPARQL function
-    into its parenthesized expression template with arguments substituted
-    textually (each argument itself parenthesized, so precedence is
-    preserved). Iterates for nested / mutually-referencing functions with
-    a depth bound (cycles raise)."""
-    if not functions:
-        return text
+    into its parenthesized expression with each parameter token replaced
+    by the parenthesized argument tokens (precedence is preserved).
+    Iterates for nested / mutually-referencing functions with a depth
+    bound (cycles raise). Expanded tokens carry the call's position."""
+    src = _lexed(src)
+    toks = src.toks
     for _ in range(max_depth):
-        replaced = False
-        for iri_str, fn in functions.items():
-            token = f"<{iri_str}>"
-            start = 0
-            while True:
-                at = text.find(token, start)
-                if at < 0:
-                    break
-                paren = at + len(token)
-                while paren < len(text) and text[paren].isspace():
-                    paren += 1
-                if paren >= len(text) or text[paren] != "(":
-                    start = at + len(token)
-                    continue
-                args, end = _split_call_args(text, paren)
-                if len(args) != len(fn.params):
-                    raise ValueError(
-                        f"function <{iri_str}> expects {len(fn.params)} "
-                        f"arguments, got {len(args)}"
-                    )
-                expr = fn.expr
-                for name, arg in zip(fn.params, args):
-                    expr = re.sub(
-                        r"[?$]" + re.escape(name) + r"\b",
-                        lambda _m, a=arg: f"({a})",
-                        expr,
-                    )
-                text = text[:at] + "(" + expr + ")" + text[end:]
-                replaced = True
-                start = at + 1
-        if not replaced:
-            return text
+        out: list[_Tok] = []
+        i = 0
+        expanded = False
+        while i < len(toks):
+            t = toks[i]
+            fn = functions.get(t.value) if t.kind == "iri" else None
+            if fn is None or toks[i + 1].text != "(":
+                out.append(t)
+                i += 1
+                continue
+            args, i = _call_args(toks, i + 1)
+            if len(args) != len(fn.params):
+                raise SparqlParseError(
+                    f"function <{fn.iri}> expects {len(fn.params)} "
+                    f"arguments, got {len(args)}",
+                    t.pos,
+                    src.text,
+                )
+            bound = dict(zip(fn.params, args))
+            out.append(_op("(", t.pos))
+            for e in fn.expr:
+                if e.kind == "var" and e.value in bound:
+                    out += [_op("(", t.pos), *bound[e.value], _op(")", t.pos)]
+                else:
+                    out.append(dataclasses.replace(e, pos=t.pos))
+            out.append(_op(")", t.pos))
+            expanded = True
+        if not expanded:
+            return src._replace(toks=toks)
+        toks = tuple(out)
     raise ValueError(
         "SPARQL function expansion did not terminate (recursive functions?)"
     )
@@ -1100,10 +719,10 @@ def expand_function_calls(
 SH_SPARQL_TARGET = SH + "SPARQLTarget"
 
 
-def compile_sparql_targets(shapes_rows: list) -> dict[str, list[str]]:
+def compile_sparql_targets(shapes_rows: list) -> dict[str, list[_Lexed]]:
     """SHACL-AF §3 custom targets: gather ``shape sh:target t`` where
     ``t a sh:SPARQLTarget ; sh:select "SELECT ?this WHERE { … }"``,
-    grouped by owning shape, selects prefix-expanded. Any other
+    grouped by owning shape, selects lexed (prefixes resolved). Any other
     sh:target node type raises — outside the supported subset."""
     by_subject = index_rows(shapes_rows)
     out: dict[str, list[str]] = {}
@@ -1121,15 +740,13 @@ def compile_sparql_targets(shapes_rows: list) -> dict[str, list[str]]:
             if not selects:
                 raise ValueError(f"sh:SPARQLTarget {node} has no sh:select")
             out.setdefault(subj, []).append(
-                expand_prefixes(
-                    selects[0].o_value, declared_prefixes(by_subject, node)
-                )
+                lex(selects[0].o_value, declared_prefixes(by_subject, node))
             )
     return out
 
 
 def evaluate_target_select(
-    spark: SparkSession, data: DataFrame, select: str
+    spark: SparkSession, data: DataFrame, select: str | _Lexed
 ) -> DataFrame:
     """Evaluate a sh:SPARQLTarget select; returns DataFrame[focus]
     (distinct). Inside a target select ``?this`` is an ordinary variable
@@ -1173,13 +790,6 @@ def evaluate_target_select(
     return bound.select(F.col("this__value").alias("focus")).distinct()
 
 
-_TERM_RE = re.compile(
-    r"""\$this|\?[A-Za-z_][A-Za-z0-9_]*|<[^>]*>|"(?:[^"\\]|\\.)*"|\ba\b
-        |[0-9]+(?:\.[0-9]+)?""",
-    re.X,
-)
-
-
 _ECHAR = {
     "n": "\n", "r": "\r", "t": "\t", "b": "\b", "f": "\f",
     '"': '"', "'": "'", "\\": "\\",
@@ -1210,22 +820,6 @@ def _unescape_string(lex: str) -> str:
 
     return _STR_ESCAPE_RE.sub(_sub, lex)
 
-
-def _parse_term(tok: str) -> _Term:
-    if tok == "$this":
-        return _Term("this", "this")
-    if tok.startswith("?"):
-        return _Term("var", tok[1:])
-    if tok.startswith("<"):
-        return _Term("iri", tok[1:-1])
-    if tok.startswith('"'):
-        return _Term("lit", _unescape_string(tok[1:-1]), dt=XSD + "string")
-    # bare number
-    return _Term("lit", tok, dt=XSD + ("decimal" if "." in tok else "integer"))
-
-
-_BIND_AS_RE = re.compile(r"\s+AS\s+\?([A-Za-z_]\w*)\s*$", re.I)
-
 # SPARQL path modifier -> SHACL closure kind (sh:zeroOrMorePath etc.)
 _CLOSURE_KINDS = {"*": "zeroOrMore", "+": "oneOrMore", "?": "zeroOrOne"}
 
@@ -1245,9 +839,7 @@ def _to_path_expr(ast: tuple):
     """Convert a closure-bearing path AST into the core engine's
     normalized PathExpr tree (plans/shacl.py path algebra) so the
     bounded reachability fixpoint can evaluate it."""
-    from .shacl import PAlt, PClosure, PInv, PPred, PSeq, _normalize_path
-
-    from .shacl import PNeg
+    from .shacl import PAlt, PClosure, PInv, PNeg, PPred, PSeq, _normalize_path
 
     def conv(a: tuple):
         k = a[0]
@@ -1266,531 +858,994 @@ def _to_path_expr(ast: tuple):
     return _normalize_path(conv(ast))
 
 
-# process-global so two groups of one query can never mint the same
-# bnode-list variable (a bnode label's scope is its basic graph pattern
-# — a shared name would incorrectly join across groups)
-class _FreshIds:
-    """Process-global fresh-variable counter that can be advanced past
-    any ids ALREADY PRESENT in a body — a user is free to write ``?_bp0``
-    (legal SPARQL), and a colliding mint would silently join their
-    pattern with a desugared bracket's chain."""
-
-    def __init__(self, prefix: str) -> None:
-        self.n = 0
-        self._re = re.compile(r"[?$]" + prefix + r"(\d+)\b")
-
-    def reserve(self, body: str) -> None:
-        for m in self._re.finditer(body):
-            self.n = max(self.n, int(m.group(1)) + 1)
-
-    def next(self) -> int:
-        v = self.n
-        self.n += 1
-        return v
+# ------------------------------------------------------------ front end
+# One lexer and one recursive-descent parser over the SPARQL 1.1 grammar
+# (§19). Every query text — sh:select / sh:ask / sh:construct bodies,
+# target selects, standalone queries, update requests — is lexed once
+# (prefixed names resolve in the lexer) and parsed once into the _Block /
+# _SelectQuery values the evaluator consumes. Pre-binding (component
+# parameters, $PATH, SPARQL-function calls) substitutes tokens, so string
+# literals and IRIs are never rewritten.
 
 
-_BNODE_LIST_IDS = _FreshIds("_bp")
-
-# the rdf: vocabulary a collection desugars onto (RDF_TYPE is
-# .../22-rdf-syntax-ns#type; first/rest/nil share its namespace)
-_RDF_NS = RDF_TYPE[: RDF_TYPE.rindex("#") + 1]
-RDF_FIRST = _RDF_NS + "first"
-RDF_REST = _RDF_NS + "rest"
-RDF_NIL = _RDF_NS + "nil"
-
-_COLLECTION_IDS = _FreshIds("_cl")  # same scope rule as _BNODE_LIST_IDS
+class SparqlParseError(ParseError):
+    """Malformed or unsupported SPARQL, located in the query text."""
 
 
-def _expand_bnode_lists(body: str) -> str:
-    """Desugar Turtle-style blank-node property lists in a pattern body:
-    ``?s <p> [ <q> ?v ; <r> ?w ]`` becomes ``?s <p> ?_bpN . ?_bpN <q> ?v .
-    ?_bpN <r> ?w`` with a fresh non-distinguished variable per bracket
-    (SPARQL treats a pattern bnode exactly as a variable that cannot be
-    projected). ``[]`` is the anonymous node — just the fresh variable.
-    Nested lists expand recursively; brackets inside strings/IRIs are
-    untouched."""
-    _BNODE_LIST_IDS.reserve(body)
-    while True:
-        i, n = 0, len(body)
-        found = -1
-        while i < n:
-            c = body[i]
-            if c == '"' or c == "'":
-                i = _skip_str(body, i)
-            elif c == "<":
-                i = _iri_end(body, i) + 1
-            elif c == "[":
-                found = i
-                break
+@dataclass(frozen=True, slots=True)
+class _Tok:
+    """One token. Tokens compare by meaning (kind, value): ``ex:p`` and
+    its expanded ``<…>`` spelling are the same token."""
+
+    kind: str  # iri | var | str | num | name | op | eof
+    value: str  # IRI (prefix resolved) / variable name / decoded string / …
+    text: str = field(compare=False)  # the source spelling
+    pos: int = field(default=0, compare=False)  # offset into the lexed text
+
+
+class _Lexed(NamedTuple):
+    """A lexed SPARQL text: its tokens (ending in one eof token) and the
+    text their offsets point into."""
+
+    text: str
+    toks: tuple
+
+
+_IRIREF_RE = re.compile(r'<[^<>"{}|^`\\\x00-\x20]*>')
+_VAR_RE = re.compile(r"[?$](\w+)")
+_NAME_RE = re.compile(r"[^\W\d]\w*")
+_OP_RE = re.compile(r"&&|\|\||!=|<=|>=|[=<>!(),+\-*/{}\[\].;|^?]")
+
+
+class _Lexer(_TurtleReader):
+    """turtle.py's cursor supplies whitespace/comment skipping and the
+    IRIREF, prefixed-name and number readers; SPARQL adds variables,
+    keywords, operators and its own string escapes (_unescape_string)."""
+
+    def __init__(self, text: str, prefixes: dict[str, str]):
+        super().__init__(text, None)
+        self.prefixes = dict(prefixes)
+
+    def _fail(self, message: str) -> None:
+        raise SparqlParseError(message, self.i, self.text)
+
+    def _string_body(self) -> str:
+        """Raw body of the string literal at the cursor (any of the four
+        quote forms); the cursor moves past its closing quote."""
+        text, i = self.text, self.i
+        q = text[i]
+        delim = q * 3 if text.startswith(q * 3, i) else q
+        j = i + len(delim)
+        while j < self.n:
+            if text[j] == "\\":
+                j += 2
+            elif text.startswith(delim, j):
+                # quotes right before a long string's close are content
+                while len(delim) == 3 and text.startswith(q, j + 3):
+                    j += 1
+                self.i = j + len(delim)
+                return text[i + len(delim) : j]
             else:
-                i += 1
-        if found < 0:
-            return body
-        j = _delim_end(body, found, "[", "]")
-        inner = body[found + 1 : j].strip()
-        var = f"?_bp{_BNODE_LIST_IDS.next()}"
-        if inner:
-            # the appended statements go through the same loop, so nested
-            # brackets inside `inner` expand on a later iteration
-            body = (
-                body[:found] + var + body[j + 1 :]
-                + f" . {var} {inner} . "
-            )
-        else:
-            body = body[:found] + var + body[j + 1 :]
-
-
-def _is_collection(inner: str) -> bool:
-    """Classify the content of one balanced paren group in a pattern
-    body: RDF collection (True) or property-path group (False) — the
-    only two legal meanings of parens once FILTER/BIND are extracted.
-    A group holding a variable, literal, or number can only be a
-    collection (paths are built from IRIs alone); a group holding a
-    path operator can only be a path; an operator-free group of IRIs
-    is a collection unless it has exactly one member — ``(<p>)`` keeps
-    its established path-group meaning in PREDICATE position, and the
-    caller raises for the genuinely ambiguous object/subject-position
-    case (a would-be one-element list) instead of silently changing
-    its meaning (round-4 ADVICE)."""
-    terms = 0
-    for t in _COLL_TOK_RE.findall(inner):
-        if t in ("(", ")"):
-            continue
-        if len(t) == 1 and t in "/|^*+!?;,.":
-            return False
-        if t.startswith(("?", "$", '"')) or t[0].isdigit():
-            return True
-        terms += 1  # <iri> or `a`
-    return terms != 1
-
-
-def _one_iri_group(inner: str) -> bool:
-    """True for an operator-free paren group holding exactly one IRI or
-    ``a`` — the one shape _is_collection cannot classify alone."""
-    terms = 0
-    for t in _COLL_TOK_RE.findall(inner):
-        if t in ("(", ")"):
-            continue
-        if len(t) == 1 and t in "/|^*+!?;,.":
-            return False
-        if t.startswith(("?", "$", '"')) or t[0].isdigit():
-            return False
-        terms += 1
-    return terms == 1
-
-
-_COLL_TOK_RE = re.compile(_TERM_RE.pattern + r"|[.\/^|()*+?!;,]", re.X)
-_COLL_ITEM_RE = re.compile(r"\$this|\?[A-Za-z_]\w*|[0-9]+(?:\.[0-9]+)?")
-
-
-def _collection_items(inner: str) -> list[str]:
-    """Split a collection body into member term texts (string- and
-    IRI-aware; a nested ``( … )`` stays one item for the re-scan loop)."""
-    items: list[str] = []
-    i, n = 0, len(inner)
-    while i < n:
-        c = inner[i]
-        if c.isspace():
-            i += 1
-            continue
-        if c == "(":
-            j = _delim_end(inner, i, "(", ")")
-        elif c == "<":
-            j = _iri_end(inner, i)
-        elif c == '"':
-            j = _skip_str(inner, i) - 1
-        else:
-            m = _COLL_ITEM_RE.match(inner, i)
-            if not m:
-                raise ValueError(
-                    f"unsupported collection member near {inner[i:i + 30]!r}"
-                )
-            items.append(m.group(0))
-            i = m.end()
-            continue
-        items.append(inner[i : j + 1])
-        i = j + 1
-    return items
-
-
-def _expand_collections(body: str) -> str:
-    """Desugar RDF collections ``( e1 e2 … )`` in subject/object position
-    into the rdf:first/rdf:rest chain the data actually stores (Turtle
-    collections are pure surface syntax for that chain —
-    sources/turtle.py emits it on read; this lets patterns match it
-    back): ``?s <p> ( ?a ?b )`` becomes ``?s <p> ?_cl0 . ?_cl0 rdf:first
-    ?a . ?_cl0 rdf:rest ?_cl1 . ?_cl1 rdf:first ?b . ?_cl1 rdf:rest
-    rdf:nil`` with fresh non-distinguished variables; ``()`` is the
-    constant rdf:nil. Path groups are skipped whole (see
-    _is_collection). Nested collections land in the appended statements
-    and expand on a later sweep of the outer while loop. Runs AFTER
-    _expand_bnode_lists, so no ``[`` survives outside strings/IRIs.
-    In a CONSTRUCT/UPDATE template the minted chain variables are
-    unbound and instantiation rejects them — collections are a WHERE-
-    pattern (and INSERT/DELETE WHERE-side) device here."""
-    _COLLECTION_IDS.reserve(body)
-    while True:
-        i, n = 0, len(body)
-        target = -1
-        while i < n:
-            c = body[i]
-            if c == '"':
-                i = _skip_str(body, i)
-            elif c == "<":
-                i = _iri_end(body, i) + 1
-            elif c == "(":
-                j = _delim_end(body, i, "(", ")")
-                inner = body[i + 1 : j]
-                if _is_collection(inner):
-                    target = i
-                    break
-                if _one_iri_group(inner):
-                    # one operator-free IRI: a path group in predicate
-                    # position (followed by an object term) — legal and
-                    # kept — but ambiguous where only a term parses:
-                    # object position (end-of-statement OR before a ','
-                    # object-list separator) and subject position (start
-                    # of a statement — preceded by nothing, '.', '{' or
-                    # '}'). Raise there instead of silently picking the
-                    # path reading (round-5 review widened this from the
-                    # end-of-statement case alone).
-                    nxt = body[j + 1 :].lstrip()[:1]
-                    prev = body[:i].rstrip()[-1:]
-                    if nxt in ("", ".", ";", ",", "}") or prev in (
-                        "", ".", "{", "}"
-                    ):
-                        raise ValueError(
-                            f"ambiguous one-member group ({inner.strip()})"
-                            " in subject/object position — write the"
-                            " rdf:first/rdf:rest chain explicitly for a"
-                            " one-element collection (a parenthesized"
-                            " path cannot be a term)"
-                        )
-                i = j + 1  # path group: skip it whole
-            else:
-                i += 1
-        if target < 0:
-            return body
-        j = _delim_end(body, target, "(", ")")
-        items = _collection_items(body[target + 1 : j])
-        if not items:
-            body = body[:target] + f"<{RDF_NIL}>" + body[j + 1 :]
-            continue
-        nodes = [f"?_cl{_COLLECTION_IDS.next()}" for _ in items]
-        stmts = []
-        for k, (node, item) in enumerate(zip(nodes, items)):
-            nxt = nodes[k + 1] if k + 1 < len(nodes) else f"<{RDF_NIL}>"
-            stmts.append(f"{node} <{RDF_FIRST}> {item}")
-            stmts.append(f"{node} <{RDF_REST}> {nxt}")
-        body = (
-            body[:target] + nodes[0] + body[j + 1 :]
-            + " . " + " . ".join(stmts) + " . "
-        )
-
-
-def _parse_patterns(
-    body: str, allow_filters: bool = True
-) -> tuple[list[_Pattern], list[_Filter], list[tuple[str, str]], list[_Block]]:
-    """Parse a { ... } block body into triple patterns + FILTERs +
-    BIND(expr AS ?var) clauses + sub-blocks desugared from property-path
-    alternatives (joined into the group like any nested sub-group)."""
-    # split out FILTER(...) / BIND(...) clauses with string/IRI-aware
-    # balanced-paren matching (a regex capture breaks on parens inside
-    # regex() pattern strings and on deeply parenthesized expressions)
-    filters: list[_Filter] = []
-    binds: list[tuple[str, str]] = []
-    kept: list[str] = []
-    i, n = 0, len(body)
-    while i < n:
-        c = body[i]
-        if c == '"':
-            j = _skip_str(body, i)
-            kept.append(body[i:j])
-            i = j
-            continue
-        if c == "<":
-            j = _iri_end(body, i)
-            kept.append(body[i : j + 1])
-            i = j + 1
-            continue
-        fm = re.match(r"(FILTER|BIND)\b", body[i:], re.I)
-        if fm and (i == 0 or not re.match(r"[\w?$]", body[i - 1])):
-            kw = fm.group(1).upper()
-            if not allow_filters:
-                raise ValueError(
-                    f"{kw} is not allowed in a CONSTRUCT template"
-                )
-            j = i + fm.end()
-            while j < n and body[j].isspace():
                 j += 1
-            if j >= n or body[j] != "(":
-                raise ValueError(f"expected '(' after {kw}")
-            k = _delim_end(body, j, "(", ")")
-            inner = body[j + 1 : k].strip()
-            if kw == "FILTER":
-                filters.append(_Filter(inner))
+        self._fail("unterminated string")
+
+    def _prefix_decl(self) -> None:
+        self._skip_ws()
+        m = _PN_PREFIX_RE.match(self.text, self.i)
+        end = m.end() if m else self.i
+        if not self.text.startswith(":", end):
+            self._fail("expected 'prefix:' after PREFIX")
+        self.i = end + 1
+        self._skip_ws()
+        if not _IRIREF_RE.match(self.text, self.i):
+            self._fail("expected <namespace> in a PREFIX declaration")
+        self.prefixes[m.group(0) if m else ""] = self._read_iriref()
+
+    def tokens(self) -> tuple:
+        text, out = self.text, []
+        while True:
+            self._skip_ws()
+            i = self.i
+            if i >= self.n:
+                out.append(_Tok("eof", "", "", i))
+                return tuple(out)
+            c = text[i]
+            m = None
+            if c == "<" and _IRIREF_RE.match(text, i):
+                kind, value = "iri", self._read_iriref()
+            elif c in "?$" and (m := _VAR_RE.match(text, i)):
+                kind, value = "var", m.group(1)
+            elif c in "\"'":
+                kind, value = "str", _unescape_string(self._string_body())
+            elif c.isdigit():
+                kind, value = "num", _NUMBER_RE.match(text, i).group(0)
+                self.i += len(value)
+            elif text.startswith("_:", i):
+                self._fail("blank node labels are not supported (use a variable)")
+            elif c == ":" or _NAME_RE.match(text, i):
+                p = _PN_PREFIX_RE.match(text, i)
+                if text.startswith(":", p.end() if p else i):
+                    kind, value = "iri", self._read_pname()
+                else:
+                    kind, m = "name", _NAME_RE.match(text, i)
+                    value = m.group(0)
+                    if value.upper() == "PREFIX":
+                        self.i = m.end()
+                        self._prefix_decl()
+                        continue
+            elif m := _OP_RE.match(text, i):
+                kind, value = "op", m.group(0)
             else:
-                am = _BIND_AS_RE.search(inner)
-                if not am:
-                    raise ValueError(
-                        "expected BIND(expr AS ?var), got "
-                        f"BIND({inner[:40]!r})"
-                    )
-                binds.append((am.group(1), inner[: am.start()].strip()))
-            kept.append(" ")
-            i = k + 1
-            continue
-        kept.append(c)
-        i += 1
-    body = "".join(kept)
-    if "[" in body:
-        body = _expand_bnode_lists(body)
-    if "(" in body:
-        body = _expand_collections(body)
+                self._fail(f"unexpected character {c!r}")
+            if m is not None:
+                self.i = m.end()
+            out.append(_Tok(kind, value, text[i : self.i], i))
 
-    # tokenize the whole body (a "." splits statements only OUTSIDE <iri>
-    # and string tokens — the term alternatives consume those first; the
-    # path operators / ^ | ( ) * + ? tokenize individually — a bare `?`
-    # only when the variable alternative did not consume it first), then
-    # reject any leftover text (OPTIONAL, UNION, nested groups, ...)
-    tok_re = re.compile(_TERM_RE.pattern + r"|[.\/^|()*+?!;,]", re.X)
-    tokens = tok_re.findall(body)
-    leftover = tok_re.sub(" ", body).strip()
-    if leftover:
-        raise ValueError(f"unsupported select syntax near {leftover[:40]!r}")
 
-    patterns: list[_Pattern] = []
-    path_groups: list[_Block] = []
-    group: list[str] = []
-    fresh = itertools.count()
+def lex(text: str, prefixes: dict[str, str] | None = None) -> _Lexed:
+    """Tokenize a SPARQL text. Its PREFIX declarations and ``prefixes``
+    (shapes-graph sh:prefixes) resolve prefixed names to IRI tokens;
+    an undeclared prefix raises."""
+    return _Lexed(text, _Lexer(text, prefixes or {}).tokens())
 
-    def _emit(s_t: _Term, ast: tuple, o_t: _Term, pats: list, grps: list) -> None:
-        """Desugar one path AST node connecting s_t → o_t into triple
-        patterns (sequence steps via fresh variables, inverse via operand
-        swap) and UNION sub-blocks (alternatives)."""
-        kind = ast[0]
-        if kind == "iri":
-            if s_t.kind == "lit":
-                raise ValueError("literal subjects are not valid RDF")
-            pats.append(_Pattern(s_t, ast[1], o_t))
-        elif kind == "neg":
-            # a negated set is still ONE hop — it stays a single pattern
-            # whose relation is the complement slice (no fixpoint needed)
-            from .shacl import PNeg
 
-            if s_t.kind == "lit":
-                raise ValueError("literal subjects are not valid RDF")
-            pats.append(_Pattern(s_t, PNeg(ast[1], ast[2]), o_t))
-        elif kind == "inv":
-            _emit(o_t, ast[1], s_t, pats, grps)
-        elif kind == "seq":
-            steps = ast[1]
-            cur = s_t
-            for idx, step in enumerate(steps):
-                nxt = (
-                    o_t
-                    if idx == len(steps) - 1
-                    else _Term("var", f"_seq{next(fresh)}")
+def _lexed(src: str | _Lexed) -> _Lexed:
+    return src if isinstance(src, _Lexed) else lex(src)
+
+
+def _is_kw(t: _Tok, *words: str) -> bool:
+    return t.kind == "name" and t.value.upper() in words
+
+
+def _op(text: str, pos: int) -> _Tok:
+    return _Tok("op", text, text, pos)
+
+
+def _render(toks) -> str:
+    return " ".join(t.text for t in toks)
+
+
+_AGG_FNS = ("COUNT", "SUM", "MIN", "MAX", "AVG", "SAMPLE", "GROUP_CONCAT")
+
+
+@dataclass
+class _BList:
+    """A ``[ … ]`` blank-node property list node: (verb, object) pairs."""
+
+    props: list
+
+
+@dataclass
+class _Coll:
+    """A ``( … )`` RDF collection node."""
+
+    items: list
+
+
+@dataclass(frozen=True)
+class _Query:
+    """A parsed standalone query (plans/query.py)."""
+
+    form: str  # SELECT | ASK | CONSTRUCT | DESCRIBE
+    block: _Block | None  # the WHERE group (None: DESCRIBE <iri> only)
+    select: _SelectQuery | None = None
+    template: tuple | None = None  # CONSTRUCT patterns; None = CONSTRUCT WHERE
+    describe: tuple = ()  # DESCRIBE terms (_Term iri | var)
+    from_graphs: tuple = ()
+    from_named: tuple = ()
+
+
+@dataclass(frozen=True)
+class _UpdateOp:
+    """One operation of an update request (plans/query.py)."""
+
+    # CREATE, CLEAR (also DROP), ADD, COPY, MOVE, LOAD, INSERT DATA,
+    # DELETE DATA, DELETE WHERE or MODIFY ([WITH] DELETE/INSERT … WHERE)
+    verb: str
+    silent: bool = False
+    src: str | None = None  # CLEAR/ADD/COPY/MOVE graph, LOAD path (None: DEFAULT)
+    dst: str | None = None  # ADD/COPY/MOVE target, LOAD INTO graph
+    scope: str | None = None  # CLEAR/DROP: GRAPH | DEFAULT | NAMED | ALL
+    with_graph: str | None = None
+    delete: _Block | None = None  # DELETE DATA / DELETE WHERE / MODIFY
+    insert: _Block | None = None
+    using: tuple = ()
+    using_named: tuple = ()
+    where: _Block | None = None
+
+
+class _Parser:
+    """Recursive descent over one token stream. Fresh ``_bp`` (bnode
+    list), ``_cl`` (collection) and ``_seq`` (sequence-path hop)
+    variables are minted per parse, skipping names the query uses."""
+
+    def __init__(self, src: str | _Lexed):
+        self.src = _lexed(src)
+        self.toks = self.src.toks
+        self.i = 0
+        self.used = {t.value for t in self.toks if t.kind == "var"}
+        self.fresh: dict[str, int] = {}
+
+    # -- token plumbing
+    def peek(self, k: int = 0) -> _Tok:
+        return self.toks[min(self.i + k, len(self.toks) - 1)]
+
+    def take(self) -> _Tok:
+        t = self.peek()
+        if t.kind != "eof":
+            self.i += 1
+        return t
+
+    def fail(self, message: str, tok: _Tok | None = None) -> None:
+        raise SparqlParseError(message, (tok or self.peek()).pos, self.src.text)
+
+    def accept(self, text: str) -> bool:
+        if self.peek().kind == "op" and self.peek().text == text:
+            self.i += 1
+            return True
+        return False
+
+    def accept_kw(self, word: str) -> bool:
+        if _is_kw(self.peek(), word):
+            self.i += 1
+            return True
+        return False
+
+    def expect(self, text: str, after: str = "") -> _Tok:
+        t = self.peek()
+        if not self.accept(text):
+            where = f" after {after}" if after else ""
+            self.fail(f"expected {text!r}{where}, found {t.text or 'end of query'!r}")
+        return t
+
+    def expect_kw(self, word: str) -> None:
+        if not self.accept_kw(word):
+            self.fail(f"expected {word}, found {self.peek().text or 'end of query'!r}")
+
+    def end(self, what: str) -> None:
+        if self.peek().kind != "eof":
+            self.fail(f"unexpected {self.peek().text!r} after {what}")
+
+    def mint(self, prefix: str) -> _Term:
+        k = self.fresh.get(prefix, 0)
+        while f"{prefix}{k}" in self.used:
+            k += 1
+        self.fresh[prefix] = k + 1
+        self.used.add(f"{prefix}{k}")
+        return _Term("var", f"{prefix}{k}")
+
+    def span(self) -> tuple:
+        """The tokens inside the balanced ``( … )`` at the cursor — a
+        FILTER / BIND / HAVING / GROUP BY expression."""
+        open_tok = self.expect("(")
+        start, depth = self.i, 1
+        while depth:
+            t = self.take()
+            if t.kind == "eof":
+                self.fail("unbalanced parentheses", open_tok)
+            if t.kind == "op":
+                depth += (t.text == "(") - (t.text == ")")
+        return self.toks[start : self.i - 1]
+
+    def named_expr(self, message: str) -> tuple:
+        """``( expr AS ?var )`` -> (var, expr tokens)."""
+        at = self.peek()
+        toks = self.span()
+        if len(toks) < 3 or not _is_kw(toks[-2], "AS") or toks[-1].kind != "var":
+            self.fail(message, at)
+        return toks[-1].value, toks[:-2]
+
+    # -- terms
+    @staticmethod
+    def term(t: _Tok) -> _Term:
+        if t.kind == "var":
+            return _Term("this", "this") if t.text == "$this" else _Term("var", t.value)
+        if t.kind == "iri":
+            return _Term("iri", t.value)
+        if t.kind == "str":
+            return _Term("lit", t.value, dt=XSD + "string")
+        kind = "double" if "e" in t.value.lower() else (
+            "decimal" if "." in t.value else "integer"
+        )
+        return _Term("lit", t.value, dt=XSD + kind)
+
+    def node(self, after_comma: bool = False):
+        """A subject/object: a term, ``[ … ]`` or ``( … )``."""
+        t = self.peek()
+        if t.kind in ("var", "iri", "str", "num"):
+            return self.term(self.take())
+        if self.accept("["):
+            bl = _BList([])
+            if not self.accept("]"):
+                stmts: list = []
+                self.property_list(bl, stmts)
+                bl.props = [(v, o) for _s, v, o in stmts]
+                self.expect("]", "a blank-node property list")
+            return bl
+        if t.text == "(" and t.kind == "op":
+            inner = self.peek(1), self.peek(2)
+            if (
+                inner[1].text == ")"
+                and (inner[0].kind == "iri" or inner[0].text == "a")
+            ):
+                self.fail(
+                    f"ambiguous one-member group ({inner[0].text}) in "
+                    "subject/object position — write the rdf:first/rdf:rest "
+                    "chain explicitly for a one-element collection (a "
+                    "parenthesized path cannot be a term)",
+                    t,
                 )
-                _emit(cur, step, nxt, pats, grps)
+            self.take()
+            items: list = []
+            while not self.accept(")"):
+                x = self.peek()
+                if x.kind in ("var", "iri", "str", "num") or x.text in ("(", "["):
+                    items.append(self.node())
+                else:
+                    self.fail(f"unsupported collection member near {x.text!r}")
+            return _Coll(items)
+        if after_comma:
+            self.fail("empty ',' object-list continuation")
+        self.fail(f"unsupported graph pattern near {t.text or 'end of group'!r}")
+
+    def starts_verb(self) -> bool:
+        t = self.peek()
+        return t.kind in ("var", "iri") or t.text in ("a", "(", "^", "!")
+
+    def verb(self, paths: bool):
+        """A predicate: a variable, or a property path (an IRI / ``a`` is
+        the one-step path)."""
+        t = self.peek()
+        if t.kind == "var":
+            if t.text == "$this":
+                self.fail(
+                    "$this cannot appear in predicate position (the focus "
+                    "node is a subject/object term)"
+                )
+            self.take()
+            return _Term("var", t.value)
+        start = self.i
+        ast = self.path_alt()
+        if not paths and self.i - start != 1:
+            self.fail("property paths are not allowed in a CONSTRUCT template", t)
+        return ast
+
+    # path := seq ('|' seq)*; seq := step ('/' step)*; step := '^' step |
+    # primary mod*; primary := '(' path ')' | iri | 'a' | '!' negset. Per
+    # §19 a modifier binds tighter than '^': ``^<p>*`` is ``^(<p>*)``
+    def path_alt(self) -> tuple:
+        branches = [self.path_seq()]
+        while self.accept("|"):
+            branches.append(self.path_seq())
+        return branches[0] if len(branches) == 1 else ("alt", branches)
+
+    def path_seq(self) -> tuple:
+        steps = [self.path_step()]
+        while self.accept("/"):
+            steps.append(self.path_step())
+        return steps[0] if len(steps) == 1 else ("seq", steps)
+
+    def path_iri(self, t: _Tok) -> str | None:
+        if t.kind == "iri":
+            return t.value
+        return RDF_TYPE if t.text == "a" and t.kind == "name" else None
+
+    def path_step(self) -> tuple:
+        if self.accept("^"):
+            return ("inv", self.path_step())
+        t = self.peek()
+        if self.accept("!"):
+            # negated property set (§18.2.2.3): the forward and inverse
+            # members form two arms, each present only with members
+            sets: tuple = ([], [])
+            group = self.accept("(")
+            while True:
+                inv = self.accept("^")
+                member = self.peek()
+                if self.path_iri(member) is None:
+                    self.fail("unsupported negated property set member")
+                sets[inv].append(self.path_iri(self.take()))
+                if not (group and self.accept("|")):
+                    break
+            if group:
+                self.expect(")", "a negated property set")
+            node = ("neg", tuple(sets[0]) or None, tuple(sets[1]) or None)
+        elif self.accept("("):
+            node = self.path_alt()
+            self.expect(")", "a property path group")
+        elif self.path_iri(t) is not None:
+            node = ("iri", self.path_iri(self.take()))
+        else:
+            self.fail(f"unsupported property path near {t.text or 'end of group'!r}")
+        while self.peek().kind == "op" and self.peek().text in _CLOSURE_KINDS:
+            node = ("clo", _CLOSURE_KINDS[self.take().text], node)
+        return node
+
+    def property_list(self, subj, out: list, paths: bool = True) -> None:
+        """verb objects (';' [verb objects])* — Turtle's abbreviations:
+        ',' repeats subject and verb, ';' the subject."""
+        while True:
+            verb = self.verb(paths)
+            out.append((subj, verb, self.node()))
+            while self.accept(","):
+                out.append((subj, verb, self.node(after_comma=True)))
+            if not self.accept(";"):
+                return
+            while self.accept(";"):
+                pass
+            if not self.starts_verb():
+                return
+
+    def triples(self, out: list, paths: bool = True) -> None:
+        """TriplesSameSubject ('.' TriplesSameSubject?)*"""
+        while True:
+            subj = self.node()
+            if not (isinstance(subj, _BList) and subj.props and not self.starts_verb()):
+                self.property_list(subj, out, paths)
+            if not self.accept("."):
+                return
+            t = self.peek()
+            if not (t.kind in ("var", "iri", "str", "num") or t.text in ("(", "[")):
+                return
+
+    # -- statements -> patterns
+    def desugar(self, stmts: list) -> list:
+        """Replace ``[ … ]`` nodes, then ``( … )`` nodes, by fresh
+        variables, appending their triples breadth-first (SPARQL reads a
+        pattern bnode as a non-projectable variable; a collection is the
+        rdf:first/rdf:rest chain the Turtle reader stores, ``()`` is
+        rdf:nil)."""
+        memo: dict[int, tuple] = {}
+
+        def sub(node, kind):
+            if id(node) in memo:
+                return memo[id(node)][1]
+            if kind is _BList and isinstance(node, _Coll):
+                out = _Coll([sub(x, kind) for x in node.items])
+            elif not isinstance(node, kind):
+                return node
+            elif kind is _BList:
+                out = self.mint("_bp")
+                stmts.extend((out, v, o) for v, o in node.props)
+            elif not node.items:
+                out = _Term("iri", RDF_NIL)
+            else:
+                cells = [self.mint("_cl") for _ in node.items]
+                for k, item in enumerate(node.items):
+                    nxt = cells[k + 1] if k + 1 < len(cells) else _Term("iri", RDF_NIL)
+                    stmts.append((cells[k], ("iri", RDF_FIRST), item))
+                    stmts.append((cells[k], ("iri", RDF_REST), nxt))
+                out = cells[0]
+            memo[id(node)] = (node, out)  # keeps `node` (and its id) alive
+            return out
+
+        for kind in (_BList, _Coll):
+            k = 0
+            while k < len(stmts):
+                s, v, o = stmts[k]
+                stmts[k] = (sub(s, kind), v, sub(o, kind))
+                k += 1
+        return stmts
+
+    def patterns(self, stmts: list) -> tuple[list, list]:
+        """Emit desugared statements as triple patterns plus the UNION
+        sub-blocks of path alternatives."""
+        pats: list = []
+        groups: list = []
+        for s, verb, o in self.desugar(stmts):
+            if isinstance(verb, _Term) or _has_closure(verb):
+                # a variable predicate (one full-relation join) or a
+                # closure path (one PathExpr pattern for the bounded
+                # fixpoint) stays one pattern
+                if s.kind == "lit":
+                    raise ValueError("literal subjects are not valid RDF")
+                pred = verb if isinstance(verb, _Term) else _to_path_expr(verb)
+                pats.append(_Pattern(s, pred, o))
+            else:
+                self.emit(s, verb, o, pats, groups)
+        return pats, groups
+
+    def emit(self, s_t: _Term, ast: tuple, o_t: _Term, pats: list, grps: list) -> None:
+        """Desugar one closure-free path connecting s_t → o_t: sequence
+        steps chain through fresh variables, inverse swaps operands,
+        alternatives become a UNION sub-block."""
+        kind = ast[0]
+        if kind in ("iri", "neg"):
+            if s_t.kind == "lit":
+                raise ValueError("literal subjects are not valid RDF")
+            if kind == "iri":
+                pats.append(_Pattern(s_t, ast[1], o_t))
+            else:
+                # a negated set is still ONE hop over the complement slice
+                from .shacl import PNeg
+
+                pats.append(_Pattern(s_t, PNeg(ast[1], ast[2]), o_t))
+        elif kind == "inv":
+            self.emit(o_t, ast[1], s_t, pats, grps)
+        elif kind == "seq":
+            cur = s_t
+            for idx, step in enumerate(ast[1]):
+                nxt = o_t if idx == len(ast[1]) - 1 else self.mint("_seq")
+                self.emit(cur, step, nxt, pats, grps)
                 cur = nxt
         else:  # alt
             branches = []
             for b in ast[1]:
                 bp: list = []
                 bg: list = []
-                _emit(s_t, b, o_t, bp, bg)
-                branches.append(
-                    _Block(tuple(bp), (), (), (), (), (), tuple(bg))
-                )
+                self.emit(s_t, b, o_t, bp, bg)
+                branches.append(_Block(tuple(bp), (), (), (), (), (), tuple(bg)))
             grps.append(_Block((), (), (), (), tuple(branches)))
 
-    def _parse_path(toks: list[str]) -> tuple:
-        """Recursive-descent over the path grammar: alt := seq ('|' seq)*;
-        seq := step ('/' step)*; step := '^' step | primary mod*;
-        primary := '(' alt ')' | iri | a; mod := '*' | '+' | '?'.
-        Per the SPARQL 1.1 grammar a modifier binds tighter than '^'
-        (PathEltOrInverse := '^' PathElt, PathElt := primary mod), so
-        ``^<p>*`` parses as ``^(<p>*)``."""
-        pos = [0]
+    # -- group graph patterns
+    def group(self) -> _Block:
+        """'{' (SubSelect | GroupGraphPatternSub) '}'"""
+        open_tok = self.expect("{")
+        if _is_kw(self.peek(), "SELECT"):
+            q = _no_values(self.select(), "a subquery")
+            blk = _Block((), (), (), (), subselects=(q,))
+        else:
+            blk = self.group_body()
+        if self.peek().kind == "eof":
+            self.fail("unbalanced braces: this '{' is never closed", open_tok)
+        self.expect("}", "a group graph pattern")
+        return blk
 
-        def peek() -> str | None:
-            return toks[pos[0]] if pos[0] < len(toks) else None
-
-        def one_in_set(fwd: list, inv: list) -> None:
-            """PathOneInPropertySet := iri | 'a' | '^' (iri | 'a')."""
-            dest = fwd
-            t = peek()
-            if t == "^":
-                pos[0] += 1
-                dest = inv
-                t = peek()
-            if t == "a":
-                dest.append(RDF_TYPE)
-            elif t is not None and t.startswith("<"):
-                dest.append(t[1:-1])
-            else:
-                raise ValueError(
-                    f"unsupported negated property set member near {t!r}"
-                )
-            pos[0] += 1
-
-        def step() -> tuple:
-            t = peek()
-            if t == "^":
-                pos[0] += 1
-                return ("inv", step())
-            if t == "!":
-                # negated property set: !elt or !(elt|elt|...) — per the
-                # spec (§18.2.2.3) the forward/inverse members form two
-                # arms, each present only when it has members
-                pos[0] += 1
-                fwd: list = []
-                inv: list = []
-                if peek() == "(":
-                    pos[0] += 1
-                    one_in_set(fwd, inv)
-                    while peek() == "|":
-                        pos[0] += 1
-                        one_in_set(fwd, inv)
-                    if peek() != ")":
-                        raise ValueError(
-                            "unbalanced parens in negated property set"
-                        )
-                    pos[0] += 1
+    def group_body(self) -> _Block:
+        stmts: list = []
+        filters: list = []
+        binds: list = []
+        optionals: list = []
+        exists: list = []
+        minuses: list = []
+        groups: list = []
+        values: list = []
+        subselects: list = []
+        graphs: list = []
+        items = 0
+        chain = None
+        while True:
+            t = self.peek()
+            if t.kind == "eof" or t.text == "}":
+                break
+            items += 1
+            if self.accept("."):
+                items -= 1
+            elif self.accept_kw("FILTER"):
+                neg = self.accept_kw("NOT")
+                if neg or _is_kw(self.peek(), "EXISTS"):
+                    self.expect_kw("EXISTS")
+                    exists.append((neg, self.group()))
+                elif self.peek().text != "(":
+                    self.fail("expected '(' after FILTER")
                 else:
-                    one_in_set(fwd, inv)
-                node = ("neg", tuple(fwd) or None, tuple(inv) or None)
-            elif t == "(":
-                pos[0] += 1
-                node = alt()
-                if peek() != ")":
-                    raise ValueError("unbalanced parens in property path")
-                pos[0] += 1
-            elif t == "a":
-                pos[0] += 1
-                node = ("iri", RDF_TYPE)
-            elif t is not None and t.startswith("<"):
-                pos[0] += 1
-                node = ("iri", t[1:-1])
+                    filters.append(_Filter(self.span()))
+            elif self.accept_kw("BIND"):
+                if self.peek().text != "(":
+                    self.fail("expected '(' after BIND")
+                binds.append(self.named_expr("expected BIND(expr AS ?var)"))
+            elif self.accept_kw("OPTIONAL"):
+                optionals.append(self.group())
+            elif self.accept_kw("MINUS"):
+                minuses.append(self.group())
+            elif self.accept_kw("GRAPH"):
+                g = self.peek()
+                if g.kind not in ("iri", "var") or g.text == "$this":
+                    self.fail("GRAPH name must be an IRI or variable")
+                graphs.append((self.term(self.take()), self.group()))
+            elif _is_kw(t, "VALUES"):
+                values.append(self.values())
+            elif _is_kw(t, "UNION"):
+                self.fail("unsupported sh:sparql syntax UNION (no group before it)")
+            elif t.text == "{":
+                subquery = _is_kw(self.peek(1), "SELECT")
+                alts = [self.group()]
+                while self.accept_kw("UNION"):
+                    alts.append(self.group())
+                if len(alts) > 1:
+                    chain = _Block((), (), (), (), tuple(alts))
+                    groups.append(chain)
+                elif subquery:
+                    subselects.extend(alts[0].subselects)
+                else:
+                    groups.append(alts[0])
             else:
-                raise ValueError(f"unsupported property path near {t!r}")
-            while peek() in ("*", "+", "?"):
-                node = ("clo", _CLOSURE_KINDS[peek()], node)
-                pos[0] += 1
-            return node
+                self.triples(stmts)
+        if items == 1 and chain is not None:
+            return chain  # the group IS the alternation
+        patterns, path_groups = self.patterns(stmts)
+        return _Block(
+            tuple(patterns),
+            tuple(filters),
+            tuple(optionals),
+            tuple(exists),
+            (),
+            tuple(minuses),
+            tuple(path_groups + groups),
+            tuple(binds),
+            tuple(values),
+            tuple(subselects),
+            tuple(graphs),
+        )
 
-        def seq() -> tuple:
-            steps = [step()]
-            while peek() == "/":
-                pos[0] += 1
-                steps.append(step())
-            return steps[0] if len(steps) == 1 else ("seq", steps)
-
-        def alt() -> tuple:
-            branches = [seq()]
-            while peek() == "|":
-                pos[0] += 1
-                branches.append(seq())
-            return branches[0] if len(branches) == 1 else ("alt", branches)
-
-        ast = alt()
-        if pos[0] != len(toks):
-            raise ValueError(
-                f"unsupported property path {' '.join(toks)!r}"
-            )
-        return ast
-
-    def _emit_statement(subj: str, mid: list[str], obj: str) -> None:
-        s_t, o_t = _parse_term(subj), _parse_term(obj)
-        if len(mid) == 1 and (mid[0] == "a" or mid[0].startswith("<")):
-            if s_t.kind == "lit":
-                raise ValueError("literal subjects are not valid RDF")
-            pred = RDF_TYPE if mid[0] == "a" else mid[0][1:-1]
-            patterns.append(_Pattern(s_t, pred, o_t))
-        elif len(mid) == 1 and mid[0].startswith("?"):
-            # variable predicate (?s ?p ?o) — one full-relation join; the
-            # predicate binds like any variable (always an IRI). Callers
-            # building a predicate slice learn via pattern_predicates()
-            # that the scan cannot be restricted.
-            if s_t.kind == "lit":
-                raise ValueError("literal subjects are not valid RDF")
-            patterns.append(_Pattern(s_t, _parse_term(mid[0]), o_t))
-        elif len(mid) == 1 and mid[0] == "$this":
-            raise ValueError(
-                "$this cannot appear in predicate position (the focus "
-                "node is a subject/object term)"
-            )
-        else:
-            if not allow_filters:
-                raise ValueError(
-                    "property paths are not allowed in a CONSTRUCT template"
+    def values(self) -> _ValuesClause:
+        """VALUES ?v { t… } | VALUES (?a ?b) { (t t) (UNDEF t) … }"""
+        self.expect_kw("VALUES")
+        multi = self.accept("(")
+        names: list[str] = []
+        while self.peek().kind == "var" and (multi or not names):
+            names.append(self.take().value)
+        if multi:
+            self.expect(")", "the VALUES variable list")
+        if not names:
+            self.fail("expected variable list after VALUES")
+        if "this" in names:
+            self.fail("VALUES may not constrain the focus variable ?this")
+        self.expect("{", "the VALUES variable list")
+        rows: list[tuple] = []
+        while not self.accept("}"):
+            start = self.peek()
+            if multi and not self.accept("("):
+                self.fail(f"expected '(' row in VALUES data near {start.text!r}")
+            row: list = []
+            while not (multi and self.accept(")")) and (multi or not row):
+                t = self.take()
+                if _is_kw(t, "UNDEF"):
+                    row.append(None)
+                elif t.kind in ("iri", "str", "num"):
+                    row.append(self.term(t))
+                elif t.kind == "var":
+                    self.fail("VALUES data must be constant terms or UNDEF", t)
+                else:
+                    self.fail(f"unsupported VALUES data near {t.text!r}", t)
+            if len(row) != len(names):
+                self.fail(
+                    f"VALUES row arity {len(row)} != {len(names)} variables", start
                 )
-            ast = _parse_path(mid)
-            if _has_closure(ast):
-                # a closure cannot desugar to finitely many triple
-                # patterns — keep the whole path as one PathExpr pattern
-                # evaluated by the core engine's bounded fixpoint
-                if s_t.kind == "lit":
-                    raise ValueError("literal subjects are not valid RDF")
-                patterns.append(_Pattern(s_t, _to_path_expr(ast), o_t))
+            rows.append(tuple(row))
+        return _ValuesClause(tuple(names), tuple(rows))
+
+    def template(self) -> list:
+        """A CONSTRUCT template: '{' triples '}' without paths or FILTER."""
+        self.expect("{", "CONSTRUCT")
+        stmts: list = []
+        while not self.accept("}"):
+            t = self.peek()
+            if _is_kw(t, "FILTER", "BIND"):
+                self.fail(f"{t.value.upper()} is not allowed in a CONSTRUCT template")
+            if t.kind == "eof":
+                self.fail("unbalanced braces in the CONSTRUCT template")
+            if not self.accept("."):
+                self.triples(stmts, paths=False)
+        pats = self.patterns(stmts)[0]
+        if not pats:
+            raise ValueError("sh:construct template has no triple pattern")
+        return pats
+
+    # -- query forms
+    def dataset(self) -> tuple[list, list]:
+        graphs: tuple = ([], [])
+        while self.accept_kw("FROM"):
+            named = self.accept_kw("NAMED")
+            t = self.take()
+            if t.kind != "iri":
+                self.fail("expected <graph IRI> after FROM", t)
+            graphs[named].append(t.value)
+        return graphs
+
+    def select(self, dataset: list | None = None) -> _SelectQuery:
+        """SELECT [DISTINCT|REDUCED] (* | proj…) [FROM…] [WHERE] {…}
+        [GROUP BY …] [HAVING (…)] [ORDER BY …] [LIMIT n] [OFFSET n]
+        [VALUES …]; ``dataset`` collects FROM clauses (standalone queries
+        only)."""
+        self.expect_kw("SELECT")
+        distinct = self.accept_kw("DISTINCT") or self.accept_kw("REDUCED")
+        proj: list[str] = []
+        aggs: list[_Agg] = []
+        star = self.accept("*")
+        items = 0
+        while not star:
+            t = self.peek()
+            if t.kind == "var":
+                self.take()
+                if t.text != "$this":
+                    proj.append(t.value)
+            elif t.text == "(":
+                aggs.append(self.agg_projection())
+                proj.append(aggs[-1].alias)
             else:
-                _emit(s_t, ast, o_t, patterns, path_groups)
+                break
+            items += 1
+        t = self.peek()
+        body_next = t.text == "{" or _is_kw(t, "WHERE") or (
+            dataset is not None and _is_kw(t, "FROM")
+        )
+        if not (star or items) or not body_next:
+            self.fail(f"unsupported projection term near {t.text or 'end of query'!r}")
+        if dataset is not None:
+            for dst, src in zip(dataset, self.dataset()):
+                dst.extend(src)
+        self.accept_kw("WHERE")
+        block = self.group()
 
-    # statement assembly with the Turtle-style abbreviations: `;` keeps
-    # the subject for another predicate-object pair, `,` keeps subject
-    # AND predicate(/path) for another object. Re-emitting a sequence
-    # path per object mints fresh _seq hop variables each time — the
-    # correct per-object semantics.
-    pend_subj: str | None = None
-    pend_mid: list[str] | None = None
+        group_by: list[str] = []
+        group_binds: list[tuple] = []
+        if self.accept_kw("GROUP"):
+            self.expect_kw("BY")
+            while True:
+                if self.peek().kind == "var":
+                    group_by.append(self.take().value)
+                elif self.peek().text == "(":
+                    # GROUP BY (expr AS ?var): §18.2.4.1 extends the
+                    # solution — an injected BIND plus a plain key
+                    group_binds.append(self.named_expr(
+                        "a GROUP BY expression must be named: GROUP BY (expr AS ?var)"
+                    ))
+                    group_by.append(group_binds[-1][0])
+                else:
+                    break
+            if not group_by:
+                self.fail("GROUP BY lists no variables")
+        having = None
+        if self.accept_kw("HAVING"):
+            if self.peek().text != "(":
+                self.fail("HAVING requires a parenthesized expression")
+            having = self.span()
+        order_by: list[tuple[str, bool]] = []
+        if self.accept_kw("ORDER"):
+            self.expect_kw("BY")
+            while True:
+                t = self.peek()
+                if _is_kw(t, "ASC", "DESC") and self.peek(1).text == "(":
+                    self.i += 2
+                    v = self.take()
+                    if v.kind != "var":
+                        self.fail("expected a variable sort key", v)
+                    self.expect(")", "the sort key")
+                    order_by.append((v.value, t.value.upper() == "DESC"))
+                elif t.kind == "var":
+                    order_by.append((self.take().value, False))
+                else:
+                    break
+            if not order_by:
+                self.fail("ORDER BY lists no sort keys")
+        limit = offset = None
+        while True:  # LIMIT / OFFSET in either order (§18)
+            t = self.peek()
+            if _is_kw(t, "LIMIT", "OFFSET") and self.peek(1).kind == "num":
+                n = int(self.peek(1).value)
+                if t.value.upper() == "LIMIT" and limit is None:
+                    limit = n
+                elif t.value.upper() == "OFFSET" and offset is None:
+                    offset = n
+                else:
+                    break
+                self.i += 2
+            else:
+                break
+        if (limit is not None or offset is not None) and not order_by:
+            raise ValueError(
+                "LIMIT/OFFSET without ORDER BY is nondeterministic — "
+                "outside the subset"
+            )
+        values_clause = self.values() if _is_kw(self.peek(), "VALUES") else None
 
-    def _flush(sep: str) -> None:
-        nonlocal pend_subj, pend_mid
-        if not group:
-            # a trailing `.` (or `; .`) closes the statement; a bare `,`
-            # with nothing before it has no object to repeat
-            if sep == ",":
-                raise ValueError("empty ',' object-list continuation")
-            if sep == ".":
-                pend_subj = pend_mid = None
-            return
-        if pend_mid is not None:
-            if len(group) != 1:
-                raise ValueError(
-                    "an object-list continuation takes exactly one term, "
-                    f"got {' '.join(group)!r}"
+        # a GROUP-BY-less aggregate query is one implicit whole-result
+        # group (legal in subqueries; constraint/target evaluation still
+        # demands grouping on $this/?this and raises there)
+        alias_names = {a.alias for a in aggs}
+        if aggs or group_by or having:
+            for v in proj:
+                if v not in alias_names and v not in group_by:
+                    raise ValueError(
+                        f"projected ?{v} is neither aggregated nor a GROUP BY key"
+                    )
+        if star and (aggs or group_by or having):
+            raise ValueError("SELECT * cannot combine with GROUP BY/aggregates")
+        if group_binds:
+            if block.alternatives:
+                # an alternation block carries nothing but branches —
+                # wrap it so the binds evaluate over the union
+                block = _Block((), (), (), (), (), (), (block,), tuple(group_binds))
+            else:
+                block = dataclasses.replace(
+                    block, binds=block.binds + tuple(group_binds)
                 )
-            subj, mid, obj = pend_subj, pend_mid, group[0]
-        elif pend_subj is not None:
-            if len(group) < 2:
-                raise ValueError(
-                    "a predicate-object continuation needs a predicate "
-                    f"and an object, got {' '.join(group)!r}"
+        if not _has_pattern(block):
+            raise ValueError("sh:sparql select has no graph pattern")
+        return _SelectQuery(
+            tuple(proj), block, tuple(aggs), tuple(group_by), having,
+            distinct, tuple(order_by), limit, star, offset, values_clause,
+        )
+
+    def agg_projection(self) -> _Agg:
+        """( FN ( [DISTINCT] ?v|* [; SEPARATOR = "s"] ) AS ?alias )"""
+        at = self.peek()
+        try:
+            self.expect("(")
+            fn = self.take()
+            if not _is_kw(fn, *_AGG_FNS):
+                self.fail("not an aggregate", fn)
+            self.expect("(")
+            distinct = self.accept_kw("DISTINCT")
+            arg = self.take()
+            if arg.kind != "var" and arg.text != "*":
+                self.fail("bad aggregate argument", arg)
+            sep = None
+            if self.accept(";"):
+                self.expect_kw("SEPARATOR")
+                self.expect("=")
+                if self.peek().kind != "str":
+                    self.fail("SEPARATOR takes a string")
+                sep = self.take().value
+            self.expect(")")
+            self.expect_kw("AS")
+            alias = self.take()
+            if alias.kind != "var":
+                self.fail("bad alias", alias)
+            self.expect(")")
+        except SparqlParseError:
+            self.fail(f"unsupported projection term near {at.text!r}", at)
+        if sep is not None and fn.value.upper() != "GROUP_CONCAT":
+            raise ValueError("SEPARATOR is only valid inside GROUP_CONCAT")
+        return _Agg(
+            fn.value.lower(),
+            None if arg.text == "*" else arg.value,
+            distinct,
+            alias.value,
+            " " if sep is None else sep,
+        )
+
+    def ask_group(self, pattern_free: bool = False) -> _Block:
+        """[WHERE] { … } of an ASK; ``pattern_free`` admits a group of
+        FILTERs / BINDs only."""
+        self.accept_kw("WHERE")
+        block = self.group()
+        if not _has_pattern(block) and not (
+            pattern_free and (block.filters or block.binds)
+        ):
+            raise ValueError("sh:ask has no graph pattern")
+        return block
+
+    def query(self) -> _Query:
+        """A standalone SELECT / ASK / CONSTRUCT / DESCRIBE query."""
+        t = self.peek()
+        dataset: tuple = ([], [])
+        template = None
+        select = None
+        terms: list = []
+        block = None
+        if _is_kw(t, "SELECT"):
+            select = self.select(dataset)
+            block = select.block
+        elif self.accept_kw("ASK"):
+            dataset = self.dataset()
+            block = self.ask_group()
+        elif self.accept_kw("CONSTRUCT"):
+            if self.peek().text == "{":
+                template = tuple(self.template())
+            dataset = self.dataset()
+            if template is None:
+                self.expect_kw("WHERE")
+            else:
+                self.accept_kw("WHERE")
+            block = self.group()
+        elif self.accept_kw("DESCRIBE"):
+            while self.peek().kind in ("var", "iri"):
+                terms.append(self.term(self.take()))
+            if not terms:
+                self.fail(
+                    "unsupported DESCRIBE (expected DESCRIBE <iri>… or "
+                    "DESCRIBE ?var… WHERE { … })"
                 )
-            subj, mid, obj = pend_subj, group[:-1], group[-1]
+            dataset = self.dataset()
+            if self.accept_kw("WHERE") or self.peek().text == "{":
+                block = self.group()
         else:
-            if len(group) < 3:
-                raise ValueError(
-                    f"unsupported graph pattern {' '.join(group)!r}"
-                )
-            subj, mid, obj = group[0], group[1:-1], group[-1]
-        _emit_statement(subj, list(mid), obj)
-        if sep == ".":
-            pend_subj = pend_mid = None
-        elif sep == ";":
-            pend_subj, pend_mid = subj, None
-        else:  # ","
-            pend_subj, pend_mid = subj, list(mid)
-        group.clear()
+            self.fail("expected SELECT, ASK, CONSTRUCT or DESCRIBE")
+        self.end(f"the {t.value.upper()} query")
+        return _Query(
+            t.value.upper(), block, select, template, tuple(terms),
+            tuple(dataset[0]), tuple(dataset[1]),
+        )
 
-    for tok in tokens:
-        if tok in (".", ";", ","):
-            _flush(tok)
-        else:
-            group.append(tok)
-    _flush(".")
-    return patterns, filters, binds, path_groups
+    # -- update requests (SPARQL 1.1 Update §3)
+    def graph_ref(self, default_ok: bool = True) -> str | None:
+        """GRAPH <g> | <g> | DEFAULT (None)."""
+        if default_ok and self.accept_kw("DEFAULT"):
+            return None
+        self.accept_kw("GRAPH")
+        t = self.take()
+        if t.kind != "iri":
+            self.fail("expected GRAPH <iri>" + (" or DEFAULT" if default_ok else ""), t)
+        return t.value
+
+    def update(self) -> list[_UpdateOp]:
+        """Operations separated by ';', applied in order."""
+        ops: list[_UpdateOp] = []
+        while self.peek().kind != "eof":
+            if self.accept(";"):
+                continue
+            ops.append(self.update_op())
+            if self.peek().kind != "eof" and not self.accept(";"):
+                self.fail(
+                    f"unexpected trailing text {self.peek().text!r} after the "
+                    "update operation"
+                )
+        if not ops:
+            raise ValueError("empty update request")
+        return ops
+
+    def update_op(self) -> _UpdateOp:
+        t = self.peek()
+        verb = t.value.upper() if t.kind == "name" else ""
+        if verb in ("CREATE", "CLEAR", "DROP", "ADD", "COPY", "MOVE", "LOAD"):
+            self.take()
+            silent = self.accept_kw("SILENT")
+            if verb == "CREATE":
+                return _UpdateOp("CREATE", silent, self.graph_ref(False))
+            if verb in ("CLEAR", "DROP"):
+                nxt = self.peek()
+                if _is_kw(nxt, "DEFAULT", "NAMED", "ALL"):
+                    self.take()
+                    return _UpdateOp("CLEAR", silent, scope=nxt.value.upper())
+                return _UpdateOp("CLEAR", silent, self.graph_ref(False), scope="GRAPH")
+            if verb == "LOAD":
+                path = self.take()
+                if path.kind != "iri":
+                    self.fail("expected <path> after LOAD", path)
+                into = None
+                if self.accept_kw("INTO"):
+                    into = self.graph_ref(False)
+                return _UpdateOp("LOAD", silent, path.value, into)
+            src = self.graph_ref()
+            self.expect_kw("TO")
+            return _UpdateOp(verb, silent, src, self.graph_ref())
+        nxt = self.peek(1)
+        if verb == "INSERT" and _is_kw(nxt, "DATA") or (
+            verb == "DELETE" and _is_kw(nxt, "DATA", "WHERE")
+        ):
+            self.take()
+            form = self.take().value.upper()
+            blk = self.group()
+            if form == "DATA" and verb == "INSERT":
+                return _UpdateOp("INSERT DATA", insert=blk)
+            return _UpdateOp(f"DELETE {form}", delete=blk)
+        with_graph = None
+        if self.accept_kw("WITH"):
+            with_graph = self.graph_ref(False)
+        delete = self.template_block() if self.accept_kw("DELETE") else None
+        insert = self.template_block() if self.accept_kw("INSERT") else None
+        if delete is None and insert is None:
+            self.fail(
+                "unsupported update (expected INSERT DATA / DELETE DATA / "
+                "DELETE WHERE / [WITH <g>] [DELETE {…}] [INSERT {…}] "
+                "[USING …] WHERE {…} / CLEAR / DROP / CREATE / ADD / COPY / "
+                "MOVE / LOAD)",
+                t,
+            )
+        using: tuple = ([], [])
+        while self.accept_kw("USING"):
+            named = self.accept_kw("NAMED")
+            using[named].append(self.graph_ref(False))
+        if not self.accept_kw("WHERE"):
+            self.fail("DELETE/INSERT templates require a WHERE clause")
+        return _UpdateOp(
+            "MODIFY", with_graph=with_graph, delete=delete, insert=insert,
+            using=tuple(using[0]), using_named=tuple(using[1]), where=self.group(),
+        )
+
+    def template_block(self) -> _Block:
+        if self.peek().text != "{":
+            self.fail(f"expected '{{' after {self.toks[self.i - 1].text}")
+        return self.group()
+
+
+def _has_pattern(block: _Block) -> bool:
+    return bool(
+        block.patterns or block.optionals or block.exists or block.alternatives
+        or block.groups or block.subselects or block.graphs
+    )
 
 
 def pattern_predicates(block: _Block) -> tuple[set[str], bool]:
@@ -1871,7 +1926,7 @@ class _SelectQuery:
     block: _Block
     aggs: tuple = ()  # tuple[_Agg, ...]
     group_by: tuple = ()  # grouping names; 'this' covers $this/?this
-    having: str | None = None
+    having: tuple | None = None  # the tokens inside HAVING ( … )
     distinct: bool = False  # SELECT DISTINCT (REDUCED treated the same)
     order_by: tuple = ()  # tuple[(var: str, desc: bool), ...]
     limit: int | None = None  # requires order_by (determinism)
@@ -1882,37 +1937,6 @@ class _SelectQuery:
     # after aggregation (§18.2.4.2); standalone sparql_select only,
     # constraint/target/subquery evaluation rejects it
     values_clause: _ValuesClause | None = None
-
-
-_AGG_PROJ_RE = re.compile(
-    r"\(\s*(?P<fn>COUNT|SUM|MIN|MAX|AVG|SAMPLE|GROUP_CONCAT)\s*\(\s*"
-    r"(?P<d>DISTINCT\s+)?(?P<arg>\?[A-Za-z_]\w*|\*)\s*"
-    r"(?:;\s*SEPARATOR\s*=\s*\"(?P<sep>(?:[^\"\\]|\\.)*)\"\s*)?"
-    r"\)\s+AS\s+\?(?P<alias>[A-Za-z_]\w*)\s*\)",
-    re.I,
-)
-_AGG_CALL_RE = re.compile(
-    r"\b(?P<fn>COUNT|SUM|MIN|MAX|AVG|SAMPLE|GROUP_CONCAT)\s*\(\s*"
-    r"(?P<d>DISTINCT\s+)?(?P<arg>\?[A-Za-z_]\w*|\*)\s*\)",
-    re.I,
-)
-
-
-def _mk_agg(mm: re.Match, alias: str) -> _Agg:
-    arg = mm.group("arg")
-    sep = mm.groupdict().get("sep")
-    if sep is not None:
-        sep = _unescape_string(sep)
-    fn = mm.group("fn").lower()
-    if sep is not None and fn != "group_concat":
-        raise ValueError("SEPARATOR is only valid inside GROUP_CONCAT")
-    return _Agg(
-        fn,
-        None if arg == "*" else arg[1:],
-        bool(mm.group("d")),
-        alias,
-        " " if sep is None else sep,
-    )
 
 
 def _no_values(q: "_SelectQuery", where: str) -> "_SelectQuery":
@@ -1929,277 +1953,62 @@ def _no_values(q: "_SelectQuery", where: str) -> "_SelectQuery":
     return q
 
 
-def _split_trailing_values(select: str) -> tuple[str, _ValuesClause | None]:
-    """Split a post-solution-modifier ``VALUES … { … }`` clause
-    (§10.2.2) off the query text, brace-aware: the WHERE block is walked
-    with the string/IRI-aware matcher so a VALUES INSIDE the group (or a
-    subquery's WHERE) is never mistaken for the trailing clause."""
-    if not select.rstrip().endswith("}"):
-        return select, None  # no trailing block — nothing to split
-    wm = re.search(r"\bWHERE\s*\{", select, re.I)
-    if not wm:
-        return select, None
-    end = _brace_end(select, wm.end() - 1)
-    tail = select[end + 1 :]
-    vm = re.search(r"\bVALUES\b", tail, re.I)
-    if not vm:
-        return select, None
-    rest = tail[vm.end() :]
-    bm = re.search(r"\{", rest)
-    if not bm:
-        raise ValueError("VALUES clause is missing its { data } block")
-    vars_text = rest[: bm.start()].strip()
-    if vars_text.startswith("(") and vars_text.endswith(")"):
-        vars_text = vars_text[1:-1]  # parenthesized form: VALUES (?a ?b)
-    bend = _delim_end(rest, bm.start(), "{", "}")
-    if rest[bend + 1 :].strip():
-        raise ValueError(
-            "a top-level VALUES clause must end the query "
-            f"(unexpected {rest[bend + 1:][:30]!r} after it)"
-        )
-    vc = _parse_values(vars_text, rest[bm.start() + 1 : bend])
-    return select[: end + 1 + vm.start()], vc
-
-
-def parse_select_query(select: str) -> _SelectQuery:
+def parse_select_query(select: str | _Lexed) -> _SelectQuery:
     """Parse the supported SELECT subset — plain projections plus the
     aggregate form ``SELECT $this (COUNT(?v) AS ?n) … GROUP BY $this
     [?g …] HAVING (expr)``; ValueError on anything outside."""
-    select, values_clause = _split_trailing_values(select)
-    m = re.match(
-        r"\s*SELECT\s+(?:(?P<dist>DISTINCT|REDUCED)\s+)?"
-        r"(?P<proj>.+?)\s+WHERE\s*\{(?P<body>.*)\}"
-        r"\s*(?P<tail>(?:GROUP\s+BY|HAVING|ORDER\s+BY|LIMIT|OFFSET)\b.*)?$",
-        select,
-        re.S | re.I,
-    )
-    if not m:
-        raise ValueError(
-            "unsupported sh:sparql select (expected SELECT ... WHERE { ... })"
+    p = _Parser(select)
+    if not _is_kw(p.peek(), "SELECT"):
+        p.fail("unsupported sh:sparql select (expected SELECT ... WHERE { ... })")
+    q = p.select()
+    if p.peek().kind != "eof":
+        p.fail(
+            f"unsupported SELECT tail near {p.peek().text!r} (expected "
+            "GROUP BY / HAVING (expr) / ORDER BY / LIMIT n / OFFSET n)"
         )
-    # projection list: $this, ?var, or (AGG(?v) AS ?alias) items — or a
-    # bare `*` (every visible variable; standalone query surface only)
-    proj: list[str] = []
-    aggs: list[_Agg] = []
-    s = m.group("proj")
-    star = s.strip() == "*"
-    if star:
-        s = ""
-    i = 0
-    while i < len(s):
-        if s[i].isspace():
-            i += 1
-            continue
-        if s.startswith("$this", i):
-            i += 5
-            continue
-        mv = re.match(r"\?([A-Za-z_]\w*)", s[i:])
-        if mv:
-            proj.append(mv.group(1))
-            i += mv.end()
-            continue
-        ma = _AGG_PROJ_RE.match(s, i)
-        if ma:
-            a = _mk_agg(ma, ma.group("alias"))
-            aggs.append(a)
-            proj.append(a.alias)
-            i = ma.end()
-            continue
-        raise ValueError(f"unsupported projection term near {s[i:i+30]!r}")
-
-    # trailing GROUP BY / HAVING / ORDER BY / LIMIT / OFFSET
-    group_by: list[str] = []
-    group_binds: list[tuple[str, str]] = []  # GROUP BY (expr AS ?var)
-    having: str | None = None
-    order_by: list[tuple[str, bool]] = []
-    limit: int | None = None
-    offset: int | None = None
-    tail = (m.group("tail") or "").strip()
-    if tail:
-        gm = re.match(r"GROUP\s+BY\s+", tail, re.I)
-        if gm:
-            j = gm.end()
-            while True:
-                t = re.match(r"\s*[$?]([A-Za-z_]\w*)", tail[j:])
-                if t:
-                    group_by.append(t.group(1))
-                    j += t.end()
-                    continue
-                # GROUP BY (expr AS ?var) — SPARQL §18.2.4.1 extends the
-                # solution with the expression binding; desugared to an
-                # injected BIND on the WHERE block + a plain var key
-                ws = j + re.match(r"\s*", tail[j:]).end()
-                if ws < len(tail) and tail[ws] == "(":
-                    k = _delim_end(tail, ws, "(", ")")
-                    inner = tail[ws + 1 : k].strip()
-                    am = _BIND_AS_RE.search(inner)
-                    if not am:
-                        raise ValueError(
-                            "a GROUP BY expression must be named: "
-                            "GROUP BY (expr AS ?var)"
-                        )
-                    group_binds.append(
-                        (am.group(1), inner[: am.start()].strip())
-                    )
-                    group_by.append(am.group(1))
-                    j = k + 1
-                    continue
-                break
-            if not group_by:
-                raise ValueError("GROUP BY lists no variables")
-            tail = tail[j:].strip()
-        hm = re.match(r"HAVING\s*", tail, re.I) if tail else None
-        if hm:
-            j = hm.end()
-            if j >= len(tail) or tail[j] != "(":
-                raise ValueError("HAVING requires a parenthesized expression")
-            k = _delim_end(tail, j, "(", ")")
-            having = tail[j + 1 : k]
-            tail = tail[k + 1 :].strip()
-        om = re.match(r"ORDER\s+BY\s+", tail, re.I) if tail else None
-        if om:
-            j = om.end()
-            while True:
-                mm = re.match(
-                    r"\s*(ASC|DESC)\s*\(\s*[$?]([A-Za-z_]\w*)\s*\)",
-                    tail[j:],
-                    re.I,
-                )
-                if mm:
-                    order_by.append(
-                        (mm.group(2), mm.group(1).upper() == "DESC")
-                    )
-                    j += mm.end()
-                    continue
-                mv = re.match(r"\s*[$?]([A-Za-z_]\w*)", tail[j:])
-                if mv:
-                    order_by.append((mv.group(1), False))
-                    j += mv.end()
-                    continue
-                break
-            if not order_by:
-                raise ValueError("ORDER BY lists no sort keys")
-            tail = tail[j:].strip()
-        while tail:  # LIMIT / OFFSET accepted in either order (SPARQL §18)
-            lm = re.match(r"LIMIT\s+(\d+)", tail, re.I)
-            if lm and limit is None:
-                limit = int(lm.group(1))
-                tail = tail[lm.end() :].strip()
-                continue
-            om2 = re.match(r"OFFSET\s+(\d+)", tail, re.I)
-            if om2 and offset is None:
-                offset = int(om2.group(1))
-                tail = tail[om2.end() :].strip()
-                continue
-            break
-        if (limit is not None or offset is not None) and not order_by:
-            raise ValueError(
-                "LIMIT/OFFSET without ORDER BY is nondeterministic — "
-                "outside the subset"
-            )
-        if tail:
-            raise ValueError(
-                f"unsupported SELECT tail near {tail[:40]!r} (expected "
-                "GROUP BY / HAVING (expr) / ORDER BY / LIMIT n / OFFSET n)"
-            )
-
-    # a GROUP-BY-less aggregate query is one implicit whole-result group
-    # (legal in subqueries; top-level constraint/target evaluation still
-    # demands grouping on $this/?this and raises there)
-    alias_names = {a.alias for a in aggs}
-    if aggs or group_by or having:
-        for v in proj:
-            if v not in alias_names and v not in group_by:
-                raise ValueError(
-                    f"projected ?{v} is neither aggregated nor a GROUP BY key"
-                )
-
-    if star and (aggs or group_by or having):
-        raise ValueError("SELECT * cannot combine with GROUP BY/aggregates")
-    block = _parse_group(m.group("body"))
-    if group_binds:
-        if block.alternatives:
-            # an alternation block carries nothing but branches (parser
-            # invariant) — wrap it so the binds evaluate over the union
-            block = _Block(
-                (), (), (), (), (), (), (block,), tuple(group_binds)
-            )
-        else:
-            block = dataclasses.replace(
-                block, binds=block.binds + tuple(group_binds)
-            )
-    if (
-        not block.patterns
-        and not block.optionals
-        and not block.exists
-        and not block.alternatives
-        and not block.groups
-        and not block.subselects
-        and not block.graphs
-    ):
-        raise ValueError("sh:sparql select has no graph pattern")
-    return _SelectQuery(
-        tuple(proj),
-        block,
-        tuple(aggs),
-        tuple(group_by),
-        having,
-        bool(m.group("dist")),
-        tuple(order_by),
-        limit,
-        star,
-        offset,
-        values_clause,
-    )
+    return q
 
 
-def parse_select(select: str) -> tuple[list[str], _Block]:
+def parse_select(select: str | _Lexed) -> tuple[list[str], _Block]:
     """Back-compat view of parse_select_query: (projection names, block)."""
     q = parse_select_query(select)
     return list(q.proj), q.block
 
 
-def parse_ask(ask: str, allow_pattern_free: bool = False) -> _Block:
+def parse_ask(ask: str | _Lexed, allow_pattern_free: bool = False) -> _Block:
     """Parse the sh:ask validator subset: ``ASK { <group> }`` with the same
     group grammar as parse_select's WHERE body. ``allow_pattern_free``
     admits a FILTER-only body — the usual shape of a property ASK
     validator, whose ?value/$this come pre-bound rather than from
     patterns."""
-    m = re.match(r"\s*ASK\s*(?:WHERE\s*)?\{(?P<body>.*)\}\s*$", ask, re.S | re.I)
-    if not m:
-        raise ValueError("unsupported sh:ask (expected ASK { ... })")
-    block = _parse_group(m.group("body"))
-    if (
-        not block.patterns
-        and not block.optionals
-        and not block.exists
-        and not block.alternatives
-        and not block.groups
-        and not block.subselects
-        and not block.graphs
-        and not (allow_pattern_free and (block.filters or block.binds))
-    ):
-        raise ValueError("sh:ask has no graph pattern")
+    p = _Parser(ask)
+    if not p.accept_kw("ASK"):
+        p.fail("unsupported sh:ask (expected ASK { ... })")
+    block = p.ask_group(allow_pattern_free)
+    p.end("the ASK group")
     return block
 
 
-def parse_construct(construct: str) -> tuple[list[_Pattern], _Block]:
+def parse_construct(construct: str | _Lexed) -> tuple[list[_Pattern], _Block]:
     """Parse the sh:SPARQLRule CONSTRUCT subset: a template block of triple
     patterns plus the same WHERE body grammar as parse_select. Returns
     (template, where_block)."""
-    m = re.match(
-        r"\s*CONSTRUCT\s*\{(?P<tpl>.*?)\}\s*WHERE\s*\{(?P<body>.*)\}\s*$",
-        construct,
-        re.S | re.I,
-    )
-    if not m:
+    q = parse_query(construct)
+    if q.form != "CONSTRUCT" or q.template is None or q.from_graphs or q.from_named:
         raise ValueError(
             "unsupported sh:construct (expected CONSTRUCT { ... } WHERE { ... })"
         )
-    template, _, _, _ = _parse_patterns(m.group("tpl"), allow_filters=False)
-    if not template:
-        raise ValueError("sh:construct template has no triple pattern")
-    return template, _parse_group(m.group("body"))
+    return list(q.template), q.block
+
+
+def parse_query(query: str | _Lexed) -> _Query:
+    """Parse a standalone SELECT / ASK / CONSTRUCT / DESCRIBE query."""
+    return _Parser(query).query()
+
+
+def parse_update(update: str | _Lexed) -> list[_UpdateOp]:
+    """Parse a SPARQL 1.1 Update request into its operations."""
+    return _Parser(update).update()
 
 
 # ---------------------------------------------------- FILTER expressions
@@ -2209,18 +2018,6 @@ def parse_construct(construct: str) -> tuple[list[_Pattern], _Block]:
 # bound/isIRI/isURI/isLiteral/isBlank/sameTerm; regex (with "i/s/m" flags);
 # STRSTARTS/STRENDS/CONTAINS; str()/datatype()/lang() term accessors and
 # langMatches. Everything outside raises ValueError (the module contract).
-
-_F_TOKEN_RE = re.compile(
-    r"""(?:
-      (?P<str>"(?:[^"\\]|\\.)*")
-    | (?P<iri><[^<>\s"{}]*>)
-    | (?P<num>[0-9]+(?:\.[0-9]+)?)
-    | (?P<var>[?$][A-Za-z_]\w*)
-    | (?P<op>&&|\|\||!=|<=|>=|=|<|>|!|\(|\)|,|\+|-|\*|/)
-    | (?P<name>[A-Za-z_]\w*)
-    )""",
-    re.X,
-)
 
 _F_BOOL_FUNCS = {
     "bound", "isiri", "isuri", "isliteral", "isblank", "sameterm",
@@ -2291,37 +2088,31 @@ class _FilterParser:
     binding frame guarantees for every pattern-bound variable."""
 
     def __init__(
-        self, raw: str, cols: dict[str, Column], bound_vars: set[str] = frozenset()
+        self, toks: tuple, cols: dict[str, Column], bound_vars: set[str] = frozenset()
     ):
-        self.raw = raw
+        self.toks = toks  # the expression's tokens (see _Parser.span)
+        self.raw = _render(toks)
         self.cols = cols
         self.bound_vars = bound_vars
-        self.toks: list[tuple[str, str]] = []
-        i, n = 0, len(raw)
-        while i < n:
-            if raw[i].isspace():
-                i += 1
-                continue
-            m = _F_TOKEN_RE.match(raw, i)
-            if not m:
-                raise ValueError(f"unsupported FILTER expression {raw!r}")
-            self.toks.append((m.lastgroup or "", m.group(0)))
-            i = m.end()
         self.i = 0
 
     # -- token plumbing
-    def _peek(self) -> tuple[str, str]:
-        return self.toks[self.i] if self.i < len(self.toks) else ("", "")
+    def _peek(self) -> _Tok:
+        return self.toks[self.i] if self.i < len(self.toks) else _Tok("", "", "")
 
-    def _take(self) -> tuple[str, str]:
+    def _take(self) -> _Tok:
         t = self._peek()
-        if not t[0]:
+        if not t.kind:
             raise ValueError(f"unexpected end of FILTER expression {self.raw!r}")
         self.i += 1
         return t
 
+    def _at(self, *ops: str) -> bool:
+        t = self._peek()
+        return t.kind == "op" and t.value in ops
+
     def _accept(self, text: str) -> bool:
-        if self._peek()[1] == text:
+        if self._at(text):
             self.i += 1
             return True
         return False
@@ -2382,8 +2173,7 @@ class _FilterParser:
         return self._rel()
 
     def _rel(self) -> Column:
-        kind, text = self._peek()
-        if text == "(":
+        if self._at("("):
             # a paren here is usually a boolean group, but SPARQL also
             # allows a bracketted NUMERIC expression as a comparison
             # operand — try the boolean route, backtrack to arithmetic
@@ -2395,33 +2185,32 @@ class _FilterParser:
                 return e
             except ValueError:
                 self.i = save
-        kind, text = self._peek()
-        if kind == "name" and text.lower() in _F_BOOL_FUNCS:
-            return self._bool_func(text.lower())
+        t = self._peek()
+        if t.kind == "name" and t.value.lower() in _F_BOOL_FUNCS:
+            return self._bool_func(t.value.lower())
         a = self._additive()
         op = self._take()
-        if op[0] == "name" and op[1].upper() == "IN":
+        if _is_kw(op, "IN"):
             return self._in_list(a, negated=False)
-        if op[0] == "name" and op[1].upper() == "NOT":
-            nxt = self._take()
-            if nxt[0] != "name" or nxt[1].upper() != "IN":
+        if _is_kw(op, "NOT"):
+            if not _is_kw(self._take(), "IN"):
                 raise ValueError(
                     f"expected IN after NOT in FILTER expression {self.raw!r}"
                 )
             return self._in_list(a, negated=True)
-        if op[0] != "op" or op[1] not in ("=", "!=", "<", "<=", ">", ">="):
+        if op.kind != "op" or op.value not in ("=", "!=", "<", "<=", ">", ">="):
             raise ValueError(
                 f"expected comparison operator in FILTER expression {self.raw!r}"
             )
         b = self._additive()
-        return _cmp_vals(a, b, op[1])
+        return _cmp_vals(a, b, op.value)
 
     def _in_list(self, a: _Val, negated: bool) -> Column:
         """SPARQL IN / NOT IN: disjunction of = comparisons (value
         equality, same promotion rules as the binary operators)."""
         self._expect("(")
         cond: Column = F.lit(False)
-        if self._peek()[1] != ")":
+        if not self._at(")"):
             cond = _cmp_vals(a, self._additive(), "=")
             while self._accept(","):
                 cond = cond | _cmp_vals(a, self._additive(), "=")
@@ -2446,8 +2235,8 @@ class _FilterParser:
 
     def _additive(self) -> _Val:
         a = self._multiplicative()
-        while self._peek() in (("op", "+"), ("op", "-")):
-            op = self._take()[1]
+        while self._at("+", "-"):
+            op = self._take().value
             b = self._multiplicative()
             an, bn = a.value.try_cast("double"), b.value.try_cast("double")
             a = self._num_val(an + bn if op == "+" else an - bn)
@@ -2455,19 +2244,19 @@ class _FilterParser:
 
     def _multiplicative(self) -> _Val:
         a = self._unary()
-        while self._peek() in (("op", "*"), ("op", "/")):
-            op = self._take()[1]
+        while self._at("*", "/"):
+            op = self._take().value
             b = self._unary()
             an, bn = a.value.try_cast("double"), b.value.try_cast("double")
             a = self._num_val(an * bn if op == "*" else an / bn)
         return a
 
     def _unary(self) -> _Val:
-        if self._peek() == ("op", "-"):
+        if self._at("-"):
             self.i += 1
             a = self._unary()
             return self._num_val(-a.value.try_cast("double"))
-        if self._peek() == ("op", "("):
+        if self._at("("):
             # bracketted numeric sub-expression
             self.i += 1
             a = self._additive()
@@ -2476,10 +2265,10 @@ class _FilterParser:
         return self._value()
 
     # -- term-valued expressions
-    def _var_val(self, tok: str) -> _Val:
-        name = tok[1:]
+    def _var_val(self, tok: _Tok) -> _Val:
+        name = tok.value
         if name not in self.cols:
-            raise ValueError(f"FILTER references unbound variable {tok}")
+            raise ValueError(f"FILTER references unbound variable {tok.text}")
         if name == "this" and "this" not in self.bound_vars:
             # the pre-bound focus column (constraint mode): always an IRI
             return _Val(
@@ -2496,27 +2285,27 @@ class _FilterParser:
         )
 
     def _value(self) -> _Val:
-        kind, text = self._take()
+        t = self._take()
+        kind, text = t.kind, t.value
         if kind == "var":
-            return self._var_val(text)
+            return self._var_val(t)
         if kind == "str":
             return _Val(
-                F.lit(_unescape_string(text[1:-1])),
+                F.lit(text),
                 F.lit(KIND_LITERAL),
                 F.lit(XSD_STRING),
                 F.lit(None).cast("string"),
             )
         if kind == "num":
-            dt = XSD + ("decimal" if "." in text else "integer")
             return _Val(
                 F.lit(text),
                 F.lit(KIND_LITERAL),
-                F.lit(dt),
+                F.lit(_Parser.term(t).dt),
                 F.lit(None).cast("string"),
             )
         if kind == "iri":
             return _Val(
-                F.lit(text[1:-1]),
+                F.lit(text),
                 F.lit(KIND_IRI),
                 F.lit(None).cast("string"),
                 F.lit(None).cast("string"),
@@ -2850,18 +2639,18 @@ class _FilterParser:
             return a.value.isNotNull() & (a.kind == KIND_BNODE)
         self._expect(",")
         if fn == "regex":
-            pk, pt = self._take()
-            if pk != "str":
+            p = self._take()
+            if p.kind != "str":
                 raise ValueError("regex() pattern must be a string literal")
-            # SPARQL §17.4.3.14: the pattern argument is a string
-            # literal — string-unescape FIRST (so source "\\d" reaches
-            # the regex engine as \d), then hand to the regex engine
-            pat = _unescape_string(pt[1:-1])
+            # SPARQL §17.4.3.14: the pattern argument is a string literal,
+            # string-unescaped by the lexer (source "\\d" reaches the
+            # regex engine as \d)
+            pat = p.value
             if self._accept(","):
-                fk, ft = self._take()
-                if fk != "str":
+                f = self._take()
+                if f.kind != "str":
                     raise ValueError("regex() flags must be a string literal")
-                flags = "".join(c for c in ft[1:-1] if c in "ims")
+                flags = "".join(c for c in f.value if c in "ims")
                 if flags:
                     pat = f"(?{flags}){pat}"
             self._expect(")")
@@ -2894,7 +2683,7 @@ class _FilterParser:
 def _filter_condition(
     f: _Filter, cols: dict[str, Column], bound_vars: set[str] = frozenset()
 ) -> Column:
-    return _FilterParser(f.raw, cols, bound_vars).parse()
+    return _FilterParser(f.toks, cols, bound_vars).parse()
 
 
 def _closure_path_rel(
@@ -3095,6 +2884,14 @@ def _order_patterns(
     return tuple(out)
 
 
+def _cross_join(bound: DataFrame, other: DataFrame) -> DataFrame:
+    """SPARQL's join of solution sets that share no variable: the cross
+    product, with ``other`` broadcast when the one gate (is_small) allows
+    it — unhinted, Spark plans a CartesianProduct of every partition
+    pair."""
+    return bound.crossJoin(maybe_broadcast(other, is_small(other)))
+
+
 def _join_patterns(
     data: DataFrame,
     bound: DataFrame,
@@ -3288,7 +3085,7 @@ def _join_patterns(
         else:
             # no shared variable: SPARQL cross-product semantics (rare but
             # legal — e.g. an existence probe); documented and allowed
-            bound = bound.crossJoin(rel)
+            bound = _cross_join(bound, rel)
 
         # register newly bound variables
         if pat.subj.kind == "var" and pat.subj.value not in bound_vars:
@@ -3486,7 +3283,7 @@ def _group_join(
         if set(bound.columns) == {"_seed"}:
             bound = matched.withColumn("_seed", F.lit(0))
         else:
-            bound = bound.crossJoin(matched)
+            bound = _cross_join(bound, matched)
         bound_vars |= inner_vars
         return bound
     keys = bound.select(*key_cols).distinct()
@@ -3820,7 +3617,7 @@ def _subselect_join(
     if key_cols:
         bound = bound.join(inner, on=key_cols, how="inner")
     else:
-        bound = bound.crossJoin(inner)
+        bound = _cross_join(bound, inner)
     bound_vars |= new_vars
     return bound
 
@@ -3995,23 +3792,35 @@ def _apply_aggregation(
     having_expr = q.having
     extra: list[_Agg] = []
     if having_expr:
+        # an inline aggregate call FN([DISTINCT] ?v|*) reads its own
+        # hidden aggregate column (or the projected one computing it)
         seen = {(a.fn, a.var, a.distinct): a.alias for a in q.aggs}
-        counter = itertools.count()
-
-        def _repl(mm: re.Match) -> str:
-            key = (
-                mm.group("fn").lower(),
-                None if mm.group("arg") == "*" else mm.group("arg")[1:],
-                bool(mm.group("d")),
-            )
-            alias = seen.get(key)
-            if alias is None:
-                alias = f"_hagg{next(counter)}"
-                seen[key] = alias
-                extra.append(_Agg(*key, alias))
-            return f"?{alias}"
-
-        having_expr = _AGG_CALL_RE.sub(_repl, having_expr)
+        toks: list[_Tok] = []
+        i = 0
+        while i < len(having_expr):
+            t = having_expr[i]
+            call = having_expr[i : i + 5]
+            distinct = len(call) > 2 and _is_kw(call[2], "DISTINCT")
+            arg = call[2 + distinct : 4 + distinct]
+            if (
+                _is_kw(t, *_AGG_FNS)
+                and call[1:2] == (_op("(", 0),)
+                and len(arg) == 2
+                and (arg[0].kind == "var" or arg[0] == _op("*", 0))
+                and arg[1] == _op(")", 0)
+            ):
+                var = None if arg[0].kind == "op" else arg[0].value  # * = None
+                key = (t.value.lower(), var, distinct)
+                alias = seen.get(key)
+                if alias is None:
+                    alias = seen[key] = f"_hagg{len(extra)}"
+                    extra.append(_Agg(*key, alias))
+                toks.append(_Tok("var", alias, f"?{alias}", t.pos))
+                i += 4 + distinct
+                continue
+            toks.append(t)
+            i += 1
+        having_expr = tuple(toks)
 
     if has_this and "this" not in q.group_by:
         raise ValueError(
@@ -4245,8 +4054,7 @@ def evaluate_property_ask_constraint(
     focus set; the ASK body evaluates once over the whole pair frame
     (the pre-bound ?value is just extra bound columns), and failing
     pairs drop out via a single anti join on a null-safe pair key."""
-    body = re.sub(r"\$value\b", "?value", sc.ask or "")
-    block = parse_ask(body, allow_pattern_free=True)
+    block = parse_ask(sc.ask or "", allow_pattern_free=True)
     pair_key = F.concat_ws(
         "\x1f",
         F.col("this"),

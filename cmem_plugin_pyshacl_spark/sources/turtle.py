@@ -52,6 +52,7 @@ from ..data_model import (
     KIND_BNODE,
     KIND_IRI,
     KIND_LITERAL,
+    ParseError,
     RDF,
     TRIPLES_SCHEMA,
     XSD,
@@ -68,14 +69,8 @@ RDF_REST = RDF + "rest"
 RDF_NIL = RDF + "nil"
 
 
-class TurtleParseError(ValueError):
+class TurtleParseError(ParseError):
     """Raised on malformed Turtle, with the character offset."""
-
-    def __init__(self, message: str, pos: int, text: str):
-        line = text.count("\n", 0, pos) + 1
-        col = pos - (text.rfind("\n", 0, pos) + 1) + 1
-        super().__init__(f"{message} at line {line}, col {col} (offset {pos})")
-        self.pos = pos
 
 
 _SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.\-]*:")

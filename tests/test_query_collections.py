@@ -1,7 +1,7 @@
 """RDF collections ``( e1 e2 … )`` in query patterns — desugared by
-plans/sparql_af._expand_collections onto the rdf:first/rdf:rest chain
-the Turtle reader (sources/turtle.py) stores, with path groups (the
-other legal parens in a pattern body) left untouched."""
+the plans/sparql_af.py parser onto the rdf:first/rdf:rest chain the
+Turtle reader (sources/turtle.py) stores, with path groups (the other
+legal parens in a pattern body) left untouched."""
 
 from __future__ import annotations
 
@@ -19,8 +19,9 @@ from cmem_plugin_pyshacl_spark.plans.sparql_af import (
     RDF_FIRST,
     RDF_NIL,
     RDF_REST,
-    _expand_collections,
-    _is_collection,
+    RDF_TYPE,
+    parse_select_query,
+    pattern_predicates,
 )
 
 
@@ -133,23 +134,35 @@ def test_invalid_member_raises(spark, graph):
         )
 
 
+def _block(where: str):
+    return parse_select_query(f"SELECT ?s WHERE {{ {where} }}").block
+
+
 def test_classifier_text_level():
-    assert _is_collection("?a ?b")
-    assert _is_collection('"x" "y"')
-    assert _is_collection("1 2.5")
-    assert _is_collection("")  # () = rdf:nil
-    assert _is_collection("<urn:a> <urn:b>")  # two IRIs, no operators
-    assert not _is_collection("<urn:p>")  # single IRI: path group
-    assert not _is_collection("<urn:p>|<urn:q>")
-    assert not _is_collection("<urn:p>/<urn:q>")
-    assert not _is_collection("^<urn:p>")
-    assert not _is_collection("a")  # (a) = rdf:type path group
+    # in object position a paren group is a collection: one rdf:first /
+    # rdf:rest pair per member
+    for members in ("?a ?b", '"x" "y"', "1 2.5", "<urn:a> <urn:b>"):
+        preds = [p.pred for p in _block(f"?s <urn:l> ( {members} )").patterns]
+        assert preds.count(RDF_FIRST) == 2 and preds.count(RDF_REST) == 2
+    (nil,) = _block("?s <urn:l> ( )").patterns  # () = rdf:nil
+    assert (nil.obj.kind, nil.obj.value) == ("iri", RDF_NIL)
+    # in predicate position it is a property-path group
+    for path, preds in (
+        ("(<urn:p>)", {"urn:p"}),  # single IRI: path group
+        ("(<urn:p>|<urn:q>)", {"urn:p", "urn:q"}),
+        ("(<urn:p>/<urn:q>)", {"urn:p", "urn:q"}),
+        ("(^<urn:p>)", {"urn:p"}),
+        ("(a)", {RDF_TYPE}),  # (a) = rdf:type path group
+    ):
+        assert pattern_predicates(_block(f"?s {path} ?o"))[0] == preds
 
 
 def test_expand_emits_chain_text():
-    body = _expand_collections("?s <urn:p> ( ?a ) ")
-    assert RDF_FIRST in body and RDF_REST in body and RDF_NIL in body
-    assert "?_cl" in body and "(" not in body
+    head, first, rest = _block("?s <urn:p> ( ?a ) ").patterns
+    cell = head.obj
+    assert cell.kind == "var" and cell.value.startswith("_cl")
+    assert (first.subj, first.pred, first.obj.value) == (cell, RDF_FIRST, "a")
+    assert (rest.subj, rest.pred, rest.obj.value) == (cell, RDF_REST, RDF_NIL)
 
 
 def test_one_member_group_in_object_position_raises(spark, graph):

@@ -141,6 +141,22 @@ def test_from_and_from_named_combined(spark, store):
     assert not any(r["s"] == "urn:a" for r in out.collect())
 
 
+def test_disjoint_join_is_not_a_cartesian_product(spark, store):
+    # the GRAPH arm shares no variable with the plain pattern: SPARQL's
+    # cross product. The broadcast gate hints its small side, so Spark
+    # plans a broadcast nested-loop join, not a CartesianProduct over
+    # every pair of partitions
+    out = sparql_select(
+        spark,
+        store,
+        f"""SELECT ?s ?t FROM <{G2}> FROM NAMED <{G1}>
+            WHERE {{ ?s <{EX}p> ?o . GRAPH <{G1}> {{ ?t <{EX}p> ?u }} }}""",
+    )
+    assert [tuple(r) for r in out.collect()] == [("urn:e", "urn:c")]
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" not in plan
+
+
 # ------------------------------------------------- other query forms
 
 

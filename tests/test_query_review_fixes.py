@@ -17,7 +17,6 @@ from cmem_plugin_pyshacl_spark.data_model import (
     triples_from_rows,
 )
 from cmem_plugin_pyshacl_spark.plans.query import (
-    _split_ops,
     sparql_select,
     sparql_update,
 )
@@ -42,16 +41,18 @@ def store(spark):
     return default.unionByName(g1).unionByName(g2)
 
 
-# ------------------------------------------------- _split_ops / '<' ops
+# ------------------------------------------ update operations / '<' ops
 
 
 def test_split_ops_filter_less_than_is_not_an_iri():
-    ops = _split_ops(
+    from cmem_plugin_pyshacl_spark.plans.sparql_af import parse_update
+
+    ops = parse_update(
         'INSERT { ?s <urn:minor> "y" } WHERE '
         "{ ?s <urn:age> ?a . FILTER(?a < 18) } ; CLEAR DEFAULT"
     )
     assert len(ops) == 2
-    assert ops[1] == "CLEAR DEFAULT"
+    assert (ops[1].verb, ops[1].scope) == ("CLEAR", "DEFAULT")
 
 
 def test_update_sequence_with_filter_comparison(spark, store):
@@ -256,19 +257,20 @@ def test_one_member_group_raises_in_subject_and_object_list_positions():
     # round-5 review: the ambiguity guard fired only at end-of-statement;
     # subject position and before a ',' object-list separator now raise
     # too instead of failing later with an unrelated parse error
-    from cmem_plugin_pyshacl_spark.plans.sparql_af import _expand_collections
+    from cmem_plugin_pyshacl_spark.plans.sparql_af import parse_select
+
+    def parse(body: str):
+        return parse_select(f"SELECT ?s WHERE {{ {body} }}")[1]
 
     with pytest.raises(ValueError, match="one-member group"):
-        _expand_collections("?s <urn:p> (<urn:x>) , <urn:y> .")
+        parse("?s <urn:p> (<urn:x>) , <urn:y> .")
     with pytest.raises(ValueError, match="one-member group"):
-        _expand_collections("(<urn:x>) <urn:p> ?o .")
+        parse("(<urn:x>) <urn:p> ?o .")
     with pytest.raises(ValueError, match="one-member group"):
-        _expand_collections("?a <urn:q> ?b . (<urn:x>) <urn:p> ?o .")
+        parse("?a <urn:q> ?b . (<urn:x>) <urn:p> ?o .")
     # predicate position stays a legal path group
-    assert (
-        _expand_collections("?s (<urn:p>) ?o .")
-        == "?s (<urn:p>) ?o ."
-    )
+    (pat,) = parse("?s (<urn:p>) ?o .").patterns
+    assert (pat.subj.value, pat.pred, pat.obj.value) == ("s", "urn:p", "o")
 
 
 # ------------------------------------------------- LOAD SILENT laziness
@@ -302,15 +304,14 @@ def test_load_not_silent_still_raises(spark, store, tmp_path):
 
 
 def test_extract_groups_escaped_backslash_in_group():
-    from cmem_plugin_pyshacl_spark.plans.sparql_af import (
-        _extract_groups,
-        _split_alternation,
-    )
+    from cmem_plugin_pyshacl_spark.plans.sparql_af import parse_select
 
-    kept, groups = _extract_groups(
-        '?s <urn:p> ?o . OPTIONAL { ?s <urn:q> "x\\\\" }'
+    _, block = parse_select(
+        'SELECT ?s WHERE { ?s <urn:p> ?o . OPTIONAL { ?s <urn:q> "x\\\\" } }'
     )
-    assert groups and groups[0][0] == "OPTIONAL"
-    assert '"x\\\\"' in groups[0][1]
-    parts = _split_alternation('{ ?s <urn:p> "a\\\\" } UNION { ?s <urn:q> ?o }')
-    assert parts is not None and len(parts) == 2
+    (opt,) = block.optionals
+    assert opt.patterns[0].obj.value == "x\\"  # the escaped backslash
+    _, block = parse_select(
+        'SELECT ?s WHERE { { ?s <urn:p> "a\\\\" } UNION { ?s <urn:q> ?o } }'
+    )
+    assert len(block.alternatives) == 2
