@@ -2304,11 +2304,11 @@ def validate(
                     _dc_replace(
                         sc,
                         select=expand_function_calls(sc.select, af_functions)
-                        if sc.select
-                        else sc.select,
+                        if sc.select is not None
+                        else None,
                         ask=expand_function_calls(sc.ask, af_functions)
-                        if sc.ask
-                        else sc.ask,
+                        if sc.ask is not None
+                        else None,
                     )
                     for sc in scs
                 ]

@@ -177,13 +177,13 @@ SH_SPARQL_COMPONENT = SH + "SPARQLConstraintComponent"
 class SparqlConstraint:
     node_shape: str  # owning node shape (focus targets come from it)
     constraint_id: str  # the sh:sparql node (sourceShape in reports)
-    select: _Lexed | str  # the lexed SELECT ("" for an ASK validator)
+    select: _Lexed | None  # the lexed SELECT (None for an ASK validator)
     message: str | None
     severity: str
     # custom constraint components (SHACL-AF §6) report their own IRI
     component: str = SH_SPARQL_COMPONENT
     # SPARQLAskValidator body (SHACL-AF §6.2.2): when set, `select` is
-    # empty and conformance means the ASK pattern has >=1 solution for
+    # None and conformance means the ASK pattern has >=1 solution for
     # the focus node ($this pre-bound); no solution -> one violation.
     ask: _Lexed | None = None
     # property-shape application (SHACL-AF §6.2: sh:propertyValidator /
@@ -565,7 +565,7 @@ def compile_custom_components(
                     SparqlConstraint(
                         node_shape=owner,
                         constraint_id=subj,
-                        select="" if is_ask else sel,
+                        select=None if is_ask else sel,
                         message=msg,
                         severity=SH + "Violation",
                         component=comp_iri,
@@ -957,9 +957,8 @@ class _Lexer(_TurtleReader):
                 kind, value = "var", m.group(1)
             elif c in "\"'":
                 kind, value = "str", _unescape_string(self._string_body())
-            elif c.isdigit():
-                kind, value = "num", _NUMBER_RE.match(text, i).group(0)
-                self.i += len(value)
+            elif c.isdigit() and (m := _NUMBER_RE.match(text, i)):
+                kind, value = "num", m.group(0)
             elif text.startswith("_:", i):
                 self._fail("blank node labels are not supported (use a variable)")
             elif c == ":" or _NAME_RE.match(text, i):
@@ -1280,7 +1279,12 @@ class _Parser:
         """TriplesSameSubject ('.' TriplesSameSubject?)*"""
         while True:
             subj = self.node()
-            if not (isinstance(subj, _BList) and subj.props and not self.starts_verb()):
+            if isinstance(subj, _BList) and subj.props and not self.starts_verb():
+                # `[ verb objects ] .` alone: the list's own triples are
+                # the statement (its subject a fresh variable)
+                b = self.mint("_bp")
+                out.extend((b, v, o) for v, o in subj.props)
+            else:
                 self.property_list(subj, out, paths)
             if not self.accept("."):
                 return
@@ -1586,11 +1590,11 @@ class _Parser:
                     break
             if not group_by:
                 self.fail("GROUP BY lists no variables")
-        having = None
+        having, having_aggs = None, ()
         if self.accept_kw("HAVING"):
             if self.peek().text != "(":
                 self.fail("HAVING requires a parenthesized expression")
-            having = self.span()
+            having, having_aggs = self.having(aggs)
         order_by: list[tuple[str, bool]] = []
         if self.accept_kw("ORDER"):
             self.expect_kw("BY")
@@ -1656,6 +1660,7 @@ class _Parser:
         return _SelectQuery(
             tuple(proj), block, tuple(aggs), tuple(group_by), having,
             distinct, tuple(order_by), limit, star, offset, values_clause,
+            having_aggs,
         )
 
     def agg_projection(self) -> _Agg:
@@ -1663,22 +1668,7 @@ class _Parser:
         at = self.peek()
         try:
             self.expect("(")
-            fn = self.take()
-            if not _is_kw(fn, *_AGG_FNS):
-                self.fail("not an aggregate", fn)
-            self.expect("(")
-            distinct = self.accept_kw("DISTINCT")
-            arg = self.take()
-            if arg.kind != "var" and arg.text != "*":
-                self.fail("bad aggregate argument", arg)
-            sep = None
-            if self.accept(";"):
-                self.expect_kw("SEPARATOR")
-                self.expect("=")
-                if self.peek().kind != "str":
-                    self.fail("SEPARATOR takes a string")
-                sep = self.take().value
-            self.expect(")")
+            call = self.agg_call()
             self.expect_kw("AS")
             alias = self.take()
             if alias.kind != "var":
@@ -1686,15 +1676,58 @@ class _Parser:
             self.expect(")")
         except SparqlParseError:
             self.fail(f"unsupported projection term near {at.text!r}", at)
+        return dataclasses.replace(call, alias=alias.value)
+
+    def agg_call(self) -> _Agg:
+        """FN ( [DISTINCT] ?v|* [; SEPARATOR = "s"] ), its alias unset."""
+        fn = self.take()
+        if not _is_kw(fn, *_AGG_FNS):
+            self.fail("not an aggregate", fn)
+        self.expect("(")
+        distinct = self.accept_kw("DISTINCT")
+        arg = self.take()
+        if arg.kind != "var" and arg.text != "*":
+            self.fail("bad aggregate argument", arg)
+        sep = None
+        if self.accept(";"):
+            self.expect_kw("SEPARATOR")
+            self.expect("=")
+            if self.peek().kind != "str":
+                self.fail("SEPARATOR takes a string")
+            sep = self.take().value
+        self.expect(")")
         if sep is not None and fn.value.upper() != "GROUP_CONCAT":
             raise ValueError("SEPARATOR is only valid inside GROUP_CONCAT")
         return _Agg(
             fn.value.lower(),
             None if arg.text == "*" else arg.value,
             distinct,
-            alias.value,
+            "",
             " " if sep is None else sep,
         )
+
+    def having(self, aggs: list) -> tuple[tuple, tuple]:
+        """HAVING ( expr ) -> (expr tokens, hidden aggregates): each inline
+        aggregate call reads the projected aggregate computing it, or a
+        hidden one minted here."""
+        body = self.span()
+        end = self.i
+        self.i -= len(body) + 1
+        seen = {dataclasses.replace(a, alias=""): a.alias for a in aggs}
+        hidden: list[_Agg] = []
+        toks: list[_Tok] = []
+        while self.i < end - 1:
+            t = self.peek()
+            if _is_kw(t, *_AGG_FNS) and self.peek(1).text == "(":
+                call = self.agg_call()
+                if call not in seen:
+                    seen[call] = self.mint("_hagg").value
+                    hidden.append(dataclasses.replace(call, alias=seen[call]))
+                toks.append(_Tok("var", seen[call], f"?{seen[call]}", t.pos))
+            else:
+                toks.append(self.take())
+        self.i = end
+        return tuple(toks), tuple(hidden)
 
     def ask_group(self, pattern_free: bool = False) -> _Block:
         """[WHERE] { … } of an ASK; ``pattern_free`` admits a group of
@@ -1937,6 +1970,9 @@ class _SelectQuery:
     # after aggregation (§18.2.4.2); standalone sparql_select only,
     # constraint/target/subquery evaluation rejects it
     values_clause: _ValuesClause | None = None
+    # aggregates HAVING calls inline that no projection computes, each
+    # under a hidden alias its rewritten tokens read
+    having_aggs: tuple = ()  # tuple[_Agg, ...]
 
 
 def _no_values(q: "_SelectQuery", where: str) -> "_SelectQuery":
@@ -3786,42 +3822,10 @@ def _apply_aggregation(
     try_cast (non-numeric values become NULL and are ignored, SPARQL's
     error-solution-dropping behavior for numeric aggregates); COUNT
     supports DISTINCT and ``*``. HAVING may reference aggregate aliases
-    or inline aggregate calls (rewritten to hidden aggregate columns).
+    or inline aggregate calls (the parser rewrote those to the hidden
+    aggregates of ``q.having_aggs``).
     Constraint mode requires GROUP BY $this so every row still reports a
     focus node; part_id survives as min() per group."""
-    having_expr = q.having
-    extra: list[_Agg] = []
-    if having_expr:
-        # an inline aggregate call FN([DISTINCT] ?v|*) reads its own
-        # hidden aggregate column (or the projected one computing it)
-        seen = {(a.fn, a.var, a.distinct): a.alias for a in q.aggs}
-        toks: list[_Tok] = []
-        i = 0
-        while i < len(having_expr):
-            t = having_expr[i]
-            call = having_expr[i : i + 5]
-            distinct = len(call) > 2 and _is_kw(call[2], "DISTINCT")
-            arg = call[2 + distinct : 4 + distinct]
-            if (
-                _is_kw(t, *_AGG_FNS)
-                and call[1:2] == (_op("(", 0),)
-                and len(arg) == 2
-                and (arg[0].kind == "var" or arg[0] == _op("*", 0))
-                and arg[1] == _op(")", 0)
-            ):
-                var = None if arg[0].kind == "op" else arg[0].value  # * = None
-                key = (t.value.lower(), var, distinct)
-                alias = seen.get(key)
-                if alias is None:
-                    alias = seen[key] = f"_hagg{len(extra)}"
-                    extra.append(_Agg(*key, alias))
-                toks.append(_Tok("var", alias, f"?{alias}", t.pos))
-                i += 4 + distinct
-                continue
-            toks.append(t)
-            i += 1
-        having_expr = tuple(toks)
-
     if has_this and "this" not in q.group_by:
         raise ValueError(
             "an aggregate sh:sparql constraint select must GROUP BY $this"
@@ -3837,7 +3841,7 @@ def _apply_aggregation(
                 f"GROUP BY variable ?{g} is not bound by the pattern"
             )
 
-    all_aggs = list(q.aggs) + extra
+    all_aggs = q.aggs + q.having_aggs
     agg_exprs: list[Column] = []
     if has_this and "part_id" in bound.columns:
         # absent inside a subquery seeded from bare focus keys
@@ -3944,11 +3948,11 @@ def _apply_aggregation(
     new_vars = {g for g in q.group_by if not (g == "this" and has_this)} | {
         a.alias for a in all_aggs
     }
-    if having_expr:
+    if q.having:
         cols = {v: F.col(f"{v}__value") for v in new_vars}
         if has_this:
             cols["this"] = F.col("this")
-        out = out.filter(_FilterParser(having_expr, cols, new_vars).parse())
+        out = out.filter(_FilterParser(q.having, cols, new_vars).parse())
     return out, new_vars
 
 

@@ -986,7 +986,8 @@ def _rt_blocks(draw, fresh: list, depth: int = 0) -> _Block:
     """A group whose patterns include sequence paths, closure paths, RDF
     collections and blank-node property lists in their desugared form:
     chains through fresh variables, the bnode-list triples and then the
-    collection chains after the group's own statements."""
+    collection chains after the group's own statements. A list standing
+    alone as a statement keeps its triples in statement order."""
 
     def mint(prefix: str) -> _SpTerm:
         fresh[0] += 1
@@ -1002,7 +1003,9 @@ def _rt_blocks(draw, fresh: list, depth: int = 0) -> _Block:
     for _ in range(draw(st.integers(1, 3))):
         s = draw(st.one_of(_rt_vars, _rt_iris))
         p = draw(_rt_preds)
-        kind = draw(st.sampled_from(["plain", "seq", "closure", "coll", "bnode"]))
+        kind = draw(
+            st.sampled_from(["plain", "seq", "closure", "coll", "bnode", "bnode_subj"])
+        )
         if kind == "seq":
             hop = mint("_seq")
             main += [pattern(s, p, hop), pattern(hop, draw(_rt_preds), draw(_rt_objs))]
@@ -1018,6 +1021,11 @@ def _rt_blocks(draw, fresh: list, depth: int = 0) -> _Block:
             main.append(pattern(s, p, heads[0] if heads else nil))
             for head, item, nxt in zip(heads, items, [*heads[1:], nil]):
                 cells += [pattern(head, RDF_FIRST, item), pattern(head, RDF_REST, nxt)]
+        elif kind == "bnode_subj":
+            # `[ verb objects ] .` alone: its triples in statement order
+            node = mint("_bp")
+            for _ in range(draw(st.integers(1, 2))):
+                main.append(pattern(node, draw(_rt_preds), draw(_rt_objs)))
         elif kind == "bnode":
             node = mint("_bp")
             main.append(pattern(s, p, node))
@@ -1086,9 +1094,14 @@ def _rt_render(b: _Block) -> str:
             return "[ " + " ; ".join(props) + " ]"
         return _rt_term(t)
 
+    referenced = {p.obj.value for p in b.patterns if p.obj.kind == "var"}
     out = []
     for p in b.patterns:
         subj = p.subj
+        if subj.value.startswith("_bp") and subj.value not in referenced:
+            out.append(f"{obj(subj)} .")  # a subject-only list
+            referenced.add(subj.value)
+            continue
         if subj.value.startswith(_FRESH):
             continue  # rendered inside the sugar that minted it
         if not isinstance(p.pred, str):  # PClosure(PPred)

@@ -16,7 +16,7 @@ from cmem_plugin_pyshacl_spark.data_model import (
     lit_typed,
     triples_from_rows,
 )
-from cmem_plugin_pyshacl_spark.plans.query import sparql_select
+from cmem_plugin_pyshacl_spark.plans.query import sparql_construct, sparql_select
 from cmem_plugin_pyshacl_spark.plans.shacl import validate
 from cmem_plugin_pyshacl_spark.plans.sparql_af import (
     SparqlParseError,
@@ -57,6 +57,12 @@ _MALFORMED = [
         parse_select_query,
         "PREFIX ex: <urn:ex:>\nSELECT ?s WHERE { ?s ex:p ?o ; exx:q ?o }",
         (2, 32, 52),
+    ),
+    (
+        "non-ASCII digit",  # '²' is a digit to str.isdigit, not to §19.8
+        parse_select_query,
+        "SELECT ?s WHERE {\n  ?s <urn:p> \u00b2 }",
+        (2, 14, 31),
     ),
     (
         "trailing text after an update operation",
@@ -169,3 +175,48 @@ def test_fresh_path_variables_are_unique_per_query(spark):
         f"OPTIONAL {{ ?s <{EX}r>/<{EX}t> ?x }} }}",
     )
     assert [tuple(r) for r in out.collect()] == [("urn:o", "urn:x")]
+
+
+def test_subject_only_bnode_list_constrains_its_objects(spark):
+    """`[ verb objects ]` standing alone as a statement (§19 TriplesNode
+    with an empty PropertyList) is its triples through a fresh variable:
+    in a WHERE group it constrains ?s."""
+    data = triples_from_rows(
+        spark,
+        [
+            ("urn:s1", EX + "q", iri("urn:x")),
+            ("urn:s2", EX + "q", iri("urn:x")),
+            ("urn:a", EX + "p", iri("urn:s1")),
+        ],
+    )
+    out = sparql_select(
+        spark, data, f"SELECT ?s WHERE {{ ?s <{EX}q> ?x . [ <{EX}p> ?s ] }}"
+    )
+    assert [r[0] for r in out.collect()] == ["urn:s1"]
+    out = sparql_select(spark, data, f"SELECT ?s WHERE {{ [ <{EX}p> ?s ] }}")
+    assert [r[0] for r in out.collect()] == ["urn:s1"]
+    # template blank nodes are outside the subset: the list's triples
+    # reach the template check (and raise there) instead of vanishing
+    with pytest.raises(ValueError, match=r"template variable \?_bp0 is not bound"):
+        sparql_construct(
+            spark,
+            data,
+            f"CONSTRUCT {{ [ <{EX}r> ?s ] }} WHERE {{ ?a <{EX}p> ?s }}",
+        )
+
+
+def test_having_aggregate_calls_are_parsed_into_hidden_aggregates():
+    """HAVING's inline aggregate calls leave the parser as variables: the
+    projected aggregate's alias when one computes the same call, else a
+    hidden aggregate the query carries."""
+    q = parse_select_query(
+        "SELECT $this (COUNT(?v) AS ?n) WHERE { $this <urn:p> ?v } "
+        "GROUP BY $this HAVING (COUNT(?v) > 1 && SUM(?v) < COUNT(DISTINCT ?v))"
+    )
+    assert [t.text for t in q.having] == [
+        "?n", ">", "1", "&&", "?_hagg0", "<", "?_hagg1",
+    ]
+    assert [(a.fn, a.var, a.distinct, a.alias) for a in q.having_aggs] == [
+        ("sum", "v", False, "_hagg0"),
+        ("count", "v", True, "_hagg1"),
+    ]
