@@ -53,31 +53,25 @@ from ..data_model import (
     XSD,
 )
 from .shacl import (
-    PAlt,
-    PClosure,
-    PInv,
-    PPred,
-    PSeq,
     PathExpr,
     _eval_path_expr,
     _evaluate_shape,
     _focus_nodes,
-    _normalize_path,
     compile_shapes,
+    parse_shacl_path,
     subclass_closure,
 )
 from .sparql_af import (
     declared_prefixes,
     _Lexed,
     eval_bgp,
+    first_object,
     index_rows,
     lex,
     parse_construct,
 )
 
 logger = logging.getLogger(__name__)
-
-RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 
 _TRIPLE_KEY = ["s", "p", "o_kind", "o_value", "o_datatype", "o_lang"]
 
@@ -105,45 +99,6 @@ class Rule:
     construct: _Lexed | None = None  # the lexed sh:construct
 
 
-def _parse_path_node(by_subject: dict, node: str) -> PathExpr:
-    """Standalone twin of compile_shapes' nested parse_path
-    (plans/shacl.py:552) over the collected-row index — same full path
-    algebra (inverse / alternative / sequence / closures / nesting)."""
-
-    def obj(s: str, p: str) -> str | None:
-        rows = by_subject.get(s, {}).get(p, [])
-        return rows[0].o_value if rows else None
-
-    def rdf_list(n: str | None) -> list[str]:
-        out: list[str] = []
-        seen: set[str] = set()
-        while n and n != RDF_NS + "nil" and n not in seen:
-            seen.add(n)
-            first = obj(n, RDF_NS + "first")
-            if first is not None:
-                out.append(first)
-            n = obj(n, RDF_NS + "rest")
-        return out
-
-    inv_t = obj(node, SH + "inversePath")
-    if inv_t is not None:
-        return PInv(_parse_path_node(by_subject, inv_t))
-    alt_t = obj(node, SH + "alternativePath")
-    if alt_t is not None:
-        return PAlt(tuple(_parse_path_node(by_subject, x) for x in rdf_list(alt_t)))
-    for pred_name, kind in (
-        ("zeroOrMorePath", "zeroOrMore"),
-        ("oneOrMorePath", "oneOrMore"),
-        ("zeroOrOnePath", "zeroOrOne"),
-    ):
-        t = obj(node, SH + pred_name)
-        if t is not None:
-            return PClosure(_parse_path_node(by_subject, t), kind)
-    if obj(node, RDF_NS + "first") is not None:
-        return PSeq(tuple(_parse_path_node(by_subject, x) for x in rdf_list(node)))
-    return PPred(node)
-
-
 def _node_expr(by_subject: dict, row) -> _NodeExpr:
     v = row.o_value
     if v == SH + "this":
@@ -152,8 +107,7 @@ def _node_expr(by_subject: dict, row) -> _NodeExpr:
     path_rows = props.get(SH + "path", [])
     if path_rows:
         return _NodeExpr(
-            "path",
-            path=_normalize_path(_parse_path_node(by_subject, path_rows[0].o_value)),
+            "path", path=parse_shacl_path(first_object(by_subject), path_rows[0].o_value)
         )
     # a non-path node expression (sh:union, sh:filterShape, ...) is
     # outside the supported subset — fail loudly, not silently. A plain

@@ -50,7 +50,6 @@ fully supported — see _literal_fail_condition.)
 
 from __future__ import annotations
 
-import contextvars
 import json
 import logging
 import operator
@@ -66,6 +65,7 @@ from pyspark.sql import types as T
 from ..data_model import (
     KIND_IRI,
     KIND_LITERAL,
+    RDF,
     RDF_LANGSTRING,
     RDF_TYPE,
     RDFS_SUBCLASSOF,
@@ -88,25 +88,11 @@ SH_INFO = SH + "Info"
 
 _log = logging.getLogger(__name__)
 
-# Bound on zeroOrMore/oneOrMore closure fixpoint rounds. Reaching the bound
-# with a non-empty frontier means reachability was TRUNCATED (deep rdf:rest
-# / skos:broader chains) and hasValue/minCount outcomes may be wrong — a
-# warning is logged (round-2 ADVICE: silent truncation). Configurable per
-# call via validate(closure_max_iters=...), carried in a ContextVar so the
-# bound doesn't need threading through every evaluator signature.
-_CLOSURE_MAX_ITERS: contextvars.ContextVar[int] = contextvars.ContextVar(
-    "shacl_closure_max_iters", default=25
-)
-
-
-def _warn_closure_truncated(where: str, max_iters: int) -> None:
-    _log.warning(
-        "SHACL %s closure reached the %d-round bound with a non-empty "
-        "frontier — reachability is truncated; raise "
-        "validate(closure_max_iters=...) for deeper chains",
-        where,
-        max_iters,
-    )
+# Bound on zeroOrMore/oneOrMore closure fixpoint rounds (_path_step).
+# Reaching it with a non-empty frontier means reachability was TRUNCATED
+# (deep rdf:rest / skos:broader chains) and hasValue/minCount outcomes may
+# be wrong, so a warning is logged rather than truncating silently.
+_CLOSURE_MAX_ROUNDS = 25
 
 
 # lexical-space regexes for the datatypes that appear in fixtures; SHACL
@@ -187,7 +173,10 @@ class PropertyConstraint:
 
     shape_id: str  # the property shape node (skolemized if bnode)
     node_shape: str  # owning node shape
-    path: str  # simple IRI path (core scope)
+    # the resultPath cell: the bare predicate IRI for a predicate or an
+    # inverse path, _path_display of path_expr otherwise; None for a
+    # node-shape self constraint
+    path: str | None
     severity: str = SH_VIOLATION
     message: str | None = None
     min_count: int | None = None
@@ -207,9 +196,6 @@ class PropertyConstraint:
     and_refs: list[str] | None = None  # sh:and (list of shapes)
     language_in: list[str] | None = None  # sh:languageIn (list of BCP-47 tags)
     unique_lang: bool = False  # sh:uniqueLang
-    inverse: bool = False  # sh:path [sh:inversePath p] — incoming edges
-    seq_path: list[str] | None = None  # sh:path ( p1 p2 ... ) — sequence
-    alt_path: list[str] | None = None  # sh:path [sh:alternativePath (..)]
     equals_: str | None = None  # sh:equals (property pair)
     disjoint: str | None = None  # sh:disjoint
     less_than: str | None = None  # sh:lessThan
@@ -229,21 +215,16 @@ class PropertyConstraint:
     # full RDF terms (value, kind, datatype, lang) for term-identity checks
     in_terms: list[tuple[str, str, str | None, str | None]] | None = None
     has_value_term: tuple[str, str, str | None, str | None] | None = None
-    # sh:zeroOrMorePath / sh:oneOrMorePath / sh:zeroOrOnePath over a simple
-    # predicate: closure_kind in {'zeroOrMore','oneOrMore','zeroOrOne'}
-    closure_path: str | None = None
-    closure_kind: str | None = None
-    # arbitrarily NESTED path expression (sequence of inverses, alternative
-    # of sequences, closure of inverse, ...) — normalized PathExpr tree;
-    # flat forms keep the dedicated fast paths above and leave this None
+    # the sh:path as a normalized PathExpr (parse_shacl_path); None for a
+    # node-shape self constraint
     path_expr: "PathExpr | None" = None
 
 
 # ---------------------------------------------------------------- SHACL
 # property-path algebra (W3C SHACL §2.3.1 / SPARQL 1.1 property paths).
-# Flat shapes (one predicate, one inverse, one-level sequence/alternative/
-# closure) take the dedicated plans in _path_values; everything else
-# compiles to this tree and evaluates via _eval_path_expr.
+# Every sh:path compiles to this tree (parse_shacl_path); _path_values
+# takes a PPred as a plain `p == iri` slice and evaluates every other
+# tree via _eval_path_expr.
 @dataclass(frozen=True)
 class PPred:
     iri: str
@@ -345,6 +326,52 @@ def _maybe_paren(e: PathExpr) -> str:
     return s if isinstance(e, (PPred, PInv, PNeg)) else f"({s})"
 
 
+def _rdf_list(
+    node: str | None, first: Callable[[str], object], rest: Callable[[str], str | None]
+) -> list:
+    """The items of the rdf:first/rdf:rest collection at `node`: `first`
+    and `rest` read one cell's item and successor; a cycle ends the walk."""
+    out: list = []
+    seen: set[str] = set()
+    while node and node != RDF + "nil" and node not in seen:
+        seen.add(node)
+        item = first(node)
+        if item is not None:
+            out.append(item)
+        node = rest(node)
+    return out
+
+
+def parse_shacl_path(obj: Callable[[str, str], str | None], node: str) -> PathExpr:
+    """The SHACL property-path parser (W3C SHACL §2.3.1): `node` is the
+    object of sh:path, `obj(s, p)` the shapes graph's first object of
+    (s, p) or None. Any nesting parses (sequence of inverses, alternative
+    of sequences, closure of an inverse, ...); the result is normalized.
+    Shape compilation, the sh:TripleRule node expressions (plans/rules.py)
+    and custom components (plans/sparql_af.py) all read paths here."""
+
+    def items(head: str) -> tuple:
+        cells = _rdf_list(head, lambda c: obj(c, RDF + "first"), lambda c: obj(c, RDF + "rest"))
+        return tuple(parse(x) for x in cells)
+
+    def parse(n: str) -> PathExpr:
+        inv = obj(n, SH + "inversePath")
+        if inv is not None:
+            return PInv(parse(inv))
+        alt = obj(n, SH + "alternativePath")
+        if alt is not None:
+            return PAlt(items(alt))
+        for kind in ("zeroOrMore", "oneOrMore", "zeroOrOne"):
+            sub = obj(n, SH + kind + "Path")
+            if sub is not None:
+                return PClosure(parse(sub), kind)
+        if obj(n, RDF + "first") is not None:
+            return PSeq(items(n))
+        return PPred(n)
+
+    return _normalize_path(parse(node))
+
+
 @dataclass
 class NodeShape:
     shape_id: str
@@ -417,8 +444,6 @@ def compile_shapes(
         vals = objs(s, p)
         return vals[0] if vals else None
 
-    RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
-
     def rdf_list(node: str | None) -> list[str] | None:
         """Walk an rdf:first/rdf:rest collection (sh:in is an RDF list)."""
         terms = rdf_list_terms(node)
@@ -431,15 +456,7 @@ def compile_shapes(
         sh:in membership is RDF term identity, not string form."""
         if node is None:
             return None
-        out: list[tuple[str, str, str | None, str | None]] = []
-        seen: set[str] = set()
-        while node and node != RDF_NS + "nil" and node not in seen:
-            seen.add(node)
-            first = term(node, RDF_NS + "first")
-            if first is not None:
-                out.append(first)
-            node = obj(node, RDF_NS + "rest")
-        return out
+        return _rdf_list(node, lambda c: term(c, RDF + "first"), lambda c: obj(c, RDF + "rest"))
 
     # node shapes: anything typed sh:NodeShape, or with target declarations,
     # or an rdfs:Class with sh:property (implicit class target, SHACL §2.1.3.3)
@@ -467,7 +484,9 @@ def compile_shapes(
         "minInclusive", "maxInclusive", "minExclusive", "maxExclusive",
     )
 
-    def constraint_from(node_id: str, owner: str, path: str | None) -> PropertyConstraint:
+    def constraint_from(
+        node_id: str, owner: str, path: PathExpr | None
+    ) -> PropertyConstraint:
         raw_min = obj(node_id, SH + "minCount")
         raw_max = obj(node_id, SH + "maxCount")
         raw_minlen = obj(node_id, SH + "minLength")
@@ -475,7 +494,12 @@ def compile_shapes(
         return PropertyConstraint(
             shape_id=node_id,
             node_shape=owner,
-            path=path,
+            path=(
+                None if path is None
+                else path.sub.iri if isinstance(path, PInv)
+                else _path_display(path)
+            ),
+            path_expr=path,
             severity=obj(node_id, SH + "severity") or SH_VIOLATION,
             message=obj(node_id, SH + "message"),
             min_count=int(raw_min) if raw_min is not None else None,
@@ -539,60 +563,10 @@ def compile_shapes(
         )
         for pshape in objs(sid, SH + "property"):
             path = obj(pshape, SH + "path")
-            if path is None:
-                continue  # complex paths out of core scope
-            # sh:path [ sh:inversePath p ] — the path object is a node
-            # carrying an inversePath edge; sh:path ( p1 p2 ... ) — the
-            # path object is an RDF list (sequence path)
-            def parse_path(node: str) -> PathExpr:
-                """Recursive SHACL path parser — handles ARBITRARY nesting
-                (sequence of inverses, alternative of sequences, closure of
-                inverse, ...), matching pySHACL's full path support."""
-                inv_t = obj(node, SH + "inversePath")
-                if inv_t is not None:
-                    return PInv(parse_path(inv_t))
-                alt_t = obj(node, SH + "alternativePath")
-                if alt_t is not None:
-                    return PAlt(tuple(parse_path(x) for x in rdf_list(alt_t) or ()))
-                for pred_name, kind in (
-                    ("zeroOrMorePath", "zeroOrMore"),
-                    ("oneOrMorePath", "oneOrMore"),
-                    ("zeroOrOnePath", "zeroOrOne"),
-                ):
-                    t = obj(node, SH + pred_name)
-                    if t is not None:
-                        return PClosure(parse_path(t), kind)
-                if obj(node, RDF_NS + "first") is not None:
-                    return PSeq(tuple(parse_path(x) for x in rdf_list(node) or ()))
-                return PPred(node)
-
-            expr = _normalize_path(parse_path(path))
-            display = _path_display(expr)
-            # flat forms keep their dedicated one/two-join plans; anything
-            # nested evaluates through the generic path-algebra walker
-            if isinstance(expr, PPred):
-                pc = constraint_from(pshape, sid, expr.iri)
-            elif isinstance(expr, PInv):
-                pc = constraint_from(pshape, sid, expr.sub.iri)
-                pc.inverse = True
-            elif isinstance(expr, PSeq) and all(
-                isinstance(p, PPred) for p in expr.parts
-            ):
-                pc = constraint_from(pshape, sid, display)
-                pc.seq_path = [p.iri for p in expr.parts]
-            elif isinstance(expr, PAlt) and all(
-                isinstance(p, PPred) for p in expr.parts
-            ):
-                pc = constraint_from(pshape, sid, display)
-                pc.alt_path = [p.iri for p in expr.parts]
-            elif isinstance(expr, PClosure) and isinstance(expr.sub, PPred):
-                pc = constraint_from(pshape, sid, display)
-                pc.closure_path = expr.sub.iri
-                pc.closure_kind = expr.kind
-            else:
-                pc = constraint_from(pshape, sid, display)
-                pc.path_expr = expr
-            ns.properties.append(pc)
+            if path is not None:
+                ns.properties.append(
+                    constraint_from(pshape, sid, parse_shacl_path(obj, path))
+                )
         # sh:qualifiedValueShapesDisjoint: record the sibling qualified
         # shapes each disjoint-qualified constraint must exclude
         for pc in ns.properties:
@@ -765,83 +739,6 @@ def _vk() -> tuple[Column, Column]:
     return (F.col("v_kind"), F.col("v_datatype"))
 
 
-def _closure_values(
-    data: DataFrame, focus: DataFrame, c: PropertyConstraint,
-    max_iters: int | None = None,
-) -> DataFrame:
-    """sh:zeroOrMorePath / sh:oneOrMorePath / sh:zeroOrOnePath over a simple
-    predicate — bounded reachability fixpoint from the focus set (pySHACL,
-    which the reference delegates to at plugin_pyshacl.py:631-641, supports
-    full SHACL property paths; this is the Spark-native equivalent).
-
-    Returns DataFrame[focus, v_kind, v_value, v_datatype, v_lang, v_part_id]
-    with SET semantics (each reachable term once per focus node).
-
-    Scale posture: mirrors plans/connected_components.py — per-round
-    localCheckpoint truncates lineage, the frontier (bounded by the focus
-    set × fan-out) drives the join, and the edge relation is scanned once
-    per round from the persisted path-sliced data (see validate()).
-    """
-    term = ["v_kind", "v_value", "v_datatype", "v_lang"]
-    edges = data.filter(F.col("p") == c.closure_path).select(
-        F.col("s").alias("src"),
-        F.col("o_kind").alias("v_kind"),
-        F.col("o_value").alias("v_value"),
-        F.col("o_datatype").alias("v_datatype"),
-        F.col("o_lang").alias("v_lang"),
-        F.col("part_id").alias("v_part_id"),
-    )
-    seeds = focus.select("focus")
-    small_focus = is_small(focus)
-    self_rows = seeds.select(
-        "focus",
-        F.lit(KIND_IRI).alias("v_kind"),
-        F.col("focus").alias("v_value"),
-        F.lit(None).cast("string").alias("v_datatype"),
-        F.lit(None).cast("string").alias("v_lang"),
-        F.lit(None).cast(T.IntegerType()).alias("v_part_id"),
-    )
-    # one hop from the focus set (broadcast the small side, gated)
-    level1 = edges.join(
-        maybe_broadcast(seeds.withColumnRenamed("focus", "src"), small_focus), on="src"
-    ).withColumnRenamed("src", "focus")
-
-    if max_iters is None:
-        max_iters = _CLOSURE_MAX_ITERS.get()
-    if c.closure_kind == "zeroOrOne":
-        out = self_rows.unionByName(level1)
-    else:
-        acc = level1.localCheckpoint(eager=True)
-        frontier = acc.filter(F.col("v_kind") == KIND_IRI).select(
-            "focus", F.col("v_value").alias("src")
-        ).distinct().localCheckpoint(eager=True)
-        exhausted = True
-        for _ in range(max_iters):
-            if frontier.isEmpty():
-                exhausted = False
-                break
-            stepped = edges.join(maybe_broadcast(frontier, small_focus), on="src").select(
-                "focus", *term, "v_part_id"
-            )
-            new_rows = stepped.join(
-                acc.select("focus", *term), on=["focus", *term], how="left_anti"
-            ).localCheckpoint(eager=True)
-            if new_rows.isEmpty():
-                exhausted = False
-                break
-            acc = acc.unionByName(new_rows).localCheckpoint(eager=True)
-            frontier = (
-                new_rows.filter(F.col("v_kind") == KIND_IRI)
-                .select("focus", F.col("v_value").alias("src"))
-                .distinct()
-                .localCheckpoint(eager=True)
-            )
-        if exhausted and not frontier.isEmpty():
-            _warn_closure_truncated(c.closure_kind or "closure", max_iters)
-        out = acc if c.closure_kind == "oneOrMore" else self_rows.unionByName(acc)
-    return out.groupBy("focus", *term).agg(F.min("v_part_id").alias("v_part_id"))
-
-
 _PATH_TERM = ["v_kind", "v_value", "v_datatype", "v_lang"]
 
 
@@ -855,9 +752,13 @@ def _path_step(data: DataFrame, frontier: DataFrame, expr: PathExpr) -> DataFram
 
     Scale notes: each leaf is a `p == iri` slice of the (persisted,
     predicate-sliced) relation joined with the frontier; no broadcast hint
-    is forced here — nested-path frontiers can outgrow the focus set, so
-    the build side is left to AQE. Closure leaves reuse the bounded,
-    lineage-truncated fixpoint pattern of _closure_values."""
+    is forced here — path frontiers can outgrow the focus set, so the
+    build side is left to AQE. A closure is a bounded reachability
+    fixpoint (at most _CLOSURE_MAX_ROUNDS rounds, a warning when the
+    frontier is still non-empty there) in the pattern of
+    plans/connected_components.py: each round localCheckpoints its new
+    rows, truncating lineage, and only the new frontier drives the next
+    join."""
     if isinstance(expr, PPred):
         return (
             data.filter(F.col("p") == expr.iri)
@@ -968,9 +869,8 @@ def _path_step(data: DataFrame, frontier: DataFrame, expr: PathExpr) -> DataFram
         .distinct()
         .localCheckpoint(eager=True)
     )
-    max_iters = _CLOSURE_MAX_ITERS.get()
     exhausted = True
-    for _ in range(max_iters):
+    for _ in range(_CLOSURE_MAX_ROUNDS):
         if frontier_i.isEmpty():
             exhausted = False
             break
@@ -995,7 +895,11 @@ def _path_step(data: DataFrame, frontier: DataFrame, expr: PathExpr) -> DataFram
             .localCheckpoint(eager=True)
         )
     if exhausted and not frontier_i.isEmpty():
-        _warn_closure_truncated(f"nested {expr.kind}", max_iters)
+        _log.warning(
+            "SHACL %s path closure reached the %d-round bound with a "
+            "non-empty frontier — reachability is truncated",
+            expr.kind, _CLOSURE_MAX_ROUNDS,
+        )
     return acc if expr.kind == "oneOrMore" else self_rows.unionByName(acc)
 
 
@@ -1350,20 +1254,13 @@ def _with_focus(path_triples: DataFrame, focus: DataFrame) -> DataFrame:
     )
 
 
-def _is_simple_path(c: PropertyConstraint) -> bool:
-    return (
-        c.path is not None
-        and not (c.inverse or c.seq_path or c.alt_path or c.closure_kind)
-        and c.path_expr is None
-    )
-
-
 def _path_values(data: DataFrame, focus: DataFrame, c: PropertyConstraint) -> DataFrame:
     """S5 — the value nodes of `c` per focus node: DataFrame[focus, v_kind,
-    v_value, v_datatype, v_lang, part_id]. When `c.path` is None this is a
-    NODE-shape constraint: the focus node itself is the (single, IRI-kind)
-    value."""
-    if c.path is None:
+    v_value, v_datatype, v_lang, part_id]. A predicate path is one
+    `p == iri` slice; every other path goes through _eval_path_expr. When
+    `c.path_expr` is None this is a NODE-shape constraint: the focus node
+    itself is the (single, IRI-kind) value."""
+    if c.path_expr is None:
         # focus nodes selected by our targets are IRIs post-skolemization
         return focus.select(
             "focus",
@@ -1373,62 +1270,10 @@ def _path_values(data: DataFrame, focus: DataFrame, c: PropertyConstraint) -> Da
             F.lit(None).cast("string").alias("v_lang"),
             F.col("part_id"),
         )
-    if c.alt_path:
-        # alternative path (p1 | p2 | ...): union of each predicate's
-        # values — a single isin filter on the predicate column. A value
-        # node reachable via SEVERAL alternatives is ONE value node
-        # (W3C SHACL property paths are set-semantics) — dedupe by term
-        # so min/maxCount don't double-count (round-1 ADVICE finding).
-        path_triples = (
-            _edges(data.filter(F.col("p").isin(c.alt_path)))
-            .groupBy("focus", *_PATH_TERM)
-            .agg(F.min("v_part_id").alias("v_part_id"))
-        )
-    elif c.seq_path:
-        # sequence path ( p1 p2 ... ): chain of joins hop-to-hop; the
-        # intermediate node of hop i is the subject of hop i+1; distinct
-        # value nodes (two routes to one node count once).
-        hops = c.seq_path
-        cur = _edges(data.filter(F.col("p") == hops[0]))
-        for hop in hops[1:]:
-            nxt = data.filter(F.col("p") == hop).select(
-                F.col("s").alias("v_value"),
-                F.col("o_kind").alias("_k2"),
-                F.col("o_value").alias("_v2"),
-                F.col("o_datatype").alias("_d2"),
-                F.col("o_lang").alias("_l2"),
-            )
-            cur = cur.join(nxt, on="v_value").select(
-                "focus",
-                F.col("_k2").alias("v_kind"),
-                F.col("_v2").alias("v_value"),
-                F.col("_d2").alias("v_datatype"),
-                F.col("_l2").alias("v_lang"),
-                "v_part_id",
-            )
-        path_triples = cur.groupBy("focus", *_PATH_TERM).agg(
-            F.min("v_part_id").alias("v_part_id")
-        )
-    elif c.path_expr is not None:
-        # arbitrarily nested path — generic path-algebra evaluation
-        path_triples = _eval_path_expr(data, focus, c.path_expr)
-    elif c.closure_kind is not None:
-        # sh:zeroOrMorePath / sh:oneOrMorePath / sh:zeroOrOnePath —
-        # bounded reachability fixpoint (see _closure_values)
-        path_triples = _closure_values(data, focus, c)
-    elif c.inverse:
-        # inverse path: values of focus f are SUBJECTS of triples whose
-        # object is f — subjects are IRIs (post-skolemization)
-        path_triples = data.filter(F.col("p") == c.path).select(
-            F.col("o_value").alias("focus"),
-            F.lit(KIND_IRI).alias("v_kind"),
-            F.col("s").alias("v_value"),
-            F.lit(None).cast("string").alias("v_datatype"),
-            F.lit(None).cast("string").alias("v_lang"),
-            F.col("part_id").alias("v_part_id"),
-        )
+    if isinstance(c.path_expr, PPred):
+        path_triples = _edges(data.filter(F.col("p") == c.path_expr.iri))
     else:
-        path_triples = _edges(data.filter(F.col("p") == c.path))
+        path_triples = _eval_path_expr(data, focus, c.path_expr)
     return _with_focus(path_triples, focus)
 
 
@@ -1840,8 +1685,8 @@ def _evaluate_values(
     whatever the number of constraints, so Catalyst analyses a few plans
     per shape rather than one per constraint.
 
-    The value rows: simple paths share one `p IN (...)` slice keyed by
-    predicate; every other path kind, and a node-shape self constraint,
+    The value rows: predicate paths share one `p IN (...)` slice keyed by
+    predicate; every other path, and a node-shape self constraint,
     adds its own values (`present_of(i)` for constraint i) under its own
     key. The constraint parameters are ONE folded map literal from key to
     constraint-table rows; `inline(element_at(map, key))` pairs each value
@@ -1853,8 +1698,8 @@ def _evaluate_values(
         spec = _spec(c, cid=i)
         if all(spec[comp.param] is None for comp in _COMPONENTS):
             continue
-        if _is_simple_path(c):
-            key = c.path
+        if isinstance(c.path_expr, PPred):
+            key = c.path_expr.iri
             if key not in by_key:
                 simple.append(key)
         else:
@@ -1992,10 +1837,10 @@ def _evaluate_shape(
             )
     if shape.closed:
         # sh:closed — one result per (focus, value) whose predicate is
-        # neither a declared simple property path nor ignored
+        # neither a declared predicate path nor ignored
         comp = SH + "ClosedConstraintComponent"
         allowed = sorted(
-            {pc.path for pc in shape.properties if pc.path and not pc.inverse and not pc.seq_path}
+            {pc.path_expr.iri for pc in shape.properties if isinstance(pc.path_expr, PPred)}
             | set(shape.ignored_properties)
         )
         # sh:closed needs EVERY predicate, so it joins the big table with
@@ -2029,17 +1874,22 @@ def _evaluate_shape(
     return out
 
 
-def _path_leaf_preds(e: PathExpr) -> set[str]:
+def _path_leaf_preds(e: PathExpr) -> set[str] | None:
+    """Every predicate a path can traverse, or None when the set is open
+    (a negated property set anywhere in the path can read any predicate)."""
     if isinstance(e, PPred):
         return {e.iri}
-    if isinstance(e, PInv):
-        return _path_leaf_preds(e.sub)
+    if isinstance(e, PNeg):
+        return None
     if isinstance(e, (PSeq, PAlt)):
         out: set[str] = set()
         for p in e.parts:
-            out |= _path_leaf_preds(p)
+            leaf = _path_leaf_preds(p)
+            if leaf is None:
+                return None
+            out |= leaf
         return out
-    return _path_leaf_preds(e.sub)
+    return _path_leaf_preds(e.sub)  # PInv, PClosure
 
 
 def _constraint_predicates(compiled: CompiledShapes) -> set[str] | None:
@@ -2053,16 +1903,7 @@ def _constraint_predicates(compiled: CompiledShapes) -> set[str] | None:
         preds.update(s.target_subjects_of)
         preds.update(s.target_objects_of)
         for c in s.properties:
-            if c.path_expr is not None:
-                preds.update(_path_leaf_preds(c.path_expr))
-            elif c.alt_path:
-                preds.update(c.alt_path)
-            elif c.seq_path:
-                preds.update(c.seq_path)
-            elif c.closure_path:
-                preds.add(c.closure_path)
-            elif c.path is not None:
-                preds.add(c.path)
+            preds.update(_path_leaf_preds(c.path_expr))  # SHACL paths never negate
         for c in s.properties + s.self_constraints:
             for pred in (c.equals_, c.disjoint, c.less_than, c.less_than_eq):
                 if pred is not None:
@@ -2153,7 +1994,6 @@ def validate(
     advanced: bool = False,
     js: bool = False,
     max_validation_depth: int = 15,
-    closure_max_iters: int | None = None,
     iterate_rules: bool = False,
     focus_subset: DataFrame | None = None,
 ) -> DataFrame:
@@ -2202,24 +2042,6 @@ def validate(
         raise ValueError("SHACL-JS is outside the supported core scope")
     if not 1 <= max_validation_depth <= 999:
         raise ValueError("max_validation_depth must be in 1..999")
-    if closure_max_iters is not None:
-        if closure_max_iters < 1:
-            raise ValueError("closure_max_iters must be >= 1")
-        # run the whole call in a COPIED context so the override cannot
-        # leak into later validate() calls on this thread
-        ctx = contextvars.copy_context()
-
-        def _with_bound() -> DataFrame:
-            _CLOSURE_MAX_ITERS.set(closure_max_iters)
-            return validate(
-                spark, data_triples, shapes_triples, ont_triples, inference,
-                meta_shacl, advanced, js, max_validation_depth,
-                closure_max_iters=None, iterate_rules=iterate_rules,
-                focus_subset=focus_subset,
-            )
-
-        return ctx.run(_with_bound)
-
     if inference and inference != "none":
         from .inference import apply_inference
 

@@ -311,6 +311,12 @@ def index_rows(shapes_rows: list) -> dict[str, dict[str, list]]:
     return by_subject
 
 
+def first_object(by_subject: dict[str, dict[str, list]]):
+    """`obj(s, p)` over an index_rows index — the first object's value or
+    None, the lookup plans/shacl.py::parse_shacl_path reads paths with."""
+    return lambda s, p: next((r.o_value for r in by_subject.get(s, {}).get(p, ())), None)
+
+
 def compile_sparql_constraints(shapes_rows: list) -> dict[str, list[SparqlConstraint]]:
     """From collected shapes-graph rows (s, p, o_value ... tuples as Row
     objects), gather sh:sparql constraint nodes grouped by owning shape.
@@ -416,6 +422,8 @@ def compile_custom_components(
     subset. Parameter values live on shape subjects under arbitrary
     predicates, so they are collected in a second tiny pass restricted
     to exactly the declared parameter paths."""
+    from .shacl import PPred, parse_shacl_path
+
     by_subject = index_rows(shapes_rows)
     comps: list[tuple[str, list[tuple[str, bool]], str, str | None]] = []
     for subj, preds in by_subject.items():
@@ -502,6 +510,9 @@ def compile_custom_components(
     for r in val_rows:
         vals.setdefault((r.s, r.p), []).append(r)
 
+    # a path node's own triples (sh:inversePath, rdf:first, ...) may lie
+    # outside shapes_rows, so paths read the whole collected graph
+    path_obj = first_object(index_rows(all_rows) if all_rows is not None else by_subject)
     out: dict[str, list[SparqlConstraint]] = {}
     for comp_iri, params, node_v, prop_v in comps:
         path_set = {p for p, _o in params}
@@ -513,9 +524,12 @@ def compile_custom_components(
             owner = subj
             if path_rows:
                 # property-shape application: the component validates each
-                # value of the shape's path (SHACL-AF §6.2)
+                # value of the shape's path (SHACL-AF §6.2); only a
+                # predicate path (an IRI) binds $PATH
                 prow = path_rows[0]
-                if prow.o_kind != KIND_IRI:
+                if prow.o_kind != KIND_IRI or not isinstance(
+                    parse_shacl_path(path_obj, prow.o_value), PPred
+                ):
                     raise ValueError(
                         f"property shape {subj} with a custom component "
                         "has a complex sh:path — outside the subset"
@@ -1888,34 +1902,23 @@ def pattern_predicates(block: _Block) -> tuple[set[str], bool]:
     anywhere — either can read ANY predicate, so a caller building a
     predicate slice (plans/shacl.py single-scan mode) must not restrict
     the scan."""
-    from .shacl import PAlt, PClosure, PInv, PNeg, PPred, PSeq
+    from .shacl import _path_leaf_preds
 
     preds: set[str] = set()
     has_neg = False
-
-    def walk(e) -> None:
-        nonlocal has_neg
-        if isinstance(e, str):
-            preds.add(e)
-        elif isinstance(e, _Term):  # variable predicate: open scan
-            has_neg = True
-        elif isinstance(e, PPred):
-            preds.add(e.iri)
-        elif isinstance(e, PInv):
-            walk(e.sub)
-        elif isinstance(e, (PSeq, PAlt)):
-            for p in e.parts:
-                walk(p)
-        elif isinstance(e, PClosure):
-            walk(e.sub)
-        else:  # PNeg
-            has_neg = True
-
-    for p in block.all_patterns():
-        walk(p.pred)
+    patterns = [*block.all_patterns()]
     for q in block.all_subselects():
-        for p in q.block.all_patterns():
-            walk(p.pred)
+        patterns.extend(q.block.all_patterns())
+    for p in patterns:
+        if isinstance(p.pred, str):
+            preds.add(p.pred)
+            continue
+        # a variable predicate or a negated property set: open scan
+        leaf = None if isinstance(p.pred, _Term) else _path_leaf_preds(p.pred)
+        if leaf is None:
+            has_neg = True
+        else:
+            preds |= leaf
     return preds, has_neg
 
 
@@ -2734,7 +2737,7 @@ def _closure_path_rel(
     triple patterns, so this reuses the core engine's bounded path
     evaluator (plans/shacl.py::_eval_path_expr — per-round
     localCheckpoint lineage truncation, SET semantics, bounded by
-    validate(closure_max_iters=) with a truncation warning), seeded from
+    _CLOSURE_MAX_ROUNDS rounds with a truncation warning), seeded from
     whichever endpoint the binding set already constrains; an unbound
     subject with a bound object evaluates the REVERSED path from the
     object side. Paths with BOTH endpoints unbound are outside the

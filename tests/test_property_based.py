@@ -5,10 +5,13 @@ connected components."""
 
 from __future__ import annotations
 
+import itertools
+
 from hypothesis import example, given, settings, strategies as st
 
 from cmem_plugin_pyshacl_spark.data_model import (
     EX,
+    RDF,
     RDF_TYPE,
     SH,
     XSD_INTEGER,
@@ -820,29 +823,79 @@ def _path_eval_case(draw):
     return sorted(edges), tree, sorted(focus)
 
 
+def _shacl_path_rows(tree):
+    """Render a path tree as SHACL path triples: IRI-named path nodes,
+    RDF lists for sequences and alternatives. Returns (head node, rows)."""
+    rows = []
+    names = (f"urn:path:{i}" for i in itertools.count())
+
+    def node(e):
+        if isinstance(e, PPred):
+            return e.iri
+        n = next(names)
+        if isinstance(e, PInv):
+            rows.append((n, SH + "inversePath", iri(node(e.sub))))
+        elif isinstance(e, PClosure):
+            rows.append((n, SH + e.kind + "Path", iri(node(e.sub))))
+        else:
+            # a sequence IS its list; an alternative points at one
+            cells = [n if isinstance(e, PSeq) else next(names)]
+            cells += [next(names) for _ in e.parts[1:]]
+            if isinstance(e, PAlt):
+                rows.append((n, SH + "alternativePath", iri(cells[0])))
+            for cell, nxt, part in zip(cells, cells[1:] + [RDF + "nil"], e.parts):
+                rows.append((cell, RDF + "first", iri(node(part))))
+                rows.append((cell, RDF + "rest", iri(nxt)))
+        return n
+
+    return node(tree), rows
+
+
 @given(_path_eval_case())
+@example(([("urn:n0", "a", "urn:n1")], PPred("a"), ["urn:n0"]))
+@example(([("urn:n0", "a", "urn:n1"), ("urn:n1", "b", "urn:n2")],
+          PSeq((PPred("a"), PPred("b"))), ["urn:n0"]))
 @settings(max_examples=6, deadline=None)
 def test_path_evaluation_matches_relation_reference(spark, case):
     """_eval_path_expr (sequence/alternative/inverse/closure over an
     IRI-only graph) agrees with a brute-force relation-algebra reference
     — the value-extraction core every path constraint rides on (S5).
     The engine contract: expressions are NORMALIZED before evaluation
-    (the shape compiler always calls _normalize_path; _path_step only
-    handles PInv-of-PPred), and normalization itself is pinned
-    semantics-preserving here because the reference relation is computed
-    from the RAW tree."""
-    from cmem_plugin_pyshacl_spark.plans.shacl import _eval_path_expr
+    (_path_step only handles PInv-of-PPred), and normalization itself is
+    pinned semantics-preserving here because the reference relation is
+    computed from the RAW tree. The same tree rendered as SHACL path
+    triples goes through the shape compiler too: compile_shapes (the one
+    path parser) then _path_values (a predicate path as its slice, every
+    other path through _eval_path_expr) must give the same relation."""
+    from cmem_plugin_pyshacl_spark.plans.shacl import (
+        _eval_path_expr,
+        _path_values,
+        compile_shapes,
+    )
 
     edges, tree, focus = case
     nodes = {n for (s, _p, o) in edges for n in (s, o)} | set(focus)
     data = triples_from_rows(spark, [(s, p, iri(o)) for (s, p, o) in edges])
-    focus_df = spark.createDataFrame([(f,) for f in focus], "focus string")
+    focus_df = spark.createDataFrame(
+        [(f, None) for f in focus], "focus string, part_id int"
+    )
+    rel = _rel_py(tree, set(edges), nodes)
+    expected = {(f, y) for (f, y) in rel if f in set(focus)}
     got = {
         (r.focus, r.v_value)
         for r in _eval_path_expr(data, focus_df, _normalize_path(tree)).collect()
     }
-    rel = _rel_py(tree, set(edges), nodes)
-    expected = {(f, y) for (f, y) in rel if f in set(focus)}
+    assert got == expected
+
+    head, path_rows = _shacl_path_rows(tree)
+    shapes = triples_from_rows(spark, [
+        (EX + "S", RDF_TYPE, iri(SH + "NodeShape")),
+        (EX + "S", SH + "property", iri(EX + "S-p")),
+        (EX + "S-p", SH + "path", iri(head)),
+    ] + path_rows)
+    (c,) = compile_shapes(shapes).shapes[0].properties
+    assert c.path_expr == _normalize_path(tree)
+    got = {(r.focus, r.v_value) for r in _path_values(data, focus_df, c).collect()}
     assert got == expected
 
 

@@ -423,6 +423,35 @@ def test_one_shape_mixes_path_kinds(spark):
     ])
 
 
+def test_sequence_path_does_not_hop_through_a_literal(spark):
+    """A literal has no outgoing edges (W3C SHACL §2.3.1.2): the sequence
+    (ex:p1 ex:p2) from urn:a stops at the literal "urn:x", even though
+    its text equals the subject IRI urn:x, so urn:a has no value and
+    fails sh:minCount 1. urn:b reaches "v" through the IRI urn:y."""
+    data = triples_from_rows(
+        spark,
+        [
+            ("urn:a", EX + "p1", lit_typed("urn:x", XSD_STRING)),
+            ("urn:x", EX + "p2", lit_typed("v", XSD_STRING)),
+            ("urn:b", EX + "p1", iri("urn:y")),
+            ("urn:y", EX + "p2", lit_typed("v", XSD_STRING)),
+        ],
+    )
+    rows = [
+        (EX + "S", RDF_TYPE, iri(SH + "NodeShape")),
+        (EX + "S", SH + "targetNode", iri("urn:a")),
+        (EX + "S", SH + "targetNode", iri("urn:b")),
+        (EX + "S", SH + "property", iri(EX + "S-p")),
+        (EX + "S-p", SH + "path", iri("urn:seq:0")),
+        (EX + "S-p", SH + "minCount", lit_typed("1", XSD_INTEGER)),
+    ] + _rdf_list("seq", [iri(EX + "p1"), iri(EX + "p2")])
+    got = {
+        (r.focusNode, r.resultPath, r.sourceConstraintComponent.split("#")[1])
+        for r in validate(spark, data, triples_from_rows(spark, rows)).collect()
+    }
+    assert got == {("urn:a", f"{EX}p1/{EX}p2", "MinCountConstraintComponent")}
+
+
 # ------------------------------------------------- nested path expressions
 def _nested_shape(spark, path_rows, extra):
     rows = [

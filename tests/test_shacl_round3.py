@@ -2,7 +2,7 @@
   * from_ntriples unescape order (backslash before \\n / \\")
   * full RDF-term keys through shape-ref noncon sets (no lexical conflation)
   * literals never satisfy sh:class; qualifiedMinCount >= 1 fails literals
-  * closure iteration cap warns on truncation and is configurable
+  * closure iteration bound warns on truncation
   * broadcast(focus) hints are size-gated
 """
 
@@ -191,25 +191,28 @@ def _chain_shapes(spark, target_value):
     )
 
 
-def test_closure_cap_warns_and_is_configurable(spark, caplog):
-    """A 30-hop chain truncates at the default 25-round bound: the engine
-    must WARN (round-2 ADVICE: silent truncation) and produce the complete
-    closure when the bound is raised via validate(closure_max_iters=...)."""
+def test_closure_bound_warns(spark, caplog):
+    """The closure fixpoint runs at most 25 rounds: a 30-hop chain
+    truncates there and the engine WARNS (no silent truncation), while a
+    20-hop chain completes inside the bound with no warning."""
+    logger = "cmem_plugin_pyshacl_spark.plans.shacl"
     depth = 30
-    data = _deep_chain(spark, depth)
-    shapes = _chain_shapes(spark, f"urn:n{depth}")
-
-    with caplog.at_level(logging.WARNING, logger="cmem_plugin_pyshacl_spark.plans.shacl"):
-        truncated = validate(spark, data, shapes, closure_max_iters=5).collect()
+    with caplog.at_level(logging.WARNING, logger=logger):
+        truncated = validate(
+            spark, _deep_chain(spark, depth), _chain_shapes(spark, f"urn:n{depth}")
+        ).collect()
     assert any("closure reached" in r.message for r in caplog.records)
     # truncated: n0 cannot see urn:n30 -> false hasValue violation
     assert "urn:n0" in {r.focusNode for r in truncated}
 
     caplog.clear()
-    with caplog.at_level(logging.WARNING, logger="cmem_plugin_pyshacl_spark.plans.shacl"):
-        full = validate(spark, data, shapes, closure_max_iters=depth + 2).collect()
+    depth = 20
+    with caplog.at_level(logging.WARNING, logger=logger):
+        full = validate(
+            spark, _deep_chain(spark, depth), _chain_shapes(spark, f"urn:n{depth}")
+        ).collect()
     assert not any("closure reached" in r.message for r in caplog.records)
-    # full closure: n0 reaches n30; only deeper nodes legitimately fail
+    # full closure: n0 reaches n20
     assert "urn:n0" not in {r.focusNode for r in full}
 
 

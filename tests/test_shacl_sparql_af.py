@@ -938,6 +938,26 @@ def test_custom_component_property_complex_path_raises(spark):
         )
 
 
+def test_custom_component_iri_named_complex_path_raises(spark):
+    """A path node named by an IRI (a skolemized blank node, say) that
+    carries sh:inversePath is a complex path too: it must raise instead of
+    binding the node's IRI as $PATH."""
+    select = "SELECT $this ?value WHERE { $this $PATH ?value }"
+    rows = [
+        (s, p, iri("urn:inv"))
+        if (s, p) == (EX + "NS/p", SH + "path")
+        else (s, p, o)
+        for s, p, o in _prop_component_rows(
+            SH + "propertyValidator", select, SH + "select"
+        )
+    ] + [("urn:inv", SH + "inversePath", iri(EX + "name"))]
+    with pytest.raises(ValueError, match="complex sh:path"):
+        validate(
+            spark, _named_people(spark), triples_from_rows(spark, rows),
+            advanced=True,
+        )
+
+
 def test_values_single_variable(spark):
     select = (
         "SELECT $this ?v WHERE { "
