@@ -115,6 +115,7 @@ from cmem_plugin_pyshacl_spark.plans.pipeline import (
     triples_stage,
 )
 from cmem_plugin_pyshacl_spark.plans.shacl import (
+    materialize_results,
     partition_reports,
     validate,
 )
@@ -1210,7 +1211,9 @@ def q_report_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # labels, value labels) — truncate the 9-branch derive lineage once
     data = derive_customer_graph(spark, sf_dir).localCheckpoint(eager=False)
     shapes = shapes_graph(spark, CUSTOMER_SHAPES_ALL)
-    res = validate(spark, data, shapes)
+    # labels and shui marks fan the results out again: evaluate them once,
+    # as execute_plugin does
+    res = materialize_results(validate(spark, data, shapes))
     report_node = "urn:report:1"
     g, res_n = results_to_report_graph(
         spark, res, report_node, conforms=False, graph="urn:graph:val"

@@ -218,9 +218,17 @@ def results_to_report_graph(
     conforms: bool,
     graph: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """S12 — materialize the validation report as triples: the report node
+    """S12 — the validation report as triples: the report node
     (sh:ValidationReport, sh:conforms) plus one sh:ValidationResult node per
     result row, content-addressed (deterministic result IRIs).
+
+    Each result row becomes its node's triples through one `inline` over an
+    array of (p, o_kind, o_value, o_datatype) structs, dropping the cells
+    that are NULL (resultPath, value, resultMessage). The report reads
+    `results` twice (these triples and the sh:result links) and the
+    enrichment steps read the returned frame again, so the caller hands in
+    materialized results (plans.shacl.materialize_results); the report's
+    partition count follows theirs.
 
     Returns (report_triples, results_with_node) — the latter carries the
     minted result_node column for R10/R11 enrichment.
@@ -236,12 +244,6 @@ def results_to_report_graph(
             F.col("sourceConstraintComponent"),
         ),
     )
-    # the report fans results_n into ~12 per-predicate projections (plus the
-    # R10/R11 enrichment joins downstream) — without lineage truncation each
-    # branch would RE-RUN the whole validation; checkpoint lazily so the
-    # first action computes the results once and every branch reuses the
-    # materialized blocks
-    results_n = results_n.localCheckpoint(eager=False)
     head = spark.createDataFrame(
         [
             (report_node, RDF_TYPE, KIND_IRI, SH + "ValidationReport", None, None, graph, 0),
@@ -259,45 +261,42 @@ def results_to_report_graph(
         schema=TRIPLES_SCHEMA,
     )
 
-    def _res_triples(p: str, kind_col, value_col, dt_col=None):
-        return results_n.filter(value_col.isNotNull()).select(
-            F.col("result_node").alias("s"),
+    def _cell(p: str, kind: str, value_col, datatype: str | None = None):
+        return F.struct(
             F.lit(p).alias("p"),
-            kind_col.alias("o_kind"),
+            F.lit(kind).alias("o_kind"),
             value_col.alias("o_value"),
-            (dt_col if dt_col is not None else F.lit(None)).cast("string").alias("o_datatype"),
-            F.lit(None).cast("string").alias("o_lang"),
-            F.lit(graph).alias("graph"),
-            F.col("part_id"),
+            F.lit(datatype).cast("string").alias("o_datatype"),
         )
 
-    parts = [
-        head,
-        _res_triples(RDF_TYPE, F.lit(KIND_IRI), F.lit(SH + "ValidationResult")),
-        results_n.select(
-            F.lit(report_node).alias("s"),
-            F.lit(SH + "result").alias("p"),
-            F.lit(KIND_IRI).alias("o_kind"),
-            F.col("result_node").alias("o_value"),
-            F.lit(None).cast("string").alias("o_datatype"),
-            F.lit(None).cast("string").alias("o_lang"),
-            F.lit(graph).alias("graph"),
-            F.col("part_id"),
-        ),
-        _res_triples(SH + "focusNode", F.lit(KIND_IRI), F.col("focusNode")),
-        _res_triples(SH + "resultPath", F.lit(KIND_IRI), F.col("resultPath")),
-        _res_triples(SH + "value", F.lit(KIND_LITERAL), F.col("value"), F.lit(XSD_STRING)),
-        _res_triples(SH + "sourceShape", F.lit(KIND_IRI), F.col("sourceShape")),
-        _res_triples(
-            SH + "sourceConstraintComponent", F.lit(KIND_IRI), F.col("sourceConstraintComponent")
-        ),
-        _res_triples(SH + "resultMessage", F.lit(KIND_LITERAL), F.col("resultMessage"), F.lit(XSD_STRING)),
-        _res_triples(SH + "resultSeverity", F.lit(KIND_IRI), F.col("resultSeverity")),
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out, results_n
+    cells = F.array(
+        _cell(RDF_TYPE, KIND_IRI, F.lit(SH + "ValidationResult")),
+        _cell(SH + "focusNode", KIND_IRI, F.col("focusNode")),
+        _cell(SH + "resultPath", KIND_IRI, F.col("resultPath")),
+        _cell(SH + "value", KIND_LITERAL, F.col("value"), XSD_STRING),
+        _cell(SH + "sourceShape", KIND_IRI, F.col("sourceShape")),
+        _cell(SH + "sourceConstraintComponent", KIND_IRI, F.col("sourceConstraintComponent")),
+        _cell(SH + "resultMessage", KIND_LITERAL, F.col("resultMessage"), XSD_STRING),
+        _cell(SH + "resultSeverity", KIND_IRI, F.col("resultSeverity")),
+    )
+    result_triples = results_n.select(
+        F.col("result_node").alias("s"),
+        F.inline(cells),
+        F.lit(None).cast("string").alias("o_lang"),
+        F.lit(graph).alias("graph"),
+        "part_id",
+    ).filter(F.col("o_value").isNotNull())
+    links = results_n.select(
+        F.lit(report_node).alias("s"),
+        F.lit(SH + "result").alias("p"),
+        F.lit(KIND_IRI).alias("o_kind"),
+        F.col("result_node").alias("o_value"),
+        F.lit(None).cast("string").alias("o_datatype"),
+        F.lit(None).cast("string").alias("o_lang"),
+        F.lit(graph).alias("graph"),
+        F.col("part_id"),
+    )
+    return head.unionByName(links).unionByName(result_triples), results_n
 
 
 def node_cbd(triples: DataFrame, max_lines: int = 50) -> DataFrame:

@@ -16,11 +16,16 @@ parameter-for-parameter translation:
     result.conforms        # pySHACL's conforms bool
     result.entities        # 11-column entities DataFrame (or None)
     result.report_graph    # validation-report triples (or None)
-    result.metrics         # {"t_load": ..., "t_validate": ..., "t_total": ...}
+    result.metrics         # {"t_load", "t_validate", "t_total", "results"}
 
-Everything stays a lazy DataFrame plan except the two scalars the
-reference also materializes: the graph-catalog check (tiny rdf:type
-collect over graph nodes) and `conforms` (limit(1) probe of the results).
+The reference validates once and reads conforms, the results graph and
+the report off pySHACL's one return tuple (:631-667). Here too the
+validation results are evaluated once per request, into one frame sized
+to its rows (plans.shacl.materialize_results), and `conforms` (its row
+count is 0), the entities, the report graph and the sink all read it.
+The other actions are the graph-catalog check (a tiny rdf:type collect
+over graph nodes), the owl:imports walk in load_graph, the probes and
+slice cache `validate` runs while planning, and the sink write.
 """
 
 from __future__ import annotations
@@ -48,8 +53,7 @@ from ..operators.graph_ops import (
     skolemize as skolemize_op,
 )
 from ..sources.graph_catalog import is_valid_graph_uri, load_graph
-from .shacl import conforms as conforms_fn
-from .shacl import validate
+from .shacl import materialize_results, validate
 
 _VOID_DATASET = "http://rdfs.org/ns/void#Dataset"
 _THESAURUS = "https://vocab.eccenca.com/dsm/ThesaurusProject"
@@ -112,7 +116,8 @@ def execute_plugin(
 ) -> ExecutionResult:
     """Run the reference plugin's validate workflow over a named-graph
     triples store. Raises ValueError for exactly the parameter problems
-    the reference raises (:544-590); returns lazy DataFrames."""
+    the reference raises (:544-590); the returned DataFrames read the
+    materialized results."""
     t_start = time.monotonic()
 
     # ---- check_parameters (reference :544-590) ----
@@ -188,18 +193,21 @@ def execute_plugin(
 
     # ---- validate (reference :630-643) ----
     t0 = time.monotonic()
-    results = validate(
-        spark,
-        data,
-        shapes,
-        ont_triples=ontology,
-        inference=inference,
-        meta_shacl=meta_shacl,
-        advanced=advanced,
-        js=js,
-        max_validation_depth=max_validation_depth,
+    results = materialize_results(
+        validate(
+            spark,
+            data,
+            shapes,
+            ont_triples=ontology,
+            inference=inference,
+            meta_shacl=meta_shacl,
+            advanced=advanced,
+            js=js,
+            max_validation_depth=max_validation_depth,
+        )
     )
-    did_conform = conforms_fn(results)
+    n_results = results.count()
+    did_conform = n_results == 0
     t_validate = time.monotonic() - t0
 
     if utctime is None:
@@ -269,5 +277,6 @@ def execute_plugin(
             "t_load": round(t_load, 3),
             "t_validate": round(t_validate, 3),
             "t_total": round(time.monotonic() - t_start, 3),
+            "results": n_results,
         },
     )

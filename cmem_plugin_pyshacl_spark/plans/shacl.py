@@ -742,13 +742,42 @@ def _vk() -> tuple[Column, Column]:
 _PATH_TERM = ["v_kind", "v_value", "v_datatype", "v_lang"]
 
 
+def _next_frontier(values: DataFrame) -> DataFrame:
+    """The value nodes a path can step on from: literals cannot be
+    traversed further (no outgoing edges)."""
+    return (
+        values.filter(F.col("v_kind") != KIND_LITERAL)
+        .select(
+            "focus",
+            F.col("v_value").alias("node"),
+            F.col("v_kind").alias("node_kind"),
+        )
+        .distinct()
+    )
+
+
+def _inverse_hop(edges: DataFrame, frontier: DataFrame) -> DataFrame:
+    """The `edges` whose object is a frontier node of the same kind
+    class (literal or not), joined with that node's frontier row."""
+    return edges.join(
+        frontier.withColumnRenamed("node", "o_value"), on="o_value"
+    ).filter(
+        (F.col("o_kind") == KIND_LITERAL) == (F.col("node_kind") == KIND_LITERAL)
+    )
+
+
 def _path_step(data: DataFrame, frontier: DataFrame, expr: PathExpr) -> DataFrame:
     """One evaluation of a (normalized) path expression from a frontier.
 
-    frontier: DataFrame[focus, node] — `node` is where traversal stands,
-    `focus` the originating focus node. Returns DataFrame[focus, v_kind,
-    v_value, v_datatype, v_lang, v_part_id] of reachable value nodes (NOT
-    deduplicated — callers dedup by (focus, term) for set semantics).
+    frontier: DataFrame[focus, node, node_kind] — `node` is where
+    traversal stands, `node_kind` its term kind, `focus` the originating
+    focus node. Returns DataFrame[focus, v_kind, v_value, v_datatype,
+    v_lang, v_part_id] of reachable value nodes (NOT deduplicated —
+    callers dedup by (focus, term) for set semantics). An inverse hop
+    (_inverse_hop) lands only on objects of the frontier node's kind
+    class: a literal object is no inverse edge of an IRI or blank node
+    with the same text, and a literal node (a SPARQL object seed) walks
+    back only through literal objects.
 
     Scale notes: each leaf is a `p == iri` slice of the (persisted,
     predicate-sliced) relation joined with the frontier; no broadcast hint
@@ -775,8 +804,7 @@ def _path_step(data: DataFrame, frontier: DataFrame, expr: PathExpr) -> DataFram
     if isinstance(expr, PInv):
         # normalized: sub is always PPred
         return (
-            data.filter(F.col("p") == expr.sub.iri)
-            .join(frontier.withColumnRenamed("node", "o_value"), on="o_value")
+            _inverse_hop(data.filter(F.col("p") == expr.sub.iri), frontier)
             .select(
                 "focus",
                 F.lit(KIND_IRI).alias("v_kind"),
@@ -789,9 +817,7 @@ def _path_step(data: DataFrame, frontier: DataFrame, expr: PathExpr) -> DataFram
     if isinstance(expr, PNeg):
         # one hop over the COMPLEMENT of a predicate set — inherently a
         # broader slice than `p == iri` (the whole relation minus a few
-        # predicates), but still bounded by the frontier join; the
-        # inverse arm drops literal landing nodes (a literal cannot be
-        # a pattern subject)
+        # predicates), but still bounded by the frontier join
         parts = []
         if expr.fwd is not None:
             sl = (
@@ -816,9 +842,7 @@ def _path_step(data: DataFrame, frontier: DataFrame, expr: PathExpr) -> DataFram
                 else data
             )
             parts.append(
-                sl.join(
-                    frontier.withColumnRenamed("node", "o_value"), on="o_value"
-                ).select(
+                _inverse_hop(sl, frontier).select(
                     "focus",
                     F.lit(KIND_IRI).alias("v_kind"),
                     F.col("s").alias("v_value"),
@@ -834,13 +858,7 @@ def _path_step(data: DataFrame, frontier: DataFrame, expr: PathExpr) -> DataFram
     if isinstance(expr, PSeq):
         cur = frontier
         for part in expr.parts[:-1]:
-            vals = _path_step(data, cur, part)
-            # literals cannot be traversed further (no outgoing edges)
-            cur = (
-                vals.filter(F.col("v_kind") != KIND_LITERAL)
-                .select("focus", F.col("v_value").alias("node"))
-                .distinct()
-            )
+            cur = _next_frontier(_path_step(data, cur, part))
         return _path_step(data, cur, expr.parts[-1])
     if isinstance(expr, PAlt):
         out = None
@@ -863,12 +881,7 @@ def _path_step(data: DataFrame, frontier: DataFrame, expr: PathExpr) -> DataFram
     if expr.kind == "zeroOrOne":
         return self_rows.unionByName(level1)
     acc = level1.localCheckpoint(eager=True)
-    frontier_i = (
-        acc.filter(F.col("v_kind") != KIND_LITERAL)
-        .select("focus", F.col("v_value").alias("node"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    frontier_i = _next_frontier(acc).localCheckpoint(eager=True)
     exhausted = True
     for _ in range(_CLOSURE_MAX_ROUNDS):
         if frontier_i.isEmpty():
@@ -888,12 +901,7 @@ def _path_step(data: DataFrame, frontier: DataFrame, expr: PathExpr) -> DataFram
             exhausted = False
             break
         acc = acc.unionByName(new_rows).localCheckpoint(eager=True)
-        frontier_i = (
-            new_rows.filter(F.col("v_kind") != KIND_LITERAL)
-            .select("focus", F.col("v_value").alias("node"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
+        frontier_i = _next_frontier(new_rows).localCheckpoint(eager=True)
     if exhausted and not frontier_i.isEmpty():
         _log.warning(
             "SHACL %s path closure reached the %d-round bound with a "
@@ -904,12 +912,21 @@ def _path_step(data: DataFrame, frontier: DataFrame, expr: PathExpr) -> DataFram
 
 
 def _eval_path_expr(
-    data: DataFrame, focus: DataFrame, expr: PathExpr
+    data: DataFrame,
+    focus: DataFrame,
+    expr: PathExpr,
+    focus_kind: Column | None = None,
 ) -> DataFrame:
     """Evaluate an arbitrarily nested path from the focus set; returns the
     standard DataFrame[focus, v_kind, v_value, v_datatype, v_lang,
-    v_part_id] with SET semantics."""
-    seeds = focus.select("focus", F.col("focus").alias("node"))
+    v_part_id] with SET semantics. `focus_kind` is each focus node's term
+    kind, over `focus`; by default every focus node is an IRI or blank
+    node, as SHACL focus nodes are."""
+    seeds = focus.select(
+        "focus",
+        F.col("focus").alias("node"),
+        (F.lit(KIND_IRI) if focus_kind is None else focus_kind).alias("node_kind"),
+    )
     return (
         _path_step(data, seeds, expr)
         .groupBy("focus", *_PATH_TERM)
@@ -1962,10 +1979,13 @@ _UNION_CHUNK = 48
 
 def _chunked_union(dfs: list[DataFrame]) -> DataFrame:
     """Union many same-schema result frames; above _UNION_CHUNK inputs the
-    union is built in lineage-truncated (lazy localCheckpoint) chunks so
-    the analyzed plan stays bounded on catalogs with hundreds of
-    constraints (round-1 VERDICT finding 10; reused for the sh:sparql
-    catalog path in round 4)."""
+    union is built in lineage-truncated localCheckpoint chunks so the
+    analyzed plan stays bounded on catalogs with hundreds of constraints
+    (round-1 VERDICT finding 10; reused for the sh:sparql catalog path in
+    round 4). `eager=False` does not defer the work under AQE: building
+    each chunk's checkpoint RDD runs all of its shuffle and broadcast
+    stages at call time, and only the final result stage waits for the
+    first action."""
     if len(dfs) <= _UNION_CHUNK:
         out = dfs[0]
         for df in dfs[1:]:
@@ -2330,6 +2350,19 @@ def conforms(results: DataFrame) -> bool:
     """Global sh:conforms = zero results (reference reads it off the pyshacl
     return tuple; S12)."""
     return results.limit(1).count() == 0
+
+
+def materialize_results(results: DataFrame) -> DataFrame:
+    """Evaluate validation results once, for callers that read them more
+    than once (a count, the report graph and its enrichment, a sink).
+
+    `rebalance` is AQE's size-aware repartition: a few hundred rows land
+    in one partition and large output still splits, so readers inherit a
+    partition count derived from the rows, not the constraint union's sum
+    of input partitions. The eager localCheckpoint runs every constraint
+    plan once and ties the blocks' lifetime to the returned frame and the
+    frames derived from it, so nothing needs an unpersist."""
+    return results.hint("rebalance").localCheckpoint()
 
 
 def partition_reports(results: DataFrame, all_part_ids: DataFrame | None = None) -> DataFrame:

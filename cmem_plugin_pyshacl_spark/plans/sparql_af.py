@@ -2749,8 +2749,8 @@ def _closure_path_rel(
     is shared. Two documented narrowings: closure traversal starts only
     from IRI/bnode-kind bindings (a literal has no outgoing edges, and
     its zero-length self-match is dropped), and object-seeded traversal
-    matches a literal seed by lexical value only (the reversed first hop
-    cannot see the kind/datatype columns)."""
+    matches a literal seed by lexical value and term kind only (the
+    reversed first hop does not compare datatype or language)."""
     from .shacl import PInv, _eval_path_expr, _normalize_path
 
     expr = pat.pred
@@ -2795,7 +2795,10 @@ def _closure_path_rel(
     elif obj.kind == "var" and obj.value in bound_vars:
         seeds = (
             bound.filter(F.col(f"{obj.value}__value").isNotNull())
-            .select(F.col(f"{obj.value}__value").alias("focus"))
+            .select(
+                F.col(f"{obj.value}__value").alias("focus"),
+                F.col(f"{obj.value}__kind").alias("focus_kind"),
+            )
             .distinct()
         )
         # the caller's bound-variable condition compares values only
@@ -2806,7 +2809,10 @@ def _closure_path_rel(
             "least one bound endpoint ($this, a constant, or a variable "
             "bound by an earlier pattern)"
         )
-    pairs = _eval_path_expr(data, seeds, _normalize_path(PInv(expr)))
+    seed_kind = F.col("focus_kind") if obj.kind == "var" else okind
+    pairs = _eval_path_expr(
+        data, seeds, _normalize_path(PInv(expr)), focus_kind=seed_kind
+    )
     return pairs.select(
         F.col("v_value").alias(f"_s{sfx}"),
         okind.alias(f"_ok{sfx}"),

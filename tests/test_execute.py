@@ -83,7 +83,9 @@ def test_execute_plugin_entities_and_report(spark, tmp_path):
     assert "http://www.w3.org/ns/prov#generatedAtTime" in preds
     assert "https://vocab.eccenca.com/shui/conforms" in preds
     assert {r.graph for r in g} == {"urn:graph:report"}
+    assert set(res.metrics) == {"t_load", "t_validate", "t_total", "results"}
     assert res.metrics["t_validate"] > 0
+    assert res.metrics["results"] == 2
     # the posted parquet sink exists and round-trips the row count
     back = spark.read.parquet(str(tmp_path / "report"))
     assert back.count() == len(g)
@@ -193,3 +195,62 @@ def test_make_entities_gates_labels_without_a_job(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
     assert entities.count() == results.count() == 1
+
+
+def test_execute_plugin_evaluates_validation_once(spark, monkeypatch, tmp_path):
+    """The validation results are evaluated once per request: the result
+    count behind `conforms` reads the materialized frame (at most its two
+    AQE jobs), building the report graph submits no job and the sink is
+    one write job. Jobs are attributed with job groups: each spied call
+    runs in its own group, everything else in the request's group, and
+    `graph_types` skips the catalog collect, so that group holds only the
+    count."""
+    from cmem_plugin_pyshacl_spark.plans import execute
+
+    sc = spark.sparkContext
+    request = "execute_request"
+
+    def spy(name):
+        real = getattr(execute, name)
+
+        def call(*args, **kwargs):
+            sc.setJobGroup(name, name)
+            try:
+                return real(*args, **kwargs)
+            finally:
+                sc.setJobGroup(request, request)
+
+        monkeypatch.setattr(execute, name, call)
+
+    for name in (
+        "load_graph",
+        "validate",
+        "materialize_results",
+        "results_to_report_graph",
+        "post_graph",
+    ):
+        spy(name)
+    sc.setJobGroup(request, request)
+    try:
+        res = execute_plugin(
+            spark,
+            _store(spark),
+            data_graph_uri=DATA_G,
+            shacl_graph_uri=SHAPES_G,
+            generate_graph=True,
+            validation_graph_uri="urn:graph:report",
+            output_entities=False,
+            add_labels=False,
+            output_path=str(tmp_path / "report"),
+            graph_types={DATA_G: [VOID_DATASET], SHAPES_G: [SHAPE_CATALOG]},
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+    def jobs(group):
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert res.conforms is False
+    assert jobs("results_to_report_graph") == 0
+    assert 1 <= jobs(request) <= 2
+    assert jobs("post_graph") == 1

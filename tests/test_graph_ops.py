@@ -340,3 +340,51 @@ def test_post_graph_quads_export(spark, tmp_path):
     back = from_nquads(spark.read.text(nq_dir), line_col="value")
     assert {r.graph for r in back.collect()} == {"urn:g:x"}
     assert back.count() == 10
+
+
+def test_report_graph_triples_exact(spark):
+    """The report graph's exact triple set, including a result without a
+    resultPath and one without a value or message: a NULL cell yields no
+    triple, every other cell exactly one, and result IRIs are the sha256
+    of (focus|path|value|shape|component) under the report node."""
+    import hashlib
+
+    from cmem_plugin_pyshacl_spark.data_model import KIND_IRI, KIND_LITERAL, XSD_BOOLEAN, XSD_STRING
+    from cmem_plugin_pyshacl_spark.operators.graph_ops import results_to_report_graph
+    from cmem_plugin_pyshacl_spark.plans.shacl import RESULT_SCHEMA
+
+    viol = SH + "Violation"
+    rows = [
+        ("urn:f1", EX + "p", "v1", EX + "S", EX + "comp", "m1", viol, 0, KIND_LITERAL, XSD_STRING),
+        ("urn:f2", None, "urn:f2", EX + "S", EX + "comp", "m2", viol, 1, KIND_IRI, None),
+        ("urn:f3", EX + "p", None, EX + "S", EX + "comp", None, viol, 1, None, None),
+    ]
+    results = spark.createDataFrame(rows, schema=RESULT_SCHEMA)
+    g, res_n = results_to_report_graph(spark, results, "urn:rep", False, graph="urn:g")
+
+    def node(focus, path, value, shape, comp):
+        key = "|".join([focus, path or "", value or "", shape, comp])
+        return "urn:rep/.well-known/genid/" + hashlib.sha256(key.encode()).hexdigest()
+
+    want = {
+        ("urn:rep", RDF_TYPE, KIND_IRI, SH + "ValidationReport", None, None, "urn:g", 0),
+        ("urn:rep", SH + "conforms", KIND_LITERAL, "false", XSD_BOOLEAN, None, "urn:g", 0),
+    }
+    for focus, path, value, shape, comp, msg, sev, part, _kind, _dt in rows:
+        n = node(focus, path, value, shape, comp)
+        cells = [
+            (RDF_TYPE, KIND_IRI, SH + "ValidationResult", None),
+            (SH + "focusNode", KIND_IRI, focus, None),
+            (SH + "resultPath", KIND_IRI, path, None),
+            (SH + "value", KIND_LITERAL, value, XSD_STRING),
+            (SH + "sourceShape", KIND_IRI, shape, None),
+            (SH + "sourceConstraintComponent", KIND_IRI, comp, None),
+            (SH + "resultMessage", KIND_LITERAL, msg, XSD_STRING),
+            (SH + "resultSeverity", KIND_IRI, sev, None),
+        ]
+        want.add(("urn:rep", SH + "result", KIND_IRI, n, None, None, "urn:g", part))
+        want |= {(n, p, k, v, dt, None, "urn:g", part) for p, k, v, dt in cells if v is not None}
+    got = [tuple(r) for r in g.collect()]
+    assert len(got) == len(set(got)) == 2 + 3 + 8 + 7 + 6
+    assert set(got) == want
+    assert sorted(r.result_node for r in res_n.collect()) == sorted(node(*r[:5]) for r in rows)

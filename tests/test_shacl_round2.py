@@ -452,6 +452,60 @@ def test_sequence_path_does_not_hop_through_a_literal(spark):
     assert got == {("urn:a", f"{EX}p1/{EX}p2", "MinCountConstraintComponent")}
 
 
+def test_inverse_hop_does_not_walk_back_through_a_literal(spark):
+    """(urn:b, ex:p, "urn:a") has a literal object whose text equals the
+    IRI urn:a: it is no inverse ex:p edge of urn:a, so sh:maxCount 0 on
+    [sh:inversePath ex:p] holds. The negated set !(^ex:q) takes the same
+    inverse arm and reaches nothing from urn:a either."""
+    from pyspark.sql import functions as F
+
+    from cmem_plugin_pyshacl_spark.data_model import KIND_IRI
+    from cmem_plugin_pyshacl_spark.plans.shacl import PNeg, _path_step
+
+    data = triples_from_rows(
+        spark, [("urn:b", EX + "p", lit_typed("urn:a", XSD_STRING))]
+    )
+    rows = [
+        (EX + "S", RDF_TYPE, iri(SH + "NodeShape")),
+        (EX + "S", SH + "targetNode", iri("urn:a")),
+        (EX + "S", SH + "property", iri(EX + "S-p")),
+        (EX + "S-p", SH + "path", iri("urn:inv")),
+        ("urn:inv", SH + "inversePath", iri(EX + "p")),
+        (EX + "S-p", SH + "maxCount", lit_typed("0", XSD_INTEGER)),
+    ]
+    assert validate(spark, data, triples_from_rows(spark, rows)).collect() == []
+    frontier = spark.range(1).select(
+        F.lit("urn:a").alias("focus"),
+        F.lit("urn:a").alias("node"),
+        F.lit(KIND_IRI).alias("node_kind"),
+    )
+    assert _path_step(data, frontier, PNeg(fwd=None, inv=(EX + "q",))).collect() == []
+
+
+def test_object_seeded_closure_walks_back_through_literals_only_from_literals(spark):
+    """A closure path with an unbound subject evaluates the reversed path
+    from its object: a literal object steps back through literal objects
+    only, an IRI object through IRI objects only, though both read
+    'urn:t'."""
+    from cmem_plugin_pyshacl_spark.plans.query import sparql_select
+
+    data = triples_from_rows(
+        spark,
+        [
+            ("urn:a", EX + "p", lit_typed("urn:t", XSD_STRING)),
+            ("urn:b", EX + "p", iri("urn:a")),
+            ("urn:x", EX + "p", iri("urn:t")),
+        ],
+    )
+
+    def subjects(obj):
+        q = f"SELECT ?s WHERE {{ ?s <{EX}p>+ {obj} }}"
+        return {r["s"] for r in sparql_select(spark, data, q).collect()}
+
+    assert subjects('"urn:t"') == {"urn:a", "urn:b"}
+    assert subjects("<urn:t>") == {"urn:x"}
+
+
 # ------------------------------------------------- nested path expressions
 def _nested_shape(spark, path_rows, extra):
     rows = [
